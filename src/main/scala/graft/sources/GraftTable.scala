@@ -66,9 +66,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Row-level DML (round 10) is COPY-ON-WRITE, the reference's actual
   * registry write path (`SaveData` app.py:5253, `DeleteData`
   * app.py:5216, `uploadExcel` app.py:6063-6300) made transactional:
-  * [[merge]] / [[deleteWhere]] rewrite ONLY the files that contain
-  * touched keys/rows (file-level stats pruning first, then an exact
-  * membership probe), swap them in ONE atomic serializable commit,
+  * [[mergeInto]] (and its upsert front [[merge]]) and the shared
+  * [[rewriteWhere]] core of [[update]] / [[deleteWhere]] rewrite ONLY
+  * the files that contain touched keys/rows (file-level stats pruning
+  * first, then an exact membership probe), swap them in ONE atomic
+  * serializable commit,
   * and write row-level change images (`_change_type` pre/post rows)
   * that [[changeFeed]] serves to incremental consumers — so a
   * 100 TB table pays for a small merge batch only the files that
@@ -1082,13 +1084,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * unsupported column types) are conservatively kept, so the pruned
     * list is always a superset of the matching rows' files.
     */
-  def prunedFiles(pred: Column): Seq[String] = {
-    val e = physPred(org.apache.spark.sql.graft.shim.catalystExpression(pred),
-      colmapAt(latestVersion))
-    resolveMeta(latestVersion).toSeq.sortBy(_._1).collect {
-      case (p, m) if FileStats.mayMatch(m.stats, e) => absOf(p)
-    }
-  }
+  def prunedFiles(pred: Column): Seq[String] =
+    statsCandidates(resolveMeta(latestVersion),
+      org.apache.spark.sql.graft.shim.catalystExpression(pred),
+      colmapAt(latestVersion)).map(absOf)
 
   /** Filtered read that plans ONLY the stats-surviving files (then
     * re-applies `pred` exactly — skipping is an optimization, never
@@ -1098,10 +1097,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def readWhere(pred: Column): DataFrame = {
     val cm = colmapAt(latestVersion)
-    val e = physPred(
+    val live = resolveMeta(latestVersion)
+    val survivors = statsCandidates(live,
       org.apache.spark.sql.graft.shim.catalystExpression(pred), cm)
-    val survivors = resolveMeta(latestVersion).toSeq.sortBy(_._1)
-      .filter { case (_, m) => FileStats.mayMatch(m.stats, e) }
+      .map(p => p -> live(p))
     val sc = schemaAt(latestVersion)
     if (survivors.isEmpty && sc.isEmpty) read().filter(pred) // legacy log
     else readMeta(survivors, sc, cm = cm).filter(pred)
@@ -2212,8 +2211,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       if (!cdfImages) Seq.empty
       else replaceCdf(
         if (removes.isEmpty) None
-        else Some(dmlRead(removes.sorted.map(p => p -> liveM(p)),
-          schemaAt(base), pcs, cm = colmapAt(base))), df)
+        else Some(new DmlScope(base).read(removes.sorted)), df)
     commit(action, adds, removes, basedOn = Some(base),
       stats = statsOf(adds),
       schema = Some(validated),
@@ -2221,77 +2219,48 @@ class GraftTable private (val s: SparkSession, val root: String) {
   }
 
   /** The ROW-LEVEL replaceWhere regime (Delta 2.0's arbitrary
-    * predicates): stats-pruned candidate discovery, an exact probe
-    * for the files that actually hold matching rows, a copy-on-write
-    * rewrite keeping each touched file's NON-matching rows (restaged
-    * under their full value-dir chains on partitioned tables), and
-    * the incoming batch — all in ONE serializable 'replace' commit.
-    * Untouched files are never read (deleteWhere's pruning,
-    * replace's atomicity). Works on flat tables too — an atomic
-    * "restate everything in this key range" needs no partition
-    * layout.
+    * predicates): [[rewriteWhere]] keeps each touched file's
+    * NON-matching rows (restaged under their full value-dir chains on
+    * partitioned tables), and the incoming batch lands beside them —
+    * all in ONE serializable 'replace' commit. Untouched files are
+    * never read (deleteWhere's pruning, replace's atomicity). Works on
+    * flat tables too — an atomic "restate everything in this key
+    * range" needs no partition layout.
     */
   private def replaceRows(action: String, base: Long,
                           predicate: Column, df: DataFrame,
                           cdfImages: Boolean = false,
                           mergeSchema: Boolean = false): Long = {
-    val sc = schemaAt(base)
-    val live = resolveMeta(base)
-    val pc = partColsFor(base)
-    val cm = colmapAt(base)
-    if (pc.nonEmpty) requirePartConsistent(partMetaOf(df, pc), base)
+    val d = new DmlScope(base)
+    if (d.pc.nonEmpty) requirePartConsistent(partMetaOf(df, d.pc), base)
     enforceConstraints(df, "replaceWhere")
     requireSatisfies(predicate, df)
     val payloadSchema =
-      if (pc.isEmpty) org.apache.spark.sql.graft.shim.nullable(df.schema)
-      else partitionedSchema(df, pc)
+      if (d.pc.isEmpty) org.apache.spark.sql.graft.shim.nullable(df.schema)
+      else partitionedSchema(df, d.pc)
     val validated = appendSchema(payloadSchema, mergeSchema, base)
     // evolution guard (ADVICE r16): same tombstone/collision refusal
     // as the chain regime — see replaceChains
     requireEvolvableFresh(validated.fieldNames.filterNot(n =>
-      schemaAt(base).exists(_.fieldNames.exists(_.equalsIgnoreCase(n))))
+      d.sc.exists(_.fieldNames.exists(_.equalsIgnoreCase(n))))
       .toSeq, base)
-    val e = physPred(
-      org.apache.spark.sql.graft.shim.catalystExpression(predicate), cm)
-    val candidates = live.toSeq.sortBy(_._1).collect {
-      case (p, m) if FileStats.mayMatch(m.stats, e) => p
-    }
-    // exact probe: only files that HOLD matching rows rewrite
-    val touched =
-      if (candidates.isEmpty) Seq.empty[String]
-      else {
-        val byName = byBaseName(live)
-        dmlRead(candidates.map(p => p -> live(p)), sc, pc,
-          keepPos = true, cm = cm).filter(predicate)
-          .select("__fn").distinct().collect().map(_.getString(0))
-          .toSeq.map(byName).sorted
-      }
     // survivors = rows NOT matching — which includes rows where the
     // predicate evaluates NULL (Delta keeps them via
     // Not(EqualNullSafe(cond, true))); a bare !predicate would
     // silently DROP null-evaluating rows from the CoW rewrite
-    val survivorAdds =
-      if (touched.isEmpty) Seq.empty[(String, Long)]
-      else dmlStage(dmlRead(touched.map(p => p -> live(p)), sc, pc,
-        cm = cm).filter(notMatching(predicate)), pc)
-    // zero-row rewrite outputs drop (deleteWhere's rule): a fully-
-    // replaced file must shrink the live set, not leave empty shells
-    val st0 = statsOf(survivorAdds)
-    val (kept, emptied) = survivorAdds.partition(a =>
-      st0.get(a._1).flatMap(FileStats.numRows).forall(_ > 0))
-    emptied.foreach(a => fs.delete(new Path(rootPath, a._1), false))
-    val adds = kept ++ dmlStage(df, pc)
+    val w = rewriteWhere(d, predicate, d.candidates(predicate))(
+      _.filter(notMatching(predicate)))
+    val incoming = dmlStage(df, d.pc)
     // CDF (opt-in): delete images are exactly the matched rows of the
     // touched files (one more pass over files already rewritten)
     val cdf =
       if (!cdfImages) Seq.empty
-      else replaceCdf(
-        if (touched.isEmpty) None
-        else Some(dmlRead(touched.map(p => p -> live(p)), sc, pc,
-          cm = cm).filter(predicate)), df)
-    commit(action, adds, touched, basedOn = Some(base),
-      stats = statsOf(adds), schema = Some(validated),
-      partMeta = if (pc.isEmpty) None else Some(partMetaOf(df, pc)),
+      else replaceCdf(w.map(_.rows.filter(predicate)), df)
+    commit(action, w.toSeq.flatMap(_.adds) ++ incoming,
+      w.toSeq.flatMap(_.touched), basedOn = Some(base),
+      stats = w.fold(Map.empty[String, String])(_.stats) ++ statsOf(incoming),
+      schema = Some(validated),
+      partMeta = if (d.pc.isEmpty) None else Some(partMetaOf(df, d.pc)),
       cdf = cdf)
   }
 
@@ -2378,8 +2347,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         if (!cdfImages) Seq.empty
         else replaceCdf(
           if (removes.isEmpty) None
-          else Some(dmlRead(removes.sorted.map(p => p -> liveM(p)),
-            schemaAt(base), pcs, cm = colmapAt(base))), df)
+          else Some(new DmlScope(base).read(removes.sorted)), df)
       commit(action, adds, removes, basedOn = Some(base),
         stats = statsOf(adds),
         schema = Some(partitionedSchema(df, pcs)),
@@ -2612,39 +2580,100 @@ class GraftTable private (val s: SparkSession, val root: String) {
     m
   }
 
-  /** Copy-on-write DELETE (Delta's `DELETE FROM t WHERE pred`), the
-    * reference's delete endpoints (`DeleteData` app.py:5216) made
-    * transactional. Three-stage file discipline so a 100 TB table
-    * pays only for what the predicate touches:
-    *   1. STATS PRUNE: only files whose logged min/max may satisfy
-    *      `pred` are considered (no footer, no data read);
-    *   2. EXACT PROBE: one column-pruned scan of the candidates finds
+  /** STATS PRUNE: the files of `live` whose logged min/max may satisfy
+    * `pred` (logical names, mapped through `cm` onto the physical
+    * stats), in path order. No footer or data page is read.
+    */
+  private def statsCandidates(
+      live: Map[String, FileMeta],
+      pred: org.apache.spark.sql.catalyst.expressions.Expression,
+      cm: GraftTable.ColMap): Seq[String] = {
+    val e = physPred(pred, cm)
+    live.toSeq.sortBy(_._1).collect {
+      case (p, m) if FileStats.mayMatch(m.stats, e) => p
+    }
+  }
+
+  /** One DML verb's view of version `base`: the recorded schema, live
+    * files, partition columns and column mapping that every pass of
+    * the verb reads against, plus its prune and probe.
+    */
+  private final class DmlScope(val base: Long) {
+    val sc: Option[StructType] = schemaAt(base)
+    val live: Map[String, FileMeta] = resolveMeta(base)
+    val pc: Seq[String] = partColsFor(base)
+    val cm: GraftTable.ColMap = colmapAt(base)
+    lazy val byName: Map[String, String] = byBaseName(live)
+
+    /** DML read of the named live files: recorded schema applied, and
+      * — on a hive-partitioned table — EVERY partition column RESTORED
+      * from each row's file path (their values live in the paths, not
+      * the file contents), so predicates and SET expressions may
+      * reference any key. dv-aware: a CoW/MoR pass over files an
+      * earlier MoR commit marked must not resurrect (or re-mark)
+      * already-dead rows.
+      */
+    def read(paths: Seq[String], keepPos: Boolean = false): DataFrame =
+      pc.foldLeft(readMeta(paths.map(p => p -> live(p)), sc, keepPos, cm)) {
+        (acc, c) => acc.withColumn(c,
+          partRestore(c, partTypeOf(c, paths, latestVersion)))
+      }
+
+    def candidates(pred: org.apache.spark.sql.catalyst.expressions.Expression)
+        : Seq[String] = statsCandidates(live, pred, cm)
+
+    def candidates(pred: Column): Seq[String] =
+      candidates(org.apache.spark.sql.graft.shim.catalystExpression(pred))
+
+    /** EXACT PROBE: the live files holding at least one of `rows` (a
+      * `keepPos` read, filtered or joined), path-sorted. `__fn` comes
+      * from the dv-aware read — input_file_name can't cross the dv
+      * anti-join's second source — and the collect is bounded by the
+      * file count.
+      */
+    def filesOf(rows: DataFrame): Seq[String] =
+      rows.select("__fn").distinct().collect().map(_.getString(0))
+        .toSeq.map(byName).sorted
+  }
+
+  /** Footer stats of staged DML outputs, with the ZERO-ROW outputs (a
+    * fully-deleted file, a truncate) deleted and left out of the
+    * returned adds: a broad rewrite must shrink the live set, not
+    * replace data files with empty ones — and an all-rows delete
+    * leaves a genuinely empty table the schema-bearing read serves.
+    */
+  private def dropEmpty(adds: Seq[(String, Long)])
+      : (Seq[(String, Long)], Map[String, String]) = {
+    val st = statsOf(adds)
+    val (kept, emptied) = adds.partition(a =>
+      st.get(a._1).flatMap(FileStats.numRows).forall(_ > 0))
+    emptied.foreach(a => fs.delete(new Path(rootPath, a._1), false))
+    (kept, st)
+  }
+
+  /** The copy-on-write core of [[deleteWhere]], [[update]] and the
+    * row-level [[replaceWhere]]: a file discipline under which a
+    * 100 TB table pays only for what `pred` touches.
+    *   1. STATS PRUNE: `candidates` come from [[DmlScope.candidates]];
+    *   2. EXACT PROBE: one column-pruned scan of the candidates names
     *      the files that really contain matching rows;
-    *   3. REWRITE: only those files are read again, their surviving
-    *      rows re-staged, and the swap published as ONE serializable
-    *      commit (concurrent commit ⇒ conflict abort, like overwrite).
-    * Untouched files are never read, copied or rewritten — their
-    * bytes stay live byte-identical. Row-level change images
-    * (`_change_type='delete'`) are staged for [[changeFeed]].
-    * Returns the new version, or the current one if nothing matched.
+    *   3. REWRITE: only those files are read again, passed through
+    *      `rewrite`, restaged (under their value-dir chains on a
+    *      partitioned table) and their zero-row outputs dropped.
+    * Untouched files are never read, copied or rewritten. None, with
+    * nothing staged, when no file matches.
     */
-  /** DML read of specific live files: recorded schema applied, and —
-    * on a hive-partitioned table — EVERY partition column RESTORED
-    * from each row's file path (their values live in the paths, not
-    * the file contents), so predicates and SET expressions may
-    * reference any key.
-    */
-  private def dmlRead(meta: Seq[(String, FileMeta)], sc: Option[StructType],
-                      partCols: Seq[String],
-                      keepPos: Boolean = false,
-                      cm: GraftTable.ColMap = GraftTable.ColMap.empty)
-      : DataFrame = {
-    // dv-aware: a CoW/MoR pass over files an earlier MoR commit marked
-    // must not resurrect (or re-mark) already-dead rows
-    val base = readMeta(meta, sc, keepPos, cm)
-    partCols.foldLeft(base) { (acc, pc) =>
-      acc.withColumn(pc,
-        partRestore(pc, partTypeOf(pc, meta.map(_._1), latestVersion)))
+  private def rewriteWhere(d: DmlScope, pred: Column, candidates: Seq[String])
+                          (rewrite: DataFrame => DataFrame)
+      : Option[GraftTable.Rewritten] = {
+    val touched =
+      if (candidates.isEmpty) Seq.empty[String]
+      else d.filesOf(d.read(candidates, keepPos = true).filter(pred))
+    if (touched.isEmpty) None
+    else {
+      val rows = d.read(touched)
+      val (adds, st) = dropEmpty(dmlStage(rewrite(rows), d.pc))
+      Some(GraftTable.Rewritten(touched, rows, adds, st))
     }
   }
 
@@ -2657,68 +2686,55 @@ class GraftTable private (val s: SparkSession, val root: String) {
                        partCols: Seq[String]): Seq[(String, Long)] =
     if (partCols.isEmpty) stage(df) else stagePartitioned(df, partCols)
 
+  /** Copy-on-write DELETE (Delta's `DELETE FROM t WHERE pred`), the
+    * reference's delete endpoints (`DeleteData` app.py:5216) made
+    * transactional: [[rewriteWhere]] keeps each touched file's
+    * surviving rows, and the swap is published as ONE serializable
+    * commit (concurrent commit ⇒ conflict abort, like overwrite;
+    * blind appends tolerated). Untouched files stay live
+    * byte-identical. Row-level change images
+    * (`_change_type='delete'`) are staged for [[changeFeed]].
+    * `mor = true` marks the matched rows dead in a deletion vector
+    * instead of rewriting ([[morCommit]]).
+    * Returns the new version, or the current one if nothing matched.
+    */
   def deleteWhere(pred: Column, cdfImages: Boolean = true,
                   mor: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{input_file_name, lit}
+    import org.apache.spark.sql.functions.lit
     val base = latestVersion
     require(base > 0, s"no graft table at $root")
-    val sc = schemaAt(base)
-    val live = resolveMeta(base)
-    val pc = partColsOf(live.keys)
-    val cm = colmapAt(base)
-    val e = physPred(
-      org.apache.spark.sql.graft.shim.catalystExpression(pred), cm)
-    val candidates = live.toSeq.sortBy(_._1).collect {
-      case (p, m) if FileStats.mayMatch(m.stats, e) => p
-    }
+    val d = new DmlScope(base)
+    val candidates = d.candidates(pred)
     if (candidates.isEmpty) return base
     if (mor) {
-      require(pc.isEmpty, "merge-on-read DML is not supported on " +
+      require(d.pc.isEmpty, "merge-on-read DML is not supported on " +
         "hive-partitioned tables — the partition-subset readers " +
         "(readPartitions/readPartitionedColumn) serve raw files; use " +
         "the copy-on-write default")
       // two lean passes, no cache: the positions pass carries the
       // metadata columns; the cdf pass DROPS them, so Catalyst prunes
       // _metadata away and it runs as a plain pushed-down scan
-      val matched = dmlRead(candidates.map(p => p -> live(p)), sc, pc,
-        keepPos = true, cm = cm).filter(pred)
-      return morCommit("delete", base, live, sc, matched,
+      val matched = d.read(candidates, keepPos = true).filter(pred)
+      return morCommit("delete", d, matched,
         adds = Seq.empty,
         cdf = if (!cdfImages) None
               else Some(matched.drop("__fn", "__ri")
                 .withColumn(ChangeTypeCol, lit("delete"))),
         readFiles = candidates)
     }
-    // exact probe: which candidates hold matching rows (≤ #files rows;
-    // __fn from the dv-aware read — input_file_name can't cross the
-    // dv anti-join's second source)
-    val byName = byBaseName(live)
-    val touched = dmlRead(candidates.map(p => p -> live(p)), sc, pc,
-      keepPos = true, cm = cm).filter(pred)
-      .select("__fn").distinct().collect().map(_.getString(0))
-      .toSeq.map(byName).sorted
-    if (touched.isEmpty) return base
-    val touchedDf = dmlRead(touched.map(p => p -> live(p)), sc, pc, cm = cm)
     // null-evaluating rows SURVIVE a delete (Delta's
     // Not(EqualNullSafe(cond, true))) — !pred would drop them
-    val survivors = touchedDf.filter(notMatching(pred))
-    val adds0 = dmlStage(survivors, pc)
-    val st = statsOf(adds0)
-    // drop ZERO-ROW rewrite outputs (a fully-deleted file, a truncate):
-    // a broad delete must shrink the live set, not replace data files
-    // with empty ones — and an all-rows delete leaves a genuinely
-    // empty table the schema-bearing read path serves
-    val (adds, emptied) = adds0.partition(a =>
-      st.get(a._1).flatMap(FileStats.numRows).forall(_ > 0))
-    emptied.foreach(a => fs.delete(new Path(rootPath, a._1), false))
-    val cdf =
-      if (!cdfImages) Seq.empty
-      else stageCdf(touchedDf.filter(pred)
-        .withColumn(ChangeTypeCol,
-          org.apache.spark.sql.functions.lit("delete")))
-    commit("delete", adds, touched, basedOn = Some(base),
-      stats = st, schema = sc, cdf = cdf,
-      tolerateAppends = true, readFiles = candidates)
+    val rewritten =
+      rewriteWhere(d, pred, candidates)(_.filter(notMatching(pred)))
+    rewritten.fold(base) { w =>
+      val cdf =
+        if (!cdfImages) Seq.empty
+        else stageCdf(w.rows.filter(pred)
+          .withColumn(ChangeTypeCol, lit("delete")))
+      commit("delete", w.adds, w.touched, basedOn = Some(base),
+        stats = w.stats, schema = d.sc, cdf = cdf,
+        tolerateAppends = true, readFiles = candidates)
+    }
   }
 
   /** The shared tail of a MERGE-ON-READ DML commit: `matched` is the
@@ -2733,16 +2749,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * sidecar, and an emptied table stays readable), dvs for the rest.
     * Returns the committed version, or `base` when nothing matched.
     */
-  private def morCommit(action: String, base: Long,
-                        live: Map[String, FileMeta],
-                        sc: Option[StructType],
+  private def morCommit(action: String, d: DmlScope,
                         matched: DataFrame,
                         adds: Seq[(String, Long)],
                         cdf: Option[DataFrame],
                         readFiles: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
     import s.implicits._
-    val byName = byBaseName(live)
+    val live = d.live
     def readDv(dirs: Seq[String]) = s.read
       .schema(new StructType().add("__file", StringType)
         .add("__pos", LongType)) // explicit: an empty stage stays readable
@@ -2764,8 +2778,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
       col("__ri").as("__pos")), 8)
     val touchedNames = readDv(Seq(dvSub0)).select("__file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    if (touchedNames.isEmpty) { drop(dvSub0); return base }
-    val touched = touchedNames.map(byName)
+    if (touchedNames.isEmpty) { drop(dvSub0); return d.base }
+    val touched = touchedNames.map(d.byName)
     val oldDvDirs = touched.flatMap(p => live(p).dv.map(_.path)).distinct
     // SUPERSEDE: fold the touched files' existing dv positions in — a
     // sidecar-sized rewrite (positions only), never a data scan
@@ -2802,21 +2816,19 @@ class GraftTable private (val s: SparkSession, val root: String) {
       drop(dvSubC)
     val dvs = partial.map(p =>
       p -> DvRef(dvSubC, dvBytes, counts(fileKey(p))))
-    commit(action, adds, fullDead, basedOn = Some(base),
-      stats = statsOf(adds), schema = sc,
+    commit(action, adds, fullDead, basedOn = Some(d.base),
+      stats = statsOf(adds), schema = d.sc,
       cdf = cdf.map(stageCdf).getOrElse(Seq.empty),
       tolerateAppends = true, dvs = dvs, readFiles = readFiles)
   }
 
   /** Copy-on-write UPDATE (Delta's `UPDATE t SET … WHERE pred`), the
     * reference's field-edit write path (`SaveData` app.py:5253 sets
-    * named columns on matched registry rows) — deleteWhere's file
-    * discipline with a rewrite instead of a drop:
-    *   1. STATS PRUNE on `pred`, 2. EXACT PROBE for the files that
-    *   really hold matching rows, 3. rewrite ONLY those files with
-    *   `set`'s column expressions applied to the matching rows
-    *   (non-matching rows in touched files pass through bit-equal),
-    *   ONE serializable commit (blind appends tolerated).
+    * named columns on matched registry rows) — deleteWhere's
+    * [[rewriteWhere]] core with a rewrite instead of a drop: the
+    * touched files are restaged with `set`'s column expressions
+    * applied to the matching rows (non-matching rows pass through
+    * bit-equal), in ONE serializable commit (blind appends tolerated).
     * `set` maps column name → new-value expression (evaluated
     * against the OLD row, so `col("a") + 1` increments). Row-level
     * change images (update_preimage / update_postimage) are staged
@@ -2825,37 +2837,29 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def update(pred: Column, set: Map[String, Column],
              cdfImages: Boolean = true, mor: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{lit, when}
     val base = latestVersion
     require(base > 0, s"no graft table at $root")
-    val sc = schemaAt(base)
+    val d = new DmlScope(base)
     require(set.nonEmpty, "update needs at least one SET column")
-    val live = resolveMeta(base)
-    val pc = partColsOf(live.keys)
-    pc.foreach { p =>
+    d.pc.foreach { p =>
       require(!set.contains(p),
         s"cannot SET hive-partition column '$p' — the row would move to " +
           "another partition; use replacePartitions for partition rewrites")
     }
-    sc.foreach { st =>
-      val missing = set.keySet -- st.fieldNames.toSet -- pc.toSet
+    d.sc.foreach { st =>
+      val missing = set.keySet -- st.fieldNames.toSet -- d.pc.toSet
       require(missing.isEmpty, s"SET columns not in the table: $missing")
     }
-    val cm = colmapAt(base)
-    val e = physPred(
-      org.apache.spark.sql.graft.shim.catalystExpression(pred), cm)
-    val candidates = live.toSeq.sortBy(_._1).collect {
-      case (p, m) if FileStats.mayMatch(m.stats, e) => p
-    }
+    val candidates = d.candidates(pred)
     if (candidates.isEmpty) return base
     if (mor) {
-      require(pc.isEmpty, "merge-on-read DML is not supported on " +
+      require(d.pc.isEmpty, "merge-on-read DML is not supported on " +
         "hive-partitioned tables — use the copy-on-write default")
       // matched pre-rows, dv-aware, with their (file, position) —
       // persisted: slice rewrite, dv stage and cdf images all read
       // the cache instead of rescanning candidates
-      val matched = dmlRead(candidates.map(p => p -> live(p)), sc, pc,
-        keepPos = true, cm = cm).filter(pred)
+      val matched = d.read(candidates, keepPos = true).filter(pred)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val payload = matched.columns
@@ -2868,7 +2872,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         // the updated copies APPEND as new files; the old copies go
         // dead via the dv — the only data written is the touched slice
         val adds = stage(post)
-        return morCommit("update", base, live, sc, matched, adds,
+        return morCommit("update", d, matched, adds,
           cdf = if (!cdfImages) None
                 else Some(matched.drop("__fn", "__ri")
                   .withColumn(ChangeTypeCol, lit("update_preimage"))
@@ -2877,99 +2881,79 @@ class GraftTable private (val s: SparkSession, val root: String) {
           readFiles = candidates)
       } finally matched.unpersist()
     }
-    // exact probe: bounded collect (distinct file names, ≤ #files)
-    val byName = byBaseName(live)
-    val touched = dmlRead(candidates.map(p => p -> live(p)), sc, pc,
-      keepPos = true, cm = cm).filter(pred)
-      .select("__fn").distinct().collect().map(_.getString(0))
-      .toSeq.map(byName).sorted
-    if (touched.isEmpty) return base
-    val touchedDf = dmlRead(touched.map(p => p -> live(p)), sc, pc, cm = cm)
-    val cols = touchedDf.columns.map { c =>
-      set.get(c) match {
-        case Some(v) => when(pred, v).otherwise(touchedDf(c)).as(c)
-        case None => touchedDf(c)
-      }
-    }
-    val rewritten = touchedDf.select(cols.toIndexedSeq: _*)
-    enforceConstraints(rewritten, "update")
-    val adds = dmlStage(rewritten, pc)
-    val cdf =
-      if (!cdfImages) Seq.empty
-      else {
-        // post-images derive from the PRE rows with SET applied — the
-        // predicate may stop matching after the update (SET status =
-        // 'DONE' WHERE status = 'PENDING'), so re-filtering the
-        // rewritten frame would lose exactly the updated rows
-        val pre = touchedDf.filter(pred)
-        val postCols = touchedDf.columns.map { c =>
-          set.get(c).map(_.as(c)).getOrElse(pre(c))
+    rewriteWhere(d, pred, candidates) { touchedDf =>
+      val rewritten = touchedDf.select(touchedDf.columns.map { c =>
+        set.get(c) match {
+          case Some(v) => when(pred, v).otherwise(touchedDf(c)).as(c)
+          case None => touchedDf(c)
         }
-        stageCdf(pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(pre.select(postCols.toIndexedSeq: _*)
-            .withColumn(ChangeTypeCol, lit("update_postimage"))))
-      }
-    commit("update", adds, touched, basedOn = Some(base),
-      stats = statsOf(adds), schema = sc, cdf = cdf,
-      tolerateAppends = true, readFiles = candidates)
+      }.toIndexedSeq: _*)
+      enforceConstraints(rewritten, "update")
+      rewritten
+    }.fold(base) { w =>
+      val cdf =
+        if (!cdfImages) Seq.empty
+        else {
+          // post-images derive from the PRE rows with SET applied — the
+          // predicate may stop matching after the update (SET status =
+          // 'DONE' WHERE status = 'PENDING'), so re-filtering the
+          // rewritten frame would lose exactly the updated rows
+          val pre = w.rows.filter(pred)
+          val postCols = w.rows.columns.map { c =>
+            set.get(c).map(_.as(c)).getOrElse(pre(c))
+          }
+          stageCdf(pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+            .unionByName(pre.select(postCols.toIndexedSeq: _*)
+              .withColumn(ChangeTypeCol, lit("update_postimage"))))
+        }
+      commit("update", w.adds, w.touched, basedOn = Some(base),
+        stats = w.stats, schema = d.sc, cdf = cdf,
+        tolerateAppends = true, readFiles = candidates)
+    }
   }
 
-  /** Copy-on-write MERGE (Delta's `MERGE INTO`), the reference's
-    * upsert write path (`SaveData` app.py:5253, `uploadExcel`
-    * app.py:6063-6300) made transactional. Matched keys update via
-    * the per-column strategies of [[graft.operators.Upsert.merge]]
-    * (update-wins, semicolon-set-union…), unmatched update keys
-    * INSERT, and — the copy-on-write contract — only the files that
-    * contain a matched key are rewritten:
-    *   1. STATS PRUNE on the key column: the update batch's [min,max]
-    *      key range (one tiny aggregation) drops every file whose
-    *      logged key stats cannot overlap it;
-    *   2. EXACT PROBE: a key-column-only scan of the candidates,
-    *      broadcast-semi-joined to the batch's keys, names the files
-    *      that really hold matched keys (output ≤ #files);
-    *   3. REWRITE: those files' rows merge with the batch (one
-    *      broadcast join — the batch is endpoint-sized), inserts
-    *      included, and the swap is ONE serializable commit.
-    * Row-level change images (update_preimage / update_postimage /
-    * insert) are staged for [[changeFeed]]. Returns the new version.
+  /** The upsert MERGE (Delta's `MERGE INTO … WHEN MATCHED THEN UPDATE
+    * SET * WHEN NOT MATCHED THEN INSERT *`), the reference's upsert
+    * write path (`SaveData` app.py:5253, `uploadExcel`
+    * app.py:6063-6300) made transactional. A front over [[mergeInto]]
+    * with two clauses on the ON key `key`:
+    *   - WHEN MATCHED UPDATE: every non-key column the batch shares
+    *     with the table takes `coalesce(s.c, t.c)`, so a null batch
+    *     field keeps the stored value ([[graft.operators.Upsert]]'s
+    *     `UpdateWins`);
+    *   - WHEN NOT MATCHED INSERT: the key and every shared column take
+    *     `s.c`; table-only columns insert null.
+    * Batch-only columns are ignored — unless `mergeSchema = true`,
+    * which adds them to the schema and to both clauses as `s.c`
+    * (common columns must keep their type). Pruning, probing, the
+    * size-aware broadcast gate, CDF images (update_preimage /
+    * update_postimage / insert) and the commit are mergeInto's; so is
+    * its multiple-match refusal when a batch holds two rows for one
+    * stored key. Hive-partitioned tables refuse here: mergeInto and
+    * replacePartitions serve them. Returns the new version, or the
+    * current one when the batch is empty.
     */
   def merge(updates: DataFrame, key: String,
-            strategies: Map[String, graft.operators.Upsert.MergeStrategy] =
-              Map.empty,
             cdfImages: Boolean = true,
             mergeSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, max, min}
+    import org.apache.spark.sql.functions.{coalesce, col}
+    import MergeClauses._
     val base = latestVersion
     require(base > 0, s"no graft table at $root — append the batch instead")
-    val sc0 = schemaAt(base)
-    // DML SCHEMA EVOLUTION (round 16, Delta's schema.autoMerge): with
-    // mergeSchema=true an ADDITIVE batch carries new columns into the
-    // schema — only the touched-file rewrite materializes them
-    // (null-filled on unmatched base rows); untouched files stay
-    // byte-identical and the snapshot read null-fills them, exactly
-    // the evolved-append behavior. Type conflicts on common columns
-    // refuse loudly; without the flag, batch-only columns keep
-    // Upsert.merge's documented ignore rule.
-    val sc =
-      if (!mergeSchema) sc0
-      else sc0.map { cur =>
-        val curNames = cur.fieldNames.map(_.toLowerCase).toSet
-        val incoming = org.apache.spark.sql.graft.shim
-          .nullable(updates.schema)
-        incoming.fields.filter(f => curNames(f.name.toLowerCase))
-          .foreach { f =>
-            val t = cur.fields
-              .find(_.name.equalsIgnoreCase(f.name)).get.dataType
-            require(t == f.dataType,
-              s"mergeSchema cannot change column '${f.name}' from " +
-                s"${t.simpleString} to ${f.dataType.simpleString}")
-          }
-        val fresh = incoming.fields
-          .filterNot(f => curNames(f.name.toLowerCase))
-        requireEvolvableFresh(fresh.map(_.name).toSeq, base)
-        StructType(cur.fields ++ fresh)
-      }
-    val liveM = resolveMeta(base)
+    val cur = schemaAt(base).getOrElse(new StructType())
+    val (shared, fresh) = org.apache.spark.sql.graft.shim
+      .nullable(updates.schema).fields.toSeq
+      .filterNot(_.name.equalsIgnoreCase(key))
+      .partition(f => cur.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+    // DML SCHEMA EVOLUTION (round 16, Delta's schema.autoMerge): type
+    // conflicts on common columns refuse loudly; mergeInto adds the
+    // fresh columns (tombstone guard included)
+    if (mergeSchema) shared.foreach { f =>
+      val t = cur.fields.find(_.name.equalsIgnoreCase(f.name)).get.dataType
+      require(t == f.dataType,
+        s"mergeSchema cannot change column '${f.name}' from " +
+          s"${t.simpleString} to ${f.dataType.simpleString}")
+    }
     partColsFor(base).headOption.foreach { p =>
       throw new IllegalArgumentException(
         s"table is hive-partitioned on '$p' — use mergeInto (clause " +
@@ -2977,95 +2961,31 @@ class GraftTable private (val s: SparkSession, val root: String) {
           "replacePartitions (the partition-scoped merge the " +
           "streaming sinks run) instead")
     }
-    require(sc.forall(_.fieldNames.contains(key)),
+    require(cur.fieldNames.contains(key),
       s"merge key '$key' is not a column of the table")
-    // pin the batch across the validate-then-stage window (the
-    // mergeInto rule, round 17): range agg, key probe, rewrite,
-    // constraints, staging and CDF each re-execute this plan
-    val upd = updates.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // 1. stats prune on the batch's key range
-    val range = upd.agg(min(col(key)).as("lo"), max(col(key)).as("hi")).head
-    val (lo, hi) = (range.get(0), range.get(1))
-    if (lo == null) return base // empty batch: nothing to merge, no commit
-    // size-aware batch strategy (mergeInto's gate, round 17): an
-    // endpoint-sized batch broadcasts into the probe and CDF joins;
-    // a corpus-sized one leaves join strategy to the planner instead
-    // of OOMing the driver. Same conf, same default.
-    val updBytes = upd.queryExecution.optimizedPlan.stats.sizeInBytes
-    // a session that DISABLED broadcast joins (threshold <= 0) keeps
-    // that choice here too (ADVICE r17) — only an explicit graft conf
-    // re-enables the forced-broadcast fast path
-    val updCeiling = BigInt(s.conf.get(
-      "spark.graft.merge.broadcastThreshold",
-      s.sessionState.conf.autoBroadcastJoinThreshold.toString))
-    val updSmall = updCeiling > 0 && updBytes <= updCeiling
-    val bcast: DataFrame => DataFrame =
-      if (updSmall) df => broadcast(df) else df => df
-    val keyPred = col(key) >= lit(lo) && col(key) <= lit(hi)
-    val cmM = colmapAt(base)
-    val e = physPred(
-      org.apache.spark.sql.graft.shim.catalystExpression(keyPred), cmM)
-    val candidates = liveM.toSeq.sortBy(_._1).collect {
-      case (p, m) if FileStats.mayMatch(m.stats, e) => p
-    }
-    // dv-aware: rows an earlier MoR delete marked dead must neither
-    // match as existing keys nor resurrect into the rewrite
-    def readRel(paths: Seq[String]): DataFrame =
-      readMeta(paths.map(p => p -> liveM(p)), sc, cm = cmM)
-    val updKeys = upd.select(col(key)).distinct()
-    // 2. exact probe: candidate files really holding a matched key
-    // (__fn from the dv-aware read; bounded collect, ≤ #files rows)
-    val byName = byBaseName(liveM)
-    val touched =
-      if (candidates.isEmpty) Seq.empty[String]
-      else readMeta(candidates.map(p => p -> liveM(p)), sc,
-        keepPos = true, cm = cmM)
-        .select(col(key), col("__fn"))
-        .join(bcast(updKeys), Seq(key))
-        .select("__fn").distinct().collect().map(_.getString(0))
-        .toSeq.map(byName).sorted
-    // 3. rewrite touched rows merged with the batch (inserts included)
-    val baseRows = readRel(touched)
-    val merged = graft.operators.Upsert.merge(baseRows, upd, key, strategies)
-    enforceConstraints(merged, "merge")
-    val adds = stage(merged)
-    val cdf =
-      if (!cdfImages) Seq.empty
-      else {
-        val matched = updKeys.join(baseRows.select(col(key)), Seq(key),
-          "left_semi")
-        val pre = baseRows.join(bcast(matched), Seq(key), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val post = merged.join(bcast(matched), Seq(key), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        val ins = merged.join(bcast(matched), Seq(key), "left_anti")
-          .join(bcast(updKeys), Seq(key), "left_semi")
-          .withColumn(ChangeTypeCol, lit("insert"))
-        stageCdf(pre.unionByName(post).unionByName(ins))
-      }
-    commit("merge", adds, touched, basedOn = Some(base),
-      stats = statsOf(adds), schema = sc, cdf = cdf,
-      tolerateAppends = true, readFiles = candidates,
-      info = Some(s"mergeSourceStrategy=" +
-        s"${if (updSmall) "broadcast" else "shuffle"} " +
-        s"sourceBytesEst=$updBytes"))
-    } finally { upd.unpersist(); () }
+    val carried = if (mergeSchema) fresh.map(_.name) else Seq.empty
+    def src(c: String) = col(s"s.$c")
+    mergeInto(updates, Seq(key),
+      matched = Seq(MatchedUpdate(None, (shared.map(f =>
+        f.name -> coalesce(src(f.name), col(s"t.${f.name}"))) ++
+        carried.map(c => c -> src(c))).toMap)),
+      notMatched = Seq(NotMatchedInsert(None,
+        (Seq(key) ++ shared.map(_.name) ++ carried).map(c => c -> src(c)).toMap)),
+      cdfImages = cdfImages, mergeSchema = mergeSchema)
   }
 
   /** Conditional multi-clause MERGE — Delta's FULL `MERGE INTO`
-    * clause surface ([[merge]] covers only the unconditional SET-all
-    * upsert): `WHEN MATCHED [AND cond] THEN UPDATE/DELETE` (several,
-    * ordered, first-match-wins), `WHEN NOT MATCHED [AND cond] THEN
-    * INSERT`, and `WHEN NOT MATCHED BY SOURCE [AND cond] THEN
-    * UPDATE/DELETE`. The reference's approval flow is the motivating
-    * statement — only PENDING rows may transition
+    * clause surface, and the one MERGE engine ([[merge]] is its
+    * two-clause upsert front): `WHEN MATCHED [AND cond] THEN
+    * UPDATE/DELETE` (several, ordered, first-match-wins), `WHEN NOT
+    * MATCHED [AND cond] THEN INSERT`, and `WHEN NOT MATCHED BY SOURCE
+    * [AND cond] THEN UPDATE/DELETE`. The reference's approval flow is
+    * the motivating statement — only PENDING rows may transition
     * (`ApprovalEditData` app.py:5336, `approve-tag-equipment`
     * app.py:5706). Expression convention: see [[MergeClauses]]
     * (`t.<col>` / `s.<col>`).
     *
-    * Copy-on-write, same discipline as [[merge]]:
+    * Copy-on-write, with the DML prune and probe of [[DmlScope]]:
     *   1. STATS PRUNE — matched-side candidates from the batch's
     *      per-key [min,max]; by-source candidates from the OR of the
     *      by-source conditions (an unconditional by-source clause
@@ -3191,25 +3111,24 @@ class GraftTable private (val s: SparkSession, val root: String) {
     import MergeClauses._
     val base = latestVersion
     require(base > 0, s"no graft table at $root — append the batch instead")
-    val sc = schemaAt(base)
-    val liveM = resolveMeta(base)
     // hive-partitioned tables merge too (round 16 — Delta does): the
-    // probes restore the partition columns from paths (dmlRead), the
+    // probes restore the partition columns from paths (DmlScope.read), the
     // rewrite restages under full value-dir chains (dmlStage), so an
     // update that SETs a partition key simply moves the row to its
     // new chain, and partition-column ON keys chain-prune candidates
-    val pc = partColsFor(base)
+    val d = new DmlScope(base)
+    val pc = d.pc
     require(keys.nonEmpty, "mergeInto needs at least one ON key")
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "mergeInto needs at least one clause")
-    val payload = sc.getOrElse(throw new IllegalStateException(
+    val payload = d.sc.getOrElse(throw new IllegalStateException(
       s"table at $root has no recorded schema"))
     // the full logical row = payload fields + path-restored partition
     // fields (the recorded schema is payload-only on partitioned
     // layouts — partition values live in the value dirs)
     val schema = StructType(payload.fields ++ pc.map(p =>
       org.apache.spark.sql.types.StructField(p,
-        partTypeOf(p, liveM.keys, base))))
+        partTypeOf(p, d.live.keys, base))))
     val tNames = schema.fieldNames.toSeq
     val tSet = tNames.map(_.toLowerCase).toSet
     keys.foreach { k =>
@@ -3272,11 +3191,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     notMatched.foreach(c => checkCols(c.values, "WHEN NOT MATCHED INSERT"))
     notMatchedBySource.foreach { case BySourceUpdate(_, set) =>
       checkCols(set, "WHEN NOT MATCHED BY SOURCE UPDATE SET"); case _ => }
-    val cm = colmapAt(base)
     requireEvolvableFresh(newCols.keys.toSeq, base)
-    val byName = byBaseName(liveM)
-    def probeFiles(paths: Seq[String]) =
-      dmlRead(paths.map(p => p -> liveM(p)), sc, pc, keepPos = true, cm = cm)
+    def probeFiles(paths: Seq[String]) = d.read(paths, keepPos = true)
 
     // 1a. matched-side stats prune: conjunction of per-key batch
     // ranges. The probe set is needed whenever matched OR notMatched
@@ -3328,20 +3244,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
       else {
         val payloadKeys = keys.zipWithIndex.filterNot { case (k, _) =>
           pc.exists(_.equalsIgnoreCase(k)) }
-        val statsKeep: FileMeta => Boolean =
-          if (payloadKeys.isEmpty) _ => true
-          else {
-            val keyPred = payloadKeys.map { case (k, i) =>
-              col(k) >= lit(range.get(2 * i)) &&
-                col(k) <= lit(range.get(2 * i + 1))
-            }.reduce(_ && _)
-            val e = physPred(org.apache.spark.sql.graft.shim
-              .catalystExpression(keyPred), cm)
-            m => FileStats.mayMatch(m.stats, e)
-          }
-        liveM.toSeq.sortBy(_._1).collect {
-          case (p, m) if statsKeep(m) && chainKeep(p) => p
-        }
+        val statsKept =
+          if (payloadKeys.isEmpty) d.live.keys.toSeq.sorted
+          else d.candidates(payloadKeys.map { case (k, i) =>
+            col(k) >= lit(range.get(2 * i)) &&
+              col(k) <= lit(range.get(2 * i + 1))
+          }.reduce(_ && _))
+        statsKept.filter(chainKeep)
       }
     val srcKeys = src.select(keys.map(col): _*).distinct()
     // the MATCH condition: equi keys (pruning, probing) AND the
@@ -3378,11 +3287,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // extra files rewrite as all-keep)
     val matchedKeyFiles =
       if (keyCandidates.isEmpty) Seq.empty[String]
-      else jobPhase("merge: matched-file key probe")(
-        probeFiles(keyCandidates)
-          .join(bcast(srcKeys), keys)
-          .select("__fn").distinct().collect()).map(_.getString(0))
-        .toSeq.map(byName).sorted
+      else jobPhase("merge: matched-file key probe")(d.filesOf(
+        probeFiles(keyCandidates).join(bcast(srcKeys), keys)))
     // 1b+2b. by-source side: prune on the OR of the clause conditions
     // where every clause HAS one (an unconditional clause forces the
     // full scan — "unmatched-ness" is not stats-expressible); then
@@ -3399,14 +3305,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
       else {
         val conds = notMatchedBySource.map(_.condition)
         val cands =
-          if (conds.exists(_.isEmpty)) liveM.keys.toSeq.sorted
-          else {
-            val e = physPred(conds.flatten.map(stripT).reduce(
-              org.apache.spark.sql.catalyst.expressions.Or(_, _)), cm)
-            liveM.toSeq.sortBy(_._1).collect {
-              case (p, m) if FileStats.mayMatch(m.stats, e) => p
-            }
-          }
+          if (conds.exists(_.isEmpty)) d.live.keys.toSeq.sorted
+          else d.candidates(conds.flatten.map(stripT).reduce(
+            org.apache.spark.sql.catalyst.expressions.Or(_, _)))
         if (cands.isEmpty) (cands, Seq.empty[String])
         else {
           val eligible = conds.map(_.getOrElse(lit(true))).reduce(_ || _)
@@ -3427,10 +3328,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
                   joinCond, "left_anti")
           }
           (cands, jobPhase("merge: by-source file probe")(
-            unmatchedRows
-              .filter(eligible)
-              .select("__fn").distinct().collect()).map(_.getString(0))
-            .toSeq.map(byName).sorted)
+            d.filesOf(unmatchedRows.filter(eligible))))
         }
       }
     // only matched-clause rewrites touch the key-holding files; with
@@ -3481,11 +3379,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // join multiplicity must COLLAPSE to one output row per target
     // (file, position), or a dup-keyed source would silently
     // duplicate kept rows through the left-outer rewrite (ADVICE r16)
-    val joinedDeduped =
-      if (matched.nonEmpty) joined0.withColumn("__action", action)
-      else joined0.withColumn("__action", action)
-        .dropDuplicates(Seq("__fn", "__ri"))
-    val joined = joinedDeduped
+    val withAction = joined0.withColumn("__action", action)
+    val joined = (if (matched.nonEmpty) withAction
+                  else withAction.dropDuplicates(Seq("__fn", "__ri")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the insert frame is pinned too (set below): it is read three
     // times — union into the staged rows, CDF images, and the
@@ -3582,8 +3478,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
               val presentKeys =
                 if (matchedKeyFiles.isEmpty)
                   srcKeys.limit(0) // nothing present: every key inserts
-                else dmlRead(matchedKeyFiles.map(p => p -> liveM(p)), sc,
-                  pc, cm = cm).select(keys.map(col): _*)
+                else d.read(matchedKeyFiles).select(keys.map(col): _*)
                   .join(bcast(srcKeys), keys, "left_semi").distinct()
               srcMarked.alias("s")
                 .join(bcast(presentKeys), keys, "left_anti")
@@ -3660,14 +3555,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // rows land back under their (possibly UPDATED) value-dir
       // chains, so pruned reads keep working and a SET on a partition
       // key moves the row — Delta's partitioned-merge semantics
-      val adds = jobPhase("merge: stage rewrite + inserts")(
-        dmlStage(outRows, pc))
-      val st0 = statsOf(adds)
       // zero-row rewrite outputs drop (deleteWhere's rule); and an
       // insert-only merge that inserted nothing publishes no commit
-      val (kept, emptied) = adds.partition(a =>
-        st0.get(a._1).flatMap(FileStats.numRows).forall(_ > 0))
-      emptied.foreach(a => fs.delete(new Path(rootPath, a._1), false))
+      val (kept, st0) = dropEmpty(jobPhase("merge: stage rewrite + inserts")(
+        dmlStage(outRows, pc)))
       if (touched.isEmpty && kept.isEmpty) {
         // drain the concurrent CDF staging before abandoning the
         // commit, so no background job outlives the verb
@@ -3680,7 +3571,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // the committed schema carries the evolved PAYLOAD (partition
       // keys stay path-borne, recorded via partMeta)
       val evolvedPayload =
-        if (newFields.isEmpty) sc
+        if (newFields.isEmpty) d.sc
         else Some(org.apache.spark.sql.graft.shim.nullable(
           StructType(payload.fields ++ newFields)))
       // operation metrics (Delta's operationMetrics): per-outcome
@@ -4672,6 +4563,16 @@ object GraftTable {
     */
   private[sources] def isMergeAction(a: String): Boolean =
     a == "merge" || a.startsWith("merge@")
+
+  /** What [[GraftTable.rewriteWhere]] staged: the probed files it
+    * replaces, their rows as read for the rewrite (the change images
+    * filter the same frame), the non-empty rewrite outputs and their
+    * footer stats.
+    */
+  private final case class Rewritten(touched: Seq[String],
+                                     rows: DataFrame,
+                                     adds: Seq[(String, Long)],
+                                     stats: Map[String, String])
 
   /** A vacuum's reclaim set: unreferenced (relpath, bytes) files past
     * the grace window, plus the log files behind `horizon`.

@@ -124,7 +124,14 @@ class GraftDmlSpec extends SparkSpec {
     val before = t.liveFiles()
     val keyMax = Tables.orders(spark, sf)
       .agg(max("o_orderkey")).head.getLong(0)
-    // a batch confined to the low key decade + some brand-new keys
+    // a batch confined to the low key decade + some brand-new keys,
+    // plus one stored key whose payload is NULL (UpdateWins keeps the
+    // stored value) and a batch-only column (ignored without
+    // mergeSchema)
+    val nullKey = Tables.orders(spark, sf)
+      .filter(col("o_orderkey") <= keyMax / 10 &&
+        pmod(col("o_orderkey"), lit(3)) === 1)
+      .agg(min("o_orderkey")).head.getLong(0)
     val updates = Tables.orders(spark, sf)
       .filter(col("o_orderkey") <= keyMax / 10 &&
         pmod(col("o_orderkey"), lit(3)) === 0)
@@ -132,12 +139,23 @@ class GraftDmlSpec extends SparkSpec {
       .unionByName(spark.range(1, 4)
         .select((lit(keyMax) + col("id") * 7).as("o_orderkey"),
           lit(999.5).as("o_totalprice")))
+      .unionByName(spark.range(1)
+        .select(lit(nullKey).as("o_orderkey"),
+          lit(null).cast("double").as("o_totalprice")))
+      .withColumn("o_note", lit("batch-only"))
     val base = t.read()
+    val storedPrice = base.filter(col("o_orderkey") === nullKey)
+      .select("o_totalprice").head.getDouble(0)
     val want = multiset(graft.operators.Upsert.merge(
       base, updates, "o_orderkey"))
     val v = t.merge(updates, "o_orderkey")
     assert(multiset(t.read()) == want,
       "merge diverged from the reference full-table merge semantics")
+    assert(t.read().filter(col("o_orderkey") === nullKey)
+      .select("o_totalprice").head.getDouble(0) == storedPrice,
+      "a null batch field must keep the stored value")
+    assert(!t.read().columns.contains("o_note"),
+      "a batch-only column must be ignored without mergeSchema")
     // copy-on-write: only low-range files (and none of the high-range
     // ones) were swapped; the new keys land in the rewrite commit
     val removed = t.readCommit(v).removes.toSet
@@ -314,6 +332,21 @@ class GraftDmlSpec extends SparkSpec {
     assert(crossing.filter(col("_change_type") === "insert").count() ==
       t.readVersion(2).count())
     ()
+  }
+
+  test("merge refuses a batch holding two rows for one stored key and commits nothing") {
+    val t = rangedTable()
+    val v = t.latestVersion
+    val before = multiset(t.read())
+    val key = Tables.orders(spark, sf).agg(min("o_orderkey")).head.getLong(0)
+    // two batch rows hit one stored row: which value wins is not
+    // defined, so the merge refuses instead of keeping both rows
+    val dup = spark.range(2).select(lit(key).as("o_orderkey"),
+      (col("id") + 1.5).as("o_totalprice"))
+    val e = intercept[IllegalArgumentException] { t.merge(dup, "o_orderkey") }
+    assert(e.getMessage.contains("multiple source rows"), e.getMessage)
+    assert(t.latestVersion == v, "a refused merge committed")
+    assert(multiset(t.read()) == before, "a refused merge changed the table")
   }
 
   test("merge with an empty update batch is a no-op, not an empty commit") {

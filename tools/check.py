@@ -3,6 +3,9 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 
+A named query with no oracle entry is a failure (a typo must not pass
+having compared nothing), and so is a run that compares no query at all.
+
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs
 the matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 sfDir tables, and diffs: schema (column names sorted), row count, and
@@ -37,9 +40,14 @@ def main():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{f}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     fails = 0
+    for name in sorted(only - set(oracle)):
+        print(f"FAIL {name}: no oracle entry in {out_dir}/oracle_sql.json")
+        fails += 1
+    compared = 0
     for name in sorted(oracle):
         if only and name not in only:
             continue
+        compared += 1
         res_dir = f"{out_dir}/{name}"
         if not glob.glob(f"{res_dir}/*.parquet"):
             print(f"FAIL {name}: no spark result at {res_dir}")
@@ -80,7 +88,10 @@ def main():
             fails += 1
         else:
             print(f"PASS {name} ({len(g)} rows)")
-    print(f"{'ALL PASS' if fails == 0 else f'{fails} FAILURES'}")
+    if compared == 0:
+        print("FAIL: no query compared")
+        fails += 1
+    print(f"{'ALL PASS' if fails == 0 else f'{fails} FAILURES'} ({compared} queries compared)")
     sys.exit(1 if fails else 0)
 
 if __name__ == "__main__":
