@@ -56,76 +56,60 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = p(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = p(s, d, "embeddings")
 
-  /** Exact row count of a parquet table from FILE FOOTERS — a driver-
-    * side metadata read (O(files) footer fetches, one listing), NOT a
-    * Spark job: sizing decisions made at plan-build time (e9's
-    * hyperplane width) must not cost a corpus scan before the query
-    * starts. At 100 TB the same number comes from the table catalog's
-    * stats or the ingest manifest (IncrementalFiles tracks exactly
-    * these files); and consumers like e9Bits only need log-accuracy,
-    * so a bounded sample of footers would also do — exactness here is
-    * a convenience, not a requirement.
-    */
   /** Scan-parallelism floor for CPU-HEAVY per-row operators (round
     * 18, guide §2.5 "input skew — one huge unsplittable file …
     * repartition immediately after the read"): a small table lands as
     * ONE parquet file under maxPartitionBytes, so a per-row codec /
     * regex tower runs on a single core no matter how many the session
     * has. When the NATURAL split count (bytes / maxPartitionBytes)
-    * is below the session's parallelism, round-robin repartition to
-    * min(defaultParallelism, rows/minRowsPerSlice) — sized by footer
-    * metadata, no job. At real scale the natural splits exceed the
-    * core count and this is the identity: no shuffle is ever added to
-    * a big scan. The exchange HASHES on the table's unique key, NOT
-    * round-robin: a keyless repartition first pays a LOCAL SORT of
-    * its input inside the unsplittable scan task
+    * is below the session's parallelism (the `widen` gate), hash-
+    * repartition to min(defaultParallelism, rows/minRowsPerSlice) —
+    * sized by footer metadata, no job. At real scale the natural
+    * splits exceed the core count and this is the identity: no
+    * shuffle is ever added to a big scan. The exchange HASHES on
+    * `keys`, NOT round-robin: a keyless repartition first pays a LOCAL
+    * SORT of its input inside the unsplittable scan task
     * (spark.sql.execution.sortBeforeRepartition, SPARK-23207 — the
     * sort is there so retried tasks reproduce their row assignment),
     * which measured as a multi-second single-core penalty at ×10;
     * hashing a unique key spreads identically with no sort and stays
-    * deterministic under retries. Row sets are unchanged.
+    * deterministic under retries. A GROUP key instead (scan →
+    * groupBy(key) shapes, with minRowsPerSlice 1) lets the downstream
+    * aggregate reuse the partitioning — one exchange total, partial
+    * AND final agg parallel behind it. Row sets are unchanged.
     */
-  def widen(s: SparkSession, d: String, name: String,
-            df: DataFrame, key: String,
-            minRowsPerSlice: Long = 256L): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
+  def widen(s: SparkSession, d: String, name: String, df: DataFrame,
+            keys: Seq[String], minRowsPerSlice: Long = 256L): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-    val fs = path.getFileSystem(conf)
-    val bytes = fs.getContentSummary(path).getLength
-    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val naturalSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
+    lazy val natural = splits(s, path.getFileSystem(
+      s.sparkContext.hadoopConfiguration).getContentSummary(path).getLength)
     val par = s.sparkContext.defaultParallelism.toLong
-    if (naturalSplits >= par) df
+    if (!Gate.small(s, "widen", par - 1)(natural)) df
     else {
       val rows = parquetRowCount(s, s"$d/$name.parquet")
       val target = math.min(par, math.max(1L, rows / minRowsPerSlice)).toInt
-      if (target <= naturalSplits) df
-      else df.repartition(target, org.apache.spark.sql.functions.col(key))
+      if (target <= natural) df
+      else df.repartition(target, keys.map(org.apache.spark.sql.functions.col): _*)
     }
   }
 
-  /** [[widen]]'s KEYED twin for scan→groupBy(key) shapes: when the
-    * gate fires, repartition BY THE GROUP KEY so the downstream
-    * aggregate reuses the partitioning (HashPartitioning(key, n)
-    * satisfies its clustering — one exchange total, with partial AND
-    * final agg running parallel behind it instead of a single-core
-    * partial in the unsplittable scan task). Identity at real scale
-    * like widen.
-    */
-  def widenBy(s: SparkSession, d: String, name: String,
-              df: DataFrame, keys: Seq[String]): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-    val fs = path.getFileSystem(conf)
-    val bytes = fs.getContentSummary(path).getLength
+  /** Scan splits `bytes` of input land in: ⌈bytes / maxPartitionBytes⌉. */
+  def splits(s: SparkSession, bytes: Long): Long = {
     val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val naturalSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    val par = s.sparkContext.defaultParallelism
-    if (naturalSplits >= par) df
-    else df.repartition(par,
-      keys.map(org.apache.spark.sql.functions.col): _*)
+    math.max(1L, (bytes + maxSplit - 1) / maxSplit)
   }
 
+  /** Exact row count of a parquet table from FILE FOOTERS — a driver-
+    * side metadata read (O(files) footer fetches, one listing), NOT a
+    * Spark job: sizing decisions made at plan-build time (e9's
+    * hyperplane width, every footer-count [[Gate]]) must not cost a
+    * corpus scan before the query starts. At 100 TB the same number
+    * comes from the table catalog's stats or the ingest manifest
+    * (IncrementalFiles tracks exactly these files); and consumers
+    * like e9Bits only need log-accuracy, so a bounded sample of
+    * footers would also do — exactness here is a convenience, not a
+    * requirement.
+    */
   def parquetRowCount(s: SparkSession, path: String): Long = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)

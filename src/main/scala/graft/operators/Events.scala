@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Event/time-series operators: the reference's components/lines JSON
   * handling (`app.py:2219-2289`) and its union-find connectivity pass
@@ -112,43 +112,44 @@ object Events {
     // cluster callers feed it (near-dup pairs, snap-edge graphs —
     // thousands of rows) is pure scheduling overhead, measured ~2.7 s
     // of d36's 5.1 s at sf0.1. Below a bounded-collect cap the
-    // membership is pulled once (take(cap+1) — the same bounded-
+    // membership is pulled once (Gate.collect — the same bounded-
     // collect discipline as the merge verb's file lists) and labeled
     // by driver union-find with union-by-min (the root of every set
     // stays its minimum member, so find(u) IS the component's min —
     // exactly the loop's fixpoint). Above the cap the distributed
-    // loop runs unchanged: the at-scale path, stats-gated like d2's
-    // plan switch. Labels are identical either way — EventsSpec and
-    // the g1/g8/g11/d18 oracles hold on both sides of the gate.
-    val cap = 1000000
-    val head = graph.select("user_id", "g").take(cap + 1)
-    if (head.length <= cap) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      def union(a: Long, b: Long): Unit = {
-        val ra = find(a); val rb = find(b)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      val bucketRep = new java.util.HashMap[Any, Long]()
-      head.foreach { r =>
-        val u = r.getLong(0)
-        if (!parent.containsKey(u)) parent.put(u, u)
-        val g = r.get(1)
-        if (bucketRep.containsKey(g)) union(u, bucketRep.get(g))
-        else bucketRep.put(g, u)
-      }
-      val sess = graph.sparkSession
-      import sess.implicits._
-      val labels = head.iterator.map(_.getLong(0)).toArray.distinct
-        .map(u => (u, find(u))).toSeq
-      return labels.toDF("user_id", "component")
+    // loop runs unchanged: the at-scale path. Labels are identical
+    // either way — EventsSpec, GateSpec's forced sweep and the
+    // g1/g8/g11/d18 oracles hold on both sides of the gate.
+    Gate.collect(graph.sparkSession, "g1.twin",
+                 graph.select("user_id", "g"), 1000000) match {
+      case Some(head) =>
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x
+          while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          r
+        }
+        def union(a: Long, b: Long): Unit = {
+          val ra = find(a); val rb = find(b)
+          if (ra < rb) parent.put(rb, ra)
+          else if (rb < ra) parent.put(ra, rb)
+        }
+        val bucketRep = new java.util.HashMap[Any, Long]()
+        head.foreach { r =>
+          val u = r.getLong(0)
+          if (!parent.containsKey(u)) parent.put(u, u)
+          val g = r.get(1)
+          if (bucketRep.containsKey(g)) union(u, bucketRep.get(g))
+          else bucketRep.put(g, u)
+        }
+        val sess = graph.sparkSession
+        import sess.implicits._
+        val labels = head.iterator.map(_.getLong(0)).toArray.distinct
+          .map(u => (u, find(u))).toSeq
+        return labels.toDF("user_id", "component")
+      case None => ()
     }
     // cache the graph for the iteration ONLY if the caller hasn't: a
     // blanket unpersist at the end would otherwise evict the CALLER's
@@ -548,14 +549,14 @@ object Events {
     */
   private def coPurchaseSymW(s: SparkSession, d: String,
                              minSup: Long = 2L): DataFrame =
-    // widenBy: the per-order aggregate's PARTIAL half otherwise runs
-    // inside the unsplittable single-file scan task at small SFs —
-    // keying the one exchange on l_orderkey up front lets partial AND
-    // final halves parallelize (round 18; identity at real scale; the
-    // BUCKETED landing path below is untouched — it already satisfies
-    // the clustering with no exchange at all)
-    coPurchasePairsFrom(Tables.widenBy(s, d, "lineitem",
-      Tables.lineitem(s, d), Seq("l_orderkey")), minSup)
+    // widen by the group key: the per-order aggregate's PARTIAL half
+    // otherwise runs inside the unsplittable single-file scan task at
+    // small SFs — keying the one exchange on l_orderkey up front lets
+    // partial AND final halves parallelize (round 18; identity at
+    // real scale; the BUCKETED landing path below is untouched — it
+    // already satisfies the clustering with no exchange at all)
+    coPurchasePairsFrom(Tables.widen(s, d, "lineitem",
+      Tables.lineitem(s, d), Seq("l_orderkey"), minRowsPerSlice = 1L), minSup)
 
   private def coPurchasePairsFrom(li: DataFrame,
                                   minSup: Long): DataFrame = {
@@ -753,12 +754,11 @@ object Events {
     // over the un-materialized plan measured slower at ×10 (its
     // scaled attempts re-read the aggregate output). Above the cap
     // the distributed loop runs unchanged from the same checkpoint.
-    // KcoreSpec's cascade fixtures pass through the same gate, so
-    // both sides stay pinned.
-    val cap = 1000000
+    // KcoreSpec's cascade fixtures pass through the same gate, and
+    // GateSpec's forced sweep runs the distributed loop.
     val curCkpt = symEdges.localCheckpoint()
     val totalEdges = curCkpt.count()
-    if (totalEdges <= cap) {
+    if (Gate.small(symEdges.sparkSession, "kcore.twin", 1000000L)(totalEdges)) {
       var edges = curCkpt.select("x", "y").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       var prevEdges = edges.length.toLong

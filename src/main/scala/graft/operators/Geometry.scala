@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Geometry operators: the reference's imperative P&ID post-processing
   * (point-in-box / nearest-box association `app.py:2016-2130,
@@ -30,7 +30,7 @@ object Geometry {
     * real scale).
     */
   private def points(s: SparkSession, d: String): DataFrame =
-    Tables.widen(s, d, "events", Tables.events(s, d), "event_id").select(
+    Tables.widen(s, d, "events", Tables.events(s, d), Seq("event_id")).select(
       col("event_id"),
       ((col("event_id") % 1000) / lit(10)).as("px"),
       (((col("event_id") * 7919) % 1000) / lit(10)).as("py"))
@@ -94,14 +94,15 @@ object Geometry {
   // keep their orderBy; this one's plan ends at the filter, the plan
   // you'd want at 100 TB.
   def g2PointInBox(s: SparkSession, d: String): DataFrame = {
-    // stats-gated broadcast (the repo's footer-count idiom): the
+    // stats-gated broadcast (the footer-count Gate): the
     // finer explode quadruples the box-cell row count, which can tip
     // the planner's ESTIMATE past autoBroadcast and fall back to a
     // sort-merge join on ~625 cell keys — strictly worse than
     // broadcasting the ≤4×-exploded box side, which stays a few
     // hundred MB up to ~10M boxes. Above that, leave the strategy to
     // the planner (the cell-keyed shuffle join parallelizes 625 ways).
-    val bcOk = Tables.parquetRowCount(s, s"$d/part.parquet") <= 10000000L
+    val bcOk = Gate.small(s, "g2.boxBroadcast", 10000000L)(
+      Tables.parquetRowCount(s, s"$d/part.parquet"))
     val b0 = boxCells(boxes(s, d), CellG2)
     val b = if (bcOk) broadcast(b0) else b0
     val p = points(s, d)

@@ -84,7 +84,7 @@ object Pipeline {
   def p10WebCorpus(s: SparkSession, d: String): DataFrame = {
     // widen: the 12-regex strip tower is per-row CPU — a single-file
     // landing would run it on ONE core (round 18; identity at scale)
-    val stripped = Tables.widen(s, d, "documents", Tables.documents(s, d), "doc_id")
+    val stripped = Tables.widen(s, d, "documents", Tables.documents(s, d), Seq("doc_id"))
       .withColumn("html",
         TextOps.crawlEnvelope(col("doc_id"), col("text")))
       .select(col("doc_id"),

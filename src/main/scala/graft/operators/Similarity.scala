@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Gate, Tables}
 import graft.functions.GraftFunctions
 
 /** Similarity search + multimodal plumbing (SURVEY.md §2.4/§2.8).
@@ -302,27 +302,12 @@ object Similarity {
     */
   private case class E9Node(id: Long, q: Array[Long], nrm: Long, bucket: Int)
 
-  /** Injectable driver-twin caps (ADVICE r18): the defaults exceed
-    * every test/bench corpus, so without an override the distributed
-    * branches would be dead code at all verified scales — specs force
-    * the at-scale branch on the small corpus (cap 0) and assert it
-    * equals the twin bit-for-bit (TextSimSpec "forced distributed").
-    */
-  private[graft] def e9DriverCap(s: SparkSession): Int =
-    s.conf.get("spark.graft.e9.driverCap", "200000").toInt
-  private[graft] def e11BuildDriverCap(s: SparkSession): Int =
-    s.conf.get("spark.graft.e11.buildDriverCap", "25000").toInt
-
-  private def e9NodesLocal(emb: DataFrame, cap: Int)
-      : Option[Array[E9Node]] = {
-    if (cap <= 0) return None // forced distributed: no collect, plan stays lazy
-    val head = emb.select(col("vec_id"), col("q"), col("nrm"), col("bucket"))
-      .take(cap + 1)
-    if (head.length > cap)
-      None
-    else Some(head.map(r => E9Node(r.getLong(0), r.getSeq[Long](1).toArray,
-      r.getLong(2), r.getInt(3))))
-  }
+  private def e9NodesLocal(s: SparkSession, gate: String, emb: DataFrame,
+                           cap: Int): Option[Array[E9Node]] =
+    Gate.collect(s, gate,
+        emb.select(col("vec_id"), col("q"), col("nrm"), col("bucket")), cap)
+      .map(_.map(r => E9Node(r.getLong(0), r.getSeq[Long](1).toArray,
+        r.getLong(2), r.getInt(3))))
 
   /** Per-node top-`k` under the multi-probe blocking rule, driver
     * side: returns (qid, [(cosine, nid) …]) in node order, each list
@@ -418,7 +403,7 @@ object Similarity {
       .withColumn("nrm", expr("aggregate(q, 0L, (acc, v) -> acc + v * v)"))
     // driver fast path (round 18, [[e9NodesLocal]]): below the cap
     // the whole graph is local parallel math off one bounded collect
-    e9NodesLocal(emb, e9DriverCap(s)) match {
+    e9NodesLocal(s, "e9.twin", emb, 200000) match {
       case Some(nodes) =>
         import s.implicits._
         return e9DriverTopK(nodes, bits, 3).iterator.flatMap {
@@ -505,7 +490,7 @@ object Similarity {
     // largest measurable layout, so the cap is now set by the
     // standing ~100 MB driver-rows ceiling (≈3.9 KB/node with the
     // deg·2 edge payloads ⇒ 25k nodes), not by encode speed.
-    e9NodesLocal(emb, e11BuildDriverCap(s)) match {
+    e9NodesLocal(s, "e11.twin", emb, 25000) match {
       case Some(nodes) =>
         import s.implicits._
         val edges = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
@@ -739,7 +724,7 @@ object Similarity {
                                          e11Dir: String, e11Build: Double,
                                          e7Dir: String, e7Build: Double)
 
-  private val e13Idx =
+  private[graft] val e13Idx =
     scala.collection.concurrent.TrieMap.empty[String, E13Artifacts]
 
   private[graft] def e13IndexDirs(s: SparkSession, d: String): E13Artifacts =
@@ -1626,7 +1611,7 @@ object Similarity {
     // otherwise pins the whole encode/decode sweep to ONE core
     // (round 18 — identity at real scale, see Tables.widen)
     val out = Tables.widen(s, d, "documents",
-        Tables.documents(s, d).select(col("doc_id")), "doc_id")
+        Tables.documents(s, d).select(col("doc_id")), Seq("doc_id"))
       .mapPartitions { rows =>
         val dec = new ImageIoDecoder(featureBins = 16)
         rows.flatMap { r =>

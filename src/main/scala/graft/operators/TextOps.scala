@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Gate, Tables}
 import graft.functions.GraftFunctions
 
 /** Text-analysis + deduplication suite over `documents` (SURVEY.md
@@ -14,6 +14,12 @@ import graft.functions.GraftFunctions
   * `xxhash64`, fingerprints a custom codegen'd expression.
   */
 object TextOps {
+
+  /** Exact `documents` row count from the footers (no job) — what
+    * the text family's footer-count gates measure.
+    */
+  private def docCount(s: SparkSession, d: String): Long =
+    Tables.parquetRowCount(s, s"$d/documents.parquet")
 
   /** documents + non-empty token array (split on single space). */
   private def docs(s: SparkSession, d: String): DataFrame =
@@ -40,14 +46,14 @@ object TextOps {
     * shingle consumers keep the un-widened scan.
     */
   private def shingledW(s: SparkSession, d: String): DataFrame =
-    if (Tables.parquetRowCount(s, s"$d/documents.parquet") < 20000L)
-      // below ~20k docs the exchange costs more than the serial
+    if (Gate.small(s, "d6.widenMinhash", 19999L)(docCount(s, d)))
+      // below 20k docs the exchange costs more than the serial
       // minhash (measured sf0.1 d6 0.85 -> 1.16 s un-gated) — the
-      // same footer-count switch d36's pair source uses, so the
+      // same footer count d36's pair source switches on, so the
       // sf0.1 plan stays bit-identical to round start
       shingled(s, d)
     else
-      Tables.widen(s, d, "documents", Tables.documents(s, d), "doc_id")
+      Tables.widen(s, d, "documents", Tables.documents(s, d), Seq("doc_id"))
         .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
         .filter(size(col("toks")) >= 3)
         .withColumn("shingles", GraftFunctions.shingle_hashes(col("toks"), 3))
@@ -170,8 +176,8 @@ object TextOps {
     // produce bit-identical pairs (the filter is lossless and
     // verification exact — TextSimSpec asserts equality), so the
     // switch is invisible to the oracle.
-    val big = Tables.parquetRowCount(s, s"$d/documents.parquet") > 150000L
-    if (big) d2NgramJaccardPrefix(s, d, dfCap)
+    if (!Gate.small(s, "d2.prefixPlan", 150000L)(docCount(s, d)))
+      d2NgramJaccardPrefix(s, d, dfCap)
     else sharedShinglePairs(s, d, dfCap)
       .withColumn("jaccard",
         col("shared").cast("double") / (col("sa") + col("sb") - col("shared")))
@@ -202,20 +208,43 @@ object TextOps {
             Seq("band", "bkey"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    // same verification-join strategy as the d2 prefix plan
-    // (broadcast under ~1M docs, shuffled-hash above — measured at
-    // the 100× probe; strategy only, identical rows)
-    val small = Tables.parquetRowCount(s, s"$d/documents.parquet") <= 1000000L
-    def vside(idAs: String, shAs: String, szAs: String) = {
-      val p = base.select(col("doc_id").as(idAs),
-        col("shingles").as(shAs), col("sz").as(szAs))
+    // ShingleHashes emits the sorted-distinct arrays the verification
+    // needs
+    verifiedPairs(s, d, cand, base, "shingles")
+  }
+
+  /** The exact Jaccard ≥ 0.8 verification both candidate sources
+    * share (the d2 prefix plan, [[lshVerifiedPairs]]): each
+    * (doc_a, doc_b) candidate joins back to both docs' sorted-
+    * distinct shingle array `arr` and full size `sz` in `base`.
+    *
+    * Join STRATEGY (measured at the 100× probe, SCALE_r13): the
+    * default sort-merge join SORTS millions of array-carrying
+    * candidate rows twice — the stage was 6–12 s of the query. Below
+    * ~1M docs the shingle-array side fits an executor broadcast
+    * (500k docs ≈ 160 MB measured) and both joins go exchange-free
+    * on the candidate side (6.4 s → 4.0 s); above it, a
+    * shuffled-hash hint at least keeps the array rows out of sort
+    * buffers. Strategy only — same rows either way.
+    *
+    * `shared` via the zero-allocation sorted-merge count:
+    * ArrayIntersect's per-row OpenHashSet + output array dominated the
+    * verification stage at the 100× probe. The bail threshold
+    * under-estimates the J ≥ 0.8 requirement by a full unit, so every
+    * SURVIVING pair runs the merge to completion (exact count, exact
+    * jaccard — oracle-identical) and every bailed pair was going to
+    * be filtered anyway.
+    */
+  private def verifiedPairs(s: SparkSession, d: String, cands: DataFrame,
+                            base: DataFrame, arr: String): DataFrame = {
+    val small = Gate.small(s, "text.verifyBroadcast", 1000000L)(docCount(s, d))
+    def side(id: String, sh: String, sz: String) = {
+      val p = base.select(col("doc_id").as(id), col(arr).as(sh), col("sz").as(sz))
       if (small) broadcast(p) else p.hint("shuffle_hash")
     }
-    cand
-      .join(vside("doc_a", "sha", "sa"), Seq("doc_a"))
-      .join(vside("doc_b", "shb", "sb"), Seq("doc_b"))
-      // sorted-merge shared count with the J ≥ 0.8 bail (d2's rule;
-      // ShingleHashes emits sorted-distinct arrays)
+    cands
+      .join(side("doc_a", "sha", "sa"), Seq("doc_a"))
+      .join(side("doc_b", "shb", "sb"), Seq("doc_b"))
       .withColumn("shared",
         GraftFunctions.sorted_intersect_count(col("sha"), col("shb"),
           expr("greatest(0L, (4 * (sa + sb)) div 9 - 1)")))
@@ -291,39 +320,9 @@ object TextOps {
           "    (4 * (a.sz + m.sz) + 8) div 9)")))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // verification-join STRATEGY (measured at the 100× probe,
-    // SCALE_r13): the default sort-merge join SORTS millions of
-    // array-carrying candidate rows twice — the stage was 6–12 s of
-    // the query. Below ~1M docs the shingle-array side fits an
-    // executor broadcast (500k docs ≈ 160 MB measured) and both
-    // verification joins go exchange-free on the candidate side
-    // (6.4 s → 4.0 s); above it, a shuffled-hash hint at least keeps
-    // the array rows out of sort buffers. Strategy only — same rows
-    // either way.
-    val small = Tables.parquetRowCount(s, s"$d/documents.parquet") <= 1000000L
-    def vside(idAs: String, shAs: String, szAs: String) = {
-      val p = base.select(col("doc_id").as(idAs),
-        col("sorted").as(shAs), col("sz").as(szAs))
-      if (small) broadcast(p) else p.hint("shuffle_hash")
-    }
-    // `shared` via the zero-allocation sorted-merge count (the arrays
-    // are sorted-distinct by ShingleHashes' contract, and array_except
-    // preserves that): ArrayIntersect's per-row OpenHashSet + output
-    // array dominated the verification stage at the 100× probe. The
-    // bail threshold under-estimates the J ≥ 0.8 requirement by a
-    // full unit, so every SURVIVING pair runs the merge to completion
-    // (exact count, exact jaccard — oracle-identical) and every
-    // bailed pair was going to be filtered anyway.
-    cands
-      .join(vside("doc_a", "sha", "sa"), "doc_a")
-      .join(vside("doc_b", "shb", "sb"), "doc_b")
-      .withColumn("shared",
-        GraftFunctions.sorted_intersect_count(col("sha"), col("shb"),
-          expr("greatest(0L, (4 * (sa + sb)) div 9 - 1)")))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("sa") + col("sb") - col("shared")))
-      .filter(col("jaccard") >= 0.8)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    // sorted-distinct by ShingleHashes' contract, as the verification
+    // needs; array_except preserves that
+    verifiedPairs(s, d, cands, base, "sorted")
   }
 
   /** The shared-shingle pair aggregate (doc_a < doc_b, shared count,
@@ -763,9 +762,9 @@ object TextOps {
   // threshold-grazing pairs is the standard trade every production
   // fuzzy-dedup (Lee et al., SlimPajama) makes.
   def d36QualityDedup(s: SparkSession, d: String): DataFrame = {
-    val big = Tables.parquetRowCount(s, s"$d/documents.parquet") > 20000L
+    val small = Gate.small(s, "d36.lshPairs", 20000L)(docCount(s, d))
     d36From(s, d,
-      if (big) lshVerifiedPairs(s, d) else d2NgramJaccard(s, d))
+      if (small) d2NgramJaccard(s, d) else lshVerifiedPairs(s, d))
   }
 
   private[graft] def d36From(s: SparkSession, d: String,
@@ -1729,16 +1728,6 @@ object TextOps {
     }.take(topN).map { case ((l, r), n) => (l, r, n) }
   }
 
-  /** Bounded-collect gate for the BPE driver paths: the checkpointed
-    * vocab pulled once when it fits (distinct words — small at any
-    * tested SF), None above the cap (the Spark loops run unchanged).
-    */
-  private def vocabLocal(vocab: DataFrame, cap: Int = 500000)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    val head = vocab.take(cap + 1)
-    if (head.length <= cap) Some(head) else None
-  }
-
   def d33BpeTrainBatched(s: SparkSession, d: String, rounds: Int = 8,
                          batchP: Int = 4,
                          batchTrace:
@@ -1753,12 +1742,15 @@ object TextOps {
       .empty[(Long, String, String, String, Long)]
     var dry = false
     // DRIVER FAST PATH (round 18 — the bounded-collect gate g1/g13b
-    // use): below the cap every training round is pure driver work —
-    // same pair counts (exact long sums), same (n desc, l, r) UTF-8
-    // order, same acceptance prefix, same greedy fold — replacing
-    // 2 Spark jobs + one checkpoint per round. BpeSpec pins this
-    // path's output ≡ the UNTOUCHED Spark serial trainer bit-for-bit.
-    vocabLocal(vocab.select(col("syms"), col("cnt"))) match {
+    // use; the checkpointed vocab is distinct words, small at any
+    // tested SF): below the cap every training round is pure driver
+    // work — same pair counts (exact long sums), same (n desc, l, r)
+    // UTF-8 order, same acceptance prefix, same greedy fold —
+    // replacing 2 Spark jobs + one checkpoint per round. BpeSpec pins
+    // this path's output ≡ the UNTOUCHED Spark serial trainer
+    // bit-for-bit; GateSpec's forced sweep runs the Spark loop.
+    Gate.collect(s, "bpe.twin", vocab.select(col("syms"), col("cnt")),
+                 500000) match {
       case Some(rows) =>
         var lv: Array[(Array[String], Long)] =
           rows.map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
@@ -1857,7 +1849,8 @@ object TextOps {
     // fold, and the (word → token count) table returns as a local
     // relation for the corpus join. The corpus-side join + per-doc
     // aggregate stay distributed.
-    val wtok = vocabLocal(vocab.select(col("word"), col("syms"))) match {
+    val wtok = Gate.collect(s, "bpe.twin",
+        vocab.select(col("word"), col("syms")), 500000) match {
       case Some(rows) =>
         import s.implicits._
         rows.map { r =>

@@ -70,11 +70,9 @@ object EventStream {
     */
   private def scaledStateParts(s: SparkSession, d: String): Int = {
     val f = new java.io.File(s"$d/events.parquet")
-    val bytes = if (f.isFile) f.length
-                else Long.MaxValue // unknown layout: leave the conf alone
-    val maxPart = s.sessionState.conf.filesMaxPartitionBytes
-    val splits = math.max(1L, (bytes + maxPart - 1) / maxPart)
-    math.min(s.sessionState.conf.numShufflePartitions.toLong, splits).toInt
+    val parts = s.sessionState.conf.numShufflePartitions
+    if (!f.isFile) parts // unknown layout: leave the conf alone
+    else math.min(parts.toLong, graft.Tables.splits(s, f.length)).toInt
   }
 
   /** Run a finite streaming query into a memory sink and return its

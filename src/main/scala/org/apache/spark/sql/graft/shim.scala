@@ -68,6 +68,13 @@ object shim {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Post an operator's own event (`listenerBus` is `private[spark]`):
+    * how [[graft.Gate]] records its decisions.
+    */
+  def postEvent(spark: SparkSession,
+                e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    spark.sparkContext.listenerBus.post(e)
+
   /** A v2 parquet Table over an explicit file list WITH log-served
     * hive-partition values — Delta's TahoeFileIndex design: the
     * commit log already knows every file's path, size, and partition

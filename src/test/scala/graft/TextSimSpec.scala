@@ -886,10 +886,11 @@ class TextSimSpec extends SparkSpec {
     // ADVICE r18: the old callsite-string filter was vacuous — the
     // driver twin's gated take(cap+1) collect carries no
     // callSite.short, so the filter never saw it. Count JobStart
-    // EVENTS instead, with the driver twin disabled (cap 0 forces the
-    // at-scale branch): on that branch plan construction must be
-    // fully lazy — footer reads only (a 1-footer `parquet at` job per
-    // spark.read.parquet is schema inference, not a corpus action).
+    // EVENTS instead, with the driver twin disabled (Gate.AtScaleKey
+    // forces the at-scale branch): on that branch plan construction
+    // must be fully lazy — footer reads only (a 1-footer `parquet at`
+    // job per spark.read.parquet is schema inference, not a corpus
+    // action).
     // The driver twin's one bounded collect at construction is the
     // documented, allowed exception — pinned equal to this branch by
     // the "forced distributed" test below.
@@ -906,7 +907,7 @@ class TextSimSpec extends SparkSpec {
         ()
       }
     }
-    spark.conf.set("spark.graft.e9.driverCap", "0")
+    spark.conf.set(Gate.AtScaleKey, "true")
     spark.sparkContext.addSparkListener(l)
     try {
       assert(Similarity.queries("e9_knn_graph")(spark, sf) != null)
@@ -919,7 +920,7 @@ class TextSimSpec extends SparkSpec {
           s"reads only), saw stages: $all")
     } finally {
       spark.sparkContext.removeSparkListener(l)
-      spark.conf.unset("spark.graft.e9.driverCap")
+      spark.conf.unset(Gate.AtScaleKey)
     }
     // the footer-metadata count the width derives from is exact
     assert(Tables.parquetRowCount(spark, s"$sf/embeddings.parquet") ==
@@ -928,22 +929,21 @@ class TextSimSpec extends SparkSpec {
 
   test("e9/e11: forced-distributed branch equals the driver twin") {
     // ADVICE r18: the twins' caps exceed every test corpus, so the
-    // at-scale branches were dead code under test. Force them (cap 0)
-    // and pin bit-for-bit equality against the default (twin) output.
+    // at-scale branches were dead code under test. Force them
+    // (Gate.AtScaleKey) and pin bit-for-bit equality against the
+    // default (twin) output.
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.toString)
     val twinE9 = rows(Similarity.queries("e9_knn_graph")(spark, sf))
     val twinE11 = rows(Similarity.queries("e11_graph_ann")(spark, sf))
-    spark.conf.set("spark.graft.e9.driverCap", "0")
-    spark.conf.set("spark.graft.e11.buildDriverCap", "0")
+    spark.conf.set(Gate.AtScaleKey, "true")
     try {
       val distE9 = rows(Similarity.queries("e9_knn_graph")(spark, sf))
       assert(distE9 === twinE9, "e9 distributed branch drifted from twin")
       val distE11 = rows(Similarity.queries("e11_graph_ann")(spark, sf))
       assert(distE11 === twinE11, "e11 distributed build drifted from twin")
     } finally {
-      spark.conf.unset("spark.graft.e9.driverCap")
-      spark.conf.unset("spark.graft.e11.buildDriverCap")
+      spark.conf.unset(Gate.AtScaleKey)
     }
   }
 
