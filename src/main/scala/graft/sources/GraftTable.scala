@@ -2157,22 +2157,21 @@ class GraftTable private (val s: SparkSession, val root: String) {
       } finally { pinned.unpersist(); () }
     }
 
-  /** Stage the row-level images of a replace commit (CDF-enabled
-    * path): every replaced row as `delete`, the incoming batch as
-    * `insert` — Delta serves replaceWhere/dynamic-overwrite exactly
-    * this way when CDF is on. allowMissingColumns: the delete side
-    * reads the PRE-replace schema.
+  /** The row-level images of a replace commit (CDF-enabled path):
+    * every replaced row as `delete`, the incoming batch as `insert` —
+    * Delta serves replaceWhere/dynamic-overwrite exactly this way when
+    * CDF is on. allowMissingColumns: the delete side reads the
+    * PRE-replace schema.
     */
-  private def replaceCdf(removedRows: Option[DataFrame],
-                         incoming: DataFrame): Seq[(String, Long)] = {
+  private def replaceImages(removedRows: Option[DataFrame],
+                            incoming: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val ins = incoming.withColumn(ChangeTypeCol, lit("insert"))
-    val images = removedRows match {
+    removedRows match {
       case Some(dels) => dels.withColumn(ChangeTypeCol, lit("delete"))
         .unionByName(ins, allowMissingColumns = true)
       case None => ins
     }
-    stageCdf(images)
   }
 
   /** The file-level (partition-predicate) replaceWhere regime. */
@@ -2209,9 +2208,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // ever performs — the delete images need their rows
     val cdf =
       if (!cdfImages) Seq.empty
-      else replaceCdf(
+      else stageCdf(replaceImages(
         if (removes.isEmpty) None
-        else Some(new DmlScope(base).read(removes.sorted)), df)
+        else Some(new DmlScope(base).read(removes.sorted)), df))
     commit(action, adds, removes, basedOn = Some(base),
       stats = statsOf(adds),
       schema = Some(validated),
@@ -2248,14 +2247,17 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // predicate evaluates NULL (Delta keeps them via
     // Not(EqualNullSafe(cond, true))); a bare !predicate would
     // silently DROP null-evaluating rows from the CoW rewrite
-    val w = rewriteWhere(d, predicate, d.candidates(predicate))(
-      _.filter(notMatching(predicate)))
-    val incoming = dmlStage(df, d.pc)
     // CDF (opt-in): delete images are exactly the matched rows of the
-    // touched files (one more pass over files already rewritten)
-    val cdf =
+    // touched files, staged beside their rewrite
+    val w = rewriteWhere("replaceWhere", d, predicate, d.candidates(predicate))(
+      _.filter(notMatching(predicate)),
+      rows => if (!cdfImages) None
+              else Some(replaceImages(Some(rows.filter(predicate)), df)))
+    val incoming = jobPhase("replaceWhere: stage batch")(dmlStage(df, d.pc))
+    val cdf = w.map(_.cdf).getOrElse(
       if (!cdfImages) Seq.empty
-      else replaceCdf(w.map(_.rows.filter(predicate)), df)
+      else jobPhase("replaceWhere: stage CDF images")(
+        stageCdf(replaceImages(None, df))))
     commit(action, w.toSeq.flatMap(_.adds) ++ incoming,
       w.toSeq.flatMap(_.touched), basedOn = Some(base),
       stats = w.fold(Map.empty[String, String])(_.stats) ++ statsOf(incoming),
@@ -2342,12 +2344,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
       val removes = liveM.keys.toSeq.filter(p =>
         chainTokenOf(p, pcs).exists(incoming.contains))
       // CDF (opt-in): replaceWhere's image rule — replaced chains'
-      // rows as delete, the batch as insert (see replaceCdf)
+      // rows as delete, the batch as insert (see replaceImages)
       val cdf =
         if (!cdfImages) Seq.empty
-        else replaceCdf(
+        else stageCdf(replaceImages(
           if (removes.isEmpty) None
-          else Some(new DmlScope(base).read(removes.sorted)), df)
+          else Some(new DmlScope(base).read(removes.sorted)), df))
       commit(action, adds, removes, basedOn = Some(base),
         stats = statsOf(adds),
         schema = Some(partitionedSchema(df, pcs)),
@@ -2616,7 +2618,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     def read(paths: Seq[String], keepPos: Boolean = false): DataFrame =
       pc.foldLeft(readMeta(paths.map(p => p -> live(p)), sc, keepPos, cm)) {
         (acc, c) => acc.withColumn(c,
-          partRestore(c, partTypeOf(c, paths, latestVersion)))
+          partRestore(c, partTypeOf(c, paths, base)))
       }
 
     def candidates(pred: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -2659,21 +2661,48 @@ class GraftTable private (val s: SparkSession, val root: String) {
     *      the files that really contain matching rows;
     *   3. REWRITE: only those files are read again, passed through
     *      `rewrite`, restaged (under their value-dir chains on a
-    *      partitioned table) and their zero-row outputs dropped.
-    * Untouched files are never read, copied or rewritten. None, with
-    * nothing staged, when no file matches.
+    *      partitioned table) and their zero-row outputs dropped;
+    *   4. CHANGE IMAGES: `images` maps the same touched rows to the
+    *      verb's CDF images (None: the verb stages none). They stage on
+    *      [[GraftTable.stagingEc]] WHILE the rewrite stages — merge's
+    *      overlap: both passes only read the touched files and write
+    *      disjoint immutable staging dirs.
+    * `rewrite` runs before either staging starts, so a refusal it
+    * raises (update's CHECK constraints) stages nothing. Each pass is
+    * labelled `<verb>: file probe` / `stage rewrite` / `stage CDF
+    * images`. Untouched files are never read, copied or rewritten.
+    * None, with nothing staged, when no file matches.
     */
-  private def rewriteWhere(d: DmlScope, pred: Column, candidates: Seq[String])
-                          (rewrite: DataFrame => DataFrame)
+  private def rewriteWhere(verb: String, d: DmlScope, pred: Column,
+                           candidates: Seq[String])
+                          (rewrite: DataFrame => DataFrame,
+                           images: DataFrame => Option[DataFrame])
       : Option[GraftTable.Rewritten] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
     val touched =
       if (candidates.isEmpty) Seq.empty[String]
-      else d.filesOf(d.read(candidates, keepPos = true).filter(pred))
+      else jobPhase(s"$verb: file probe")(
+        d.filesOf(d.read(candidates, keepPos = true).filter(pred)))
     if (touched.isEmpty) None
     else {
       val rows = d.read(touched)
-      val (adds, st) = dropEmpty(dmlStage(rewrite(rows), d.pc))
-      Some(GraftTable.Rewritten(touched, rows, adds, st))
+      val out = rewrite(rows)
+      val cdfFuture = images(rows).fold(
+        Future.successful(Seq.empty[(String, Long)])) { img =>
+        Future(jobPhase(s"$verb: stage CDF images")(stageCdf(img)))(
+          GraftTable.stagingEc)
+      }
+      // drain the image staging before a failed rewrite propagates,
+      // so no background job outlives the verb
+      val staged =
+        try jobPhase(s"$verb: stage rewrite")(dmlStage(out, d.pc))
+        catch {
+          case e: Throwable => Await.ready(cdfFuture, Duration.Inf); throw e
+        }
+      val cdf = Await.result(cdfFuture, Duration.Inf)
+      val (adds, st) = dropEmpty(staged)
+      Some(GraftTable.Rewritten(touched, adds, st, cdf))
     }
   }
 
@@ -2724,15 +2753,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
     }
     // null-evaluating rows SURVIVE a delete (Delta's
     // Not(EqualNullSafe(cond, true))) — !pred would drop them
-    val rewritten =
-      rewriteWhere(d, pred, candidates)(_.filter(notMatching(pred)))
-    rewritten.fold(base) { w =>
-      val cdf =
-        if (!cdfImages) Seq.empty
-        else stageCdf(w.rows.filter(pred)
-          .withColumn(ChangeTypeCol, lit("delete")))
+    rewriteWhere("delete", d, pred, candidates)(
+      _.filter(notMatching(pred)),
+      rows => if (!cdfImages) None
+              else Some(rows.filter(pred).withColumn(ChangeTypeCol, lit("delete")))
+    ).fold(base) { w =>
       commit("delete", w.adds, w.touched, basedOn = Some(base),
-        stats = w.stats, schema = d.sc, cdf = cdf,
+        stats = w.stats, schema = d.sc, cdf = w.cdf,
         tolerateAppends = true, readFiles = candidates)
     }
   }
@@ -2881,33 +2908,33 @@ class GraftTable private (val s: SparkSession, val root: String) {
           readFiles = candidates)
       } finally matched.unpersist()
     }
-    rewriteWhere(d, pred, candidates) { touchedDf =>
-      val rewritten = touchedDf.select(touchedDf.columns.map { c =>
-        set.get(c) match {
-          case Some(v) => when(pred, v).otherwise(touchedDf(c)).as(c)
-          case None => touchedDf(c)
-        }
-      }.toIndexedSeq: _*)
-      enforceConstraints(rewritten, "update")
-      rewritten
-    }.fold(base) { w =>
-      val cdf =
-        if (!cdfImages) Seq.empty
-        else {
-          // post-images derive from the PRE rows with SET applied — the
-          // predicate may stop matching after the update (SET status =
-          // 'DONE' WHERE status = 'PENDING'), so re-filtering the
-          // rewritten frame would lose exactly the updated rows
-          val pre = w.rows.filter(pred)
-          val postCols = w.rows.columns.map { c =>
-            set.get(c).map(_.as(c)).getOrElse(pre(c))
+    rewriteWhere("update", d, pred, candidates)(
+      { touchedDf =>
+        val rewritten = touchedDf.select(touchedDf.columns.map { c =>
+          set.get(c) match {
+            case Some(v) => when(pred, v).otherwise(touchedDf(c)).as(c)
+            case None => touchedDf(c)
           }
-          stageCdf(pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(pre.select(postCols.toIndexedSeq: _*)
-              .withColumn(ChangeTypeCol, lit("update_postimage"))))
+        }.toIndexedSeq: _*)
+        enforceConstraints(rewritten, "update")
+        rewritten
+      },
+      rows => if (!cdfImages) None else {
+        // post-images derive from the PRE rows with SET applied — the
+        // predicate may stop matching after the update (SET status =
+        // 'DONE' WHERE status = 'PENDING'), so re-filtering the
+        // rewritten frame would lose exactly the updated rows
+        val pre = rows.filter(pred)
+        val postCols = rows.columns.map { c =>
+          set.get(c).map(_.as(c)).getOrElse(pre(c))
         }
+        Some(pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+          .unionByName(pre.select(postCols.toIndexedSeq: _*)
+            .withColumn(ChangeTypeCol, lit("update_postimage"))))
+      }
+    ).fold(base) { w =>
       commit("update", w.adds, w.touched, basedOn = Some(base),
-        stats = w.stats, schema = d.sc, cdf = cdf,
+        stats = w.stats, schema = d.sc, cdf = w.cdf,
         tolerateAppends = true, readFiles = candidates)
     }
   }
@@ -2996,11 +3023,19 @@ class GraftTable private (val s: SparkSession, val root: String) {
     *   3. ONE serializable commit — per-clause predicates fold into
     *      a single per-row action CASE over the touched-file scan
     *      joined (broadcast — the batch is endpoint-sized) to the
-    *      source; deletes drop, updates rewrite, inserts append.
+    *      source and pinned; deletes drop, updates rewrite, inserts
+    *      append. With a matched clause and no residual the insert
+    *      anti-join takes the stored keys from the pinned join's
+    *      matched rows, so the key-holding files are scanned twice
+    *      (probe, join), not three times.
     * Per-outcome CDF images (update_pre/postimage, delete, insert)
-    * stage for [[changeFeed]]. A source with duplicate keys matching
-    * one target row refuses when any MATCHED clause exists (Delta's
-    * multiple-match error); with no matched clause the join
+    * stage for [[changeFeed]] while the rewrite stages. A source with
+    * duplicate keys matching one target row refuses when any MATCHED
+    * clause exists (Delta's multiple-match error), before anything
+    * stages. The key-range job also measures the largest non-null
+    * source-key multiplicity: when every key occurs once no target
+    * row can match twice, and the per-target-row check is skipped;
+    * only a dup-keyed source pays it. With no matched clause the join
     * multiplicity collapses instead — a kept row is kept ONCE
     * (ADVICE r16). Returns the committed version, or `base` when no
     * row changed.
@@ -3197,12 +3232,22 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // 1a. matched-side stats prune: conjunction of per-key batch
     // ranges. The probe set is needed whenever matched OR notMatched
     // clauses exist — even with no matched clause, the insert
-    // anti-join must know which source keys already live in the table
+    // anti-join must know which source keys already live in the table.
+    // The same job takes the largest multiplicity of a non-null source
+    // key: grouped by the keys, min/max of each key and max(count)
+    val keysNonNull = keys.map(k => col(k).isNotNull).reduce(_ && _)
     val aggs = keys.flatMap(k =>
-      Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
+      Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k"))) :+
+      max(when(keysNonNull, col("__n"))).as("__dup")
     val range = jobPhase("merge: source pin + key range")(
-      src.agg(aggs.head, aggs.tail: _*).head)
+      src.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+        .agg(aggs.head, aggs.tail: _*).head)
     val srcEmpty = range.isNullAt(0)
+    // every non-null source key occurs once: no target row can match
+    // twice (null never equals anything, and a residual only narrows
+    // a match), so the multiple-match refusal cannot fire
+    val srcKeysUnique =
+      range.isNullAt(aggs.size - 1) || range.getLong(aggs.size - 1) <= 1L
     // size-aware SOURCE STRATEGY (round 17, Delta's merge planning):
     // an endpoint-sized batch BROADCASTS into every probe/rewrite
     // join — the fast plan for the documented upload shape. A
@@ -3390,23 +3435,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
     try {
       // Delta's multiple-match refusal: a target ROW (identified by
       // its (file, position)) hit by >1 source rows cannot
-      // deterministically update/delete
-      // dup refusal + operation metrics FUSED into one pass (r18,
-      // guide §1.2 "don't compute things you throw away" — the old
-      // shape ran a dup-count job here and a separate per-action
-      // count job after staging, both full passes over the same
-      // cached frame). One two-level aggregation computes both: per
-      // target row (__fn,__ri) the matched-source multiplicity and
-      // its action, then per action the row count and the max
-      // multiplicity. Sound because the refusal fires before any
-      // file is staged (same point as before), and when it does NOT
-      // fire every (__fn,__ri) group holds exactly one row, so group
-      // counts ≡ the old per-row action counts.
+      // deterministically update/delete. With no matched clause
+      // (joined is (__fn,__ri)-deduped) or unique source keys, every
+      // target row is one row of `joined` and a flat count per action
+      // gives the operation metrics. Otherwise dup refusal + metrics
+      // run FUSED (r18): per target row (__fn,__ri) the matched-source
+      // multiplicity and its action, then per action the row count and
+      // the max multiplicity. Sound because the refusal fires before
+      // any file is staged, and when it does NOT fire every group
+      // holds exactly one row, so group counts ≡ per-row action counts.
       val actionCounts: Map[String, Long] =
         if (ordered.isEmpty) Map.empty
-        else if (matched.isEmpty)
-          // no matched clause: joined is already (__fn,__ri)-deduped
-          // and no refusal applies — a flat count per action suffices
+        else if (matched.isEmpty || srcKeysUnique)
           jobPhase("merge: operation metrics")(
             joined.groupBy("__action").count().collect())
             .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -3449,9 +3489,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
         .select(outSchema.fields.map(outCol).toIndexedSeq: _*)
       // inserts: source keys absent from the table — any key present
       // anywhere lives in a matchedKeyFiles file by probe
-      // construction, so the anti-join set is one key-column-only
-      // (pruned, pushed-down) scan of those files. First eligible
-      // NOT MATCHED clause wins; absent columns insert NULL
+      // construction. With a matched clause those files are touched,
+      // so every present key is already a matched row of the pinned
+      // `joined`; without one, the anti-join set is one
+      // key-column-only (pruned, pushed-down) scan of those files.
+      // First eligible NOT MATCHED clause wins; absent columns insert
+      // NULL
       val inserts =
         if (notMatched.isEmpty || srcEmpty) None
         else {
@@ -3478,6 +3521,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
               val presentKeys =
                 if (matchedKeyFiles.isEmpty)
                   srcKeys.limit(0) // nothing present: every key inserts
+                else if (matched.nonEmpty)
+                  joined.filter(isMatched)
+                    .select(keys.map(k => col(s"s.$k").as(k)): _*).distinct()
                 else d.read(matchedKeyFiles).select(keys.map(col): _*)
                   .join(bcast(srcKeys), keys, "left_semi").distinct()
               srcMarked.alias("s")
@@ -4565,14 +4611,13 @@ object GraftTable {
     a == "merge" || a.startsWith("merge@")
 
   /** What [[GraftTable.rewriteWhere]] staged: the probed files it
-    * replaces, their rows as read for the rewrite (the change images
-    * filter the same frame), the non-empty rewrite outputs and their
-    * footer stats.
+    * replaces, the non-empty rewrite outputs, their footer stats, and
+    * the staged change images (empty when the verb stages none).
     */
   private final case class Rewritten(touched: Seq[String],
-                                     rows: DataFrame,
                                      adds: Seq[(String, Long)],
-                                     stats: Map[String, String])
+                                     stats: Map[String, String],
+                                     cdf: Seq[(String, Long)])
 
   /** A vacuum's reclaim set: unreferenced (relpath, bytes) files past
     * the grace window, plus the log files behind `horizon`.

@@ -825,6 +825,64 @@ class GraftDmlSpec extends SparkSpec {
       .toDF("id", "status", "price")))
     ()
   }
+
+  /** A five-row registry plus one row whose price is NULL. */
+  private def smallRegistry() = {
+    import spark.implicits._
+    GraftTable.create(spark, freshRoot(), Seq[(Long, String, Option[Double])](
+      (1L, "PENDING", Some(10.0)), (2L, "APPROVED", Some(20.0)),
+      (3L, "PENDING", Some(30.0)), (4L, "REJECTED", Some(40.0)),
+      (5L, "PENDING", Some(50.0)), (6L, "PENDING", None))
+      .toDF("id", "status", "price"))
+  }
+
+  test("an update violating a CHECK constraint refuses before staging: no commit, no CDF images") {
+    val t = smallRegistry()                                   // v1
+    t.addConstraint("price_pos", "price IS NULL OR price > 0") // v2
+    val live = t.liveFileMeta().toSet
+    val (refused, refusedJobs) = jobLabels(scala.util.Try(
+      t.update(col("id") === 1L, Map("price" -> lit(-1.0)))))
+    val e = refused.failed.getOrElse(fail("the CHECK violation must refuse"))
+    assert(e.getMessage.contains("price_pos"), e.getMessage)
+    assert(refusedJobs.contains("update: file probe"), refusedJobs)
+    assert(!refusedJobs.exists(_.startsWith("update: stage")), refusedJobs)
+    assert(t.latestVersion == 2L && t.liveFileMeta().toSet == live,
+      "a refused update must commit nothing")
+    // the same update within the constraint runs every labelled pass
+    val (v3, jobs) = jobLabels(
+      t.update(col("id") === 1L, Map("price" -> lit(1.0))))
+    assert(v3 == 3L)
+    assert(Seq("update: file probe", "update: stage rewrite",
+      "update: stage CDF images").forall(jobs.contains), jobs)
+    ()
+  }
+
+  test("update and deleteWhere change images equal the hand-computed pre/post/delete rows") {
+    import spark.implicits._
+    val t = smallRegistry()                                   // v1
+    val vu = t.update(col("status") === "PENDING" && col("id") <= 3L,
+      Map("status" -> lit("DONE"), "price" -> (col("price") + 1)))
+    // price >= 40 is NULL on id 6: that row survives and has no image
+    val vd = t.deleteWhere(col("price") >= 40.0)
+    assert(vu == 2L && vd == 3L)
+    val feed = t.changeFeed(1).get
+      .select("id", "status", "price", "_change_type", "_commit_version")
+    assert(multiset(feed) == multiset(
+      Seq[(Long, String, Option[Double], String, Long)](
+        (1L, "PENDING", Some(10.0), "update_preimage", 2L),
+        (3L, "PENDING", Some(30.0), "update_preimage", 2L),
+        (1L, "DONE", Some(11.0), "update_postimage", 2L),
+        (3L, "DONE", Some(31.0), "update_postimage", 2L),
+        (4L, "REJECTED", Some(40.0), "delete", 3L),
+        (5L, "PENDING", Some(50.0), "delete", 3L))
+        .toDF("id", "status", "price", "_change_type", "_commit_version")))
+    assert(multiset(t.read()) == multiset(
+      Seq[(Long, String, Option[Double])](
+        (1L, "DONE", Some(11.0)), (2L, "APPROVED", Some(20.0)),
+        (3L, "DONE", Some(31.0)), (6L, "PENDING", None))
+        .toDF("id", "status", "price")))
+    ()
+  }
 }
 
 /** Local-disk filesystem masquerading as an object store (a scheme

@@ -685,4 +685,50 @@ class GraftMergeIntoSpec extends SparkSpec {
     assert(e.getMessage.contains("multiple merge keys"), e.getMessage)
     ()
   }
+
+  test("multiple-match refusal is decided from the source: unique keys skip the per-row check, dup keys take it") {
+    val root = fresh("graft_mi_refusal")
+    val t = GraftTable.forPath(spark, root)
+    t.append(registry)                                        // v1
+    def mergeOf(batch: DataFrame) = t.mergeInto(batch, Seq("id"),
+      matched = Seq(MatchedUpdate(None, Map("price" -> expr("s.price")))),
+      notMatched = Seq(NotMatchedInsert(None, Map("id" -> expr("s.id"),
+        "status" -> lit("NEW"), "price" -> expr("s.price")))))
+    val DupCheck = "merge: dup refusal + metrics"
+    // (a) unique source keys: no per-target-row check, exact metrics
+    val (v2, uniqueJobs) = jobLabels(mergeOf(
+      Seq((1L, 11.0), (3L, 33.0), (6L, 66.0)).toDF("id", "price")))
+    assert(v2 == 2L)
+    assert(!uniqueJobs.contains(DupCheck), uniqueJobs)
+    assert(uniqueJobs.contains("merge: operation metrics"), uniqueJobs)
+    val info2 = t.commitInfo(v2).getOrElse(fail("no info line on the merge"))
+    assert(info2.contains("rowsUpdated=2") && info2.contains("rowsDeleted=0") &&
+      info2.contains("rowsInserted=1"), info2)
+    // (b) duplicate keys absent from the table: not a multiple match —
+    // the per-row check runs, nothing refuses, both rows insert
+    val (v3, dupAbsentJobs) = jobLabels(mergeOf(
+      Seq((2L, 22.0), (7L, 70.0), (7L, 71.0)).toDF("id", "price")))
+    assert(v3 == 3L)
+    assert(dupAbsentJobs.contains(DupCheck), dupAbsentJobs)
+    val info3 = t.commitInfo(v3).getOrElse(fail("no info line on the merge"))
+    assert(info3.contains("rowsUpdated=1") && info3.contains("rowsInserted=2"),
+      info3)
+    assert(multiset(t.read()) == multiset(Seq(
+      (1L, "PENDING", 11.0), (2L, "APPROVED", 22.0),
+      (3L, "PENDING", 33.0), (4L, "REJECTED", 40.0),
+      (5L, "PENDING", 50.0), (6L, "NEW", 66.0),
+      (7L, "NEW", 70.0), (7L, "NEW", 71.0))
+      .toDF("id", "status", "price")))
+    // (c) duplicate keys hitting one stored row refuse before staging
+    val live = t.liveFileMeta().toSet
+    val (refused, refusedJobs) = jobLabels(scala.util.Try(mergeOf(
+      Seq((5L, 1.0), (5L, 2.0)).toDF("id", "price"))))
+    val e = refused.failed.getOrElse(fail("a multiple match must refuse"))
+    assert(e.getMessage.contains("multiple source rows"), e.getMessage)
+    assert(refusedJobs.contains(DupCheck), refusedJobs)
+    assert(!refusedJobs.exists(_.startsWith("merge: stage")), refusedJobs)
+    assert(t.latestVersion == v3 && t.liveFileMeta().toSet == live,
+      "a refused merge must commit nothing")
+    ()
+  }
 }

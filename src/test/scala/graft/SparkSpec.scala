@@ -18,4 +18,29 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `f` and returns its result with the `spark.job.description`
+    * of every Spark job it launched (the phase labels GraftTable
+    * verbs set), in launch order; unlabelled jobs are left out. Wrap
+    * an expected refusal in a `Try` inside `f` to keep its labels.
+    */
+  def jobLabels[T](f: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+      (r, scala.jdk.CollectionConverters.CollectionHasAsScala(seen)
+        .asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
