@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: times the headline queries (SURVEY.md §6) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -187,34 +187,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     // optional subset override (comma-separated query names, any key in
     // SparkEntry.queries) — the scale-linearity runs (docs/SCALE_r*.md)
     // probe superlinear-risk operators that aren't all in the headline
     val bench = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(headline)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // noop sink, not count(): under a count Catalyst prunes every
-    // un-consumed expression (q16's revenue sums aren't needed to
-    // count groups), so count() under-measures real work. The noop
-    // sink consumes every column of every row and writes nothing.
-    def run(df: org.apache.spark.sql.DataFrame, name: String): Boolean =
-      try {
-        df.write.format("noop").mode("overwrite").save()
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: $e"); false
-      }
-    def build(name: String) = SparkEntry.queries(name)(spark, sfDir)
+    val spark = session()
     // quiet-capture gate (round-7 verdict: the committed artifact was
     // captured at loadavg 4.3 and read ~2× slow on the loop family).
     // Wait — bounded — for the 1-minute load to drop below the
@@ -261,83 +240,25 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       }
     }.getOrElse(Map.empty)
-    val suspects = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = bench.map { name =>
-      // PRE-WARM, untimed (round-14 verdict item 4): lifecycle queries
-      // (q7x/q8x/q9x tables, the stored ANN/edge artifacts) build
-      // their table or index on FIRST touch and serve from it
-      // thereafter — the amortization contract the b-twins/e11 already
-      // document. Paying that one-time build inside a timed sample
-      // makes min-of-N mix build and serve (the driver's r14 capture
-      // self-tagged q95 exactly this way), so every query gets one
-      // untimed full execution first; the timed samples below then
-      // measure serve-only work. This also absorbs JVM/codegen
-      // startup, which the old single q1 warm-up only did for q1.
-      spark.catalog.clearCache()
-      val w0 = System.nanoTime()
-      run(build(name), name)
-      val warmS = (System.nanoTime() - w0) / 1e9
-      // SECOND untimed warm when the first one ran long (round-16
-      // verdict item 4): a slow first warm means a lifecycle build
-      // just happened — its dirty-page writeback and freshly-written
-      // (uncached) table files would otherwise contend with the first
-      // TIMED sample. The driver's r14/r15 captures self-tagged
-      // exactly the lifecycle-cached queries (q95, then g15b/q98) at
-      // 2.2-2.5× quiet with identical plans: post-build FS state, not
-      // plans. One more untimed pass reads the table back hot.
-      baseline.get(name).filter(_ > 0).foreach { base =>
-        if (warmS > 2 * base) {
-          System.err.println(
-            f"[bench] $name warm $warmS%.2f s > 2x quiet $base%.2f s — warming again untimed")
-          spark.catalog.clearCache()
-          run(build(name), name)
-        }
-      }
-      def sample(): Option[Double] = {
-        // drop any per-query persisted data (d6/d7 cache their
-        // signatures) so every iteration times the FULL computation —
-        // min-of-N estimates the noise floor, not a warm-cache replay
-        spark.catalog.clearCache()
-        // the timer wraps BUILD as well as execution: operators with
-        // an iterative driver loop (g13b) or metadata reads (e9) do
-        // real work before the final action, and billing only the
-        // last write would under-measure them
-        val t0 = System.nanoTime()
-        val df = build(name)
-        val ok = run(df, name)
-        // a failed iteration returns near-instantly — under min() it
-        // would WIN and report a phantom fast time; drop the sample
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-      }
-      var samples = (1 to iters).flatMap(_ => sample())
-      // divergence guard: >2× the quiet baseline → re-warm untimed
-      // (the divergence itself is evidence the warm state was lost or
-      // never established) and re-run, twice; still off → self-tag
-      baseline.get(name).filter(_ > 0).foreach { base =>
-        var retries = 0
-        while (samples.nonEmpty && samples.min > 2 * base && retries < 2) {
-          System.err.println(
-            f"[bench] $name ${samples.min}%.2f s > 2x quiet $base%.2f s — re-warming + re-running")
-          spark.catalog.clearCache()
-          run(build(name), name) // untimed warm before the retry
-          samples = samples ++ sample()
-          retries += 1
-        }
-        if (samples.nonEmpty && samples.min > 2 * base) suspects += name
-      }
-      val sorted = samples.sorted
-      // -1 marks all-iterations-failed: unmistakably wrong in the
-      // artifact instead of silently fast
-      if (sorted.nonEmpty)
-        name -> (sorted.min, sorted(sorted.length / 2))
-      else name -> (-1.0, -1.0)
+      name -> measure(spark, name, iters, baseline.get(name).filter(_ > 0))(
+        SparkEntry.queries(name)(spark, sfDir))
     }
+    val suspects = results.collect { case (k, t) if t.suspect => k }
+    val failed = results.collect { case (k, t) if t.samples.isEmpty => k }
     val loadEnd = loadavg()
-    val qs = results.map { case (k, (mn, _)) => "\"" + k + "\":" + mn }
-      .mkString("{", ",", "}")
-    val qsMed = results.map { case (k, (_, md)) => "\"" + k + "\":" + md }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2._1).sum
+    // -1 marks all-iterations-failed: unmistakably wrong in the
+    // artifact instead of silently fast; failed queries are listed in
+    // `failed` and left out of `total`
+    def perQuery(f: Seq[Double] => Double) = results.map { case (k, t) =>
+      k -> (if (t.samples.isEmpty) -1.0 else f(t.samples))
+    }
+    val mins = perQuery(_.head)
+    def obj(kv: Seq[(String, Double)], fmt: Double => String = _.toString) =
+      kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val qs = obj(mins)
+    val qsMed = obj(perQuery(ss => ss(ss.length / 2)))
+    val total = results.flatMap(_._2.samples.headOption).sum
     // plan fingerprints: {shuffles, bhj, wscg} per query, so a timing
     // regression is self-diagnosing (same fingerprint → noise or data;
     // changed fingerprint → the plan moved). Captured in an AQE-off
@@ -355,12 +276,13 @@ object Bench {
       try {
         val plan = SparkEntry.queries(name)(fpSession, sfDir)
           .queryExecution.executedPlan.toString
-        def n(pat: String) = pat.r.findAllIn(plan).length
-        val shuffles = n("Exchange hashpartitioning") + n("Exchange rangepartitioning")
-        Some(s""""$name":{"shuffles":$shuffles,"bhj":${n("BroadcastHashJoin")},"wscg":${n("\\*\\(\\d+\\)")}}""")
+        val f = graft.tools.PlanAudit.fingerprint(plan)
+        Some(s""""$name":{"shuffles":${f.shuffles},"bhj":${f.bhj},"wscg":${f.wscg}}""")
       } catch { case _: Throwable => None }
     }.mkString("{", ",", "}")
-    val suspectJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def arr(names: Seq[String]) = names.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val suspectJson = arr(suspects)
+    val failedJson = arr(failed)
     val baseJson = baselinePath.map("\"" + _ + "\"").getOrElse("null")
     // one-time layout/build costs the pre-warm paid (stored-artifact
     // amortization: the timed samples are serve-only, so the artifact
@@ -368,7 +290,7 @@ object Bench {
     val buildJson = graft.tools.BuildCosts.snapshot().toSeq.sorted
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$qsMed,"plans":$plans,"build_costs":$buildJson,"sf":"$sfDir","iterations":$iters,"loadavg":{"start":$loadStart,"end":$loadEnd},"contended":$contended,"suspect":$suspectJson,"baseline":$baseJson,"captured_at":"$capturedAt"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$qsMed,"plans":$plans,"build_costs":$buildJson,"sf":"$sfDir","iterations":$iters,"loadavg":{"start":$loadStart,"end":$loadEnd},"contended":$contended,"suspect":$suspectJson,"failed":$failedJson,"baseline":$baseJson,"captured_at":"$capturedAt"}"""
     // The driver's parser reads a bounded TAIL WINDOW (~2,000 chars) of
     // stdout, and the full artifact line above is ~4.5 KB — so printing
     // it last leaves the parser staring at a mid-JSON fragment (the
@@ -382,10 +304,8 @@ object Bench {
     // Locale.ROOT: a comma decimal separator would corrupt the JSON
     def ms(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def compactLine(names: Set[String]): String = {
-      val qsCompact = results.filter(r => names(r._1))
-        .map { case (k, (mn, _)) => "\"" + k + "\":" + ms(mn) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsCompact,"sf":"$sfDir","iterations":$iters,"contended":$contended,"suspect":$suspectJson,"n_queries":${results.length},"artifact":"BENCH.json"}"""
+      val qsCompact = obj(mins.filter(r => names(r._1)), ms)
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsCompact,"sf":"$sfDir","iterations":$iters,"contended":$contended,"suspect":$suspectJson,"failed":$failedJson,"n_queries":${results.length},"artifact":"BENCH.json"}"""
     }
     // budgeted rotation (see compactRotation): rotate mature entries
     // out of the stdout map — they stay in BENCH.json — until the
@@ -402,8 +322,114 @@ object Bench {
     // hard backstop: if the set STILL overflows the window, drop the
     // per-query map rather than overflow
     val compact = if (compactBudgeted.length <= 1500) compactBudgeted
-      else s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","iterations":$iters,"contended":$contended,"suspect":$suspectJson,"n_queries":${results.length},"artifact":"BENCH.json"}"""
+      else s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","iterations":$iters,"contended":$contended,"suspect":$suspectJson,"failed":$failedJson,"n_queries":${results.length},"artifact":"BENCH.json"}"""
     spark.stop()
     println(compact)
+  }
+
+  /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 32) with
+    * the graft extensions, 32 shuffle partitions and AQE on.
+    */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** One query's timed samples in seconds, sorted (empty when every
+    * sample failed), and whether they stayed > 2x its quiet baseline.
+    */
+  private[graft] case class Timing(samples: Seq[Double], suspect: Boolean)
+
+  /** Times one query: an untimed warm-up, then `iters` samples of
+    * `build` plus a noop write, against its quiet baseline `base`. A
+    * failure in either (streaming entries and g13b execute at build)
+    * drops that sample instead of ending the run.
+    */
+  private[graft] def measure(spark: SparkSession, name: String, iters: Int,
+                             base: Option[Double])
+                            (build: => DataFrame): Timing = {
+    // noop sink, not count(): under a count Catalyst prunes every
+    // un-consumed expression (q16's revenue sums aren't needed to
+    // count groups), so count() under-measures real work. The noop
+    // sink consumes every column of every row and writes nothing.
+    def run(): Boolean =
+      try {
+        build.write.format("noop").mode("overwrite").save()
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e"); false
+      }
+    // PRE-WARM, untimed (round-14 verdict item 4): lifecycle queries
+    // (q7x/q8x/q9x tables, the stored ANN/edge artifacts) build
+    // their table or index on FIRST touch and serve from it
+    // thereafter — the amortization contract the b-twins/e11 already
+    // document. Paying that one-time build inside a timed sample
+    // makes min-of-N mix build and serve (the driver's r14 capture
+    // self-tagged q95 exactly this way), so every query gets one
+    // untimed full execution first; the timed samples below then
+    // measure serve-only work. This also absorbs JVM/codegen
+    // startup, which the old single q1 warm-up only did for q1.
+    spark.catalog.clearCache()
+    val w0 = System.nanoTime()
+    run()
+    val warmS = (System.nanoTime() - w0) / 1e9
+    // SECOND untimed warm when the first one ran long (round-16
+    // verdict item 4): a slow first warm means a lifecycle build
+    // just happened — its dirty-page writeback and freshly-written
+    // (uncached) table files would otherwise contend with the first
+    // TIMED sample. The driver's r14/r15 captures self-tagged
+    // exactly the lifecycle-cached queries (q95, then g15b/q98) at
+    // 2.2-2.5× quiet with identical plans: post-build FS state, not
+    // plans. One more untimed pass reads the table back hot.
+    base.foreach { b =>
+      if (warmS > 2 * b) {
+        System.err.println(
+          f"[bench] $name warm $warmS%.2f s > 2x quiet $b%.2f s — warming again untimed")
+        spark.catalog.clearCache()
+        run()
+      }
+    }
+    def sample(): Option[Double] = {
+      // drop any per-query persisted data (d6/d7 cache their
+      // signatures) so every iteration times the FULL computation —
+      // min-of-N estimates the noise floor, not a warm-cache replay
+      spark.catalog.clearCache()
+      // the timer wraps BUILD as well as execution: operators with
+      // an iterative driver loop (g13b) or metadata reads (e9) do
+      // real work before the final action, and billing only the
+      // last write would under-measure them
+      val t0 = System.nanoTime()
+      val ok = run()
+      // a failed iteration returns near-instantly — under min() it
+      // would WIN and report a phantom fast time; drop the sample
+      if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+    }
+    var samples = (1 to iters).flatMap(_ => sample())
+    // divergence guard: >2× the quiet baseline → re-warm untimed
+    // (the divergence itself is evidence the warm state was lost or
+    // never established) and re-run, twice; still off → self-tag
+    var suspect = false
+    base.foreach { b =>
+      var retries = 0
+      while (samples.nonEmpty && samples.min > 2 * b && retries < 2) {
+        System.err.println(
+          f"[bench] $name ${samples.min}%.2f s > 2x quiet $b%.2f s — re-warming + re-running")
+        spark.catalog.clearCache()
+        run() // untimed warm before the retry
+        samples = samples ++ sample()
+        retries += 1
+      }
+      suspect = samples.nonEmpty && samples.min > 2 * b
+    }
+    Timing(samples.sorted, suspect)
   }
 }

@@ -330,4 +330,54 @@ class CodegenSpec extends SparkSpec {
       }
     }
   }
+
+  test("text, vector and extension-SQL expressions reduce alike compiled or interpreted") {
+    // cosine_sim, minhash_sig_long, simhash64, shingle_hashes_pos and
+    // long_dot have no other CODEGEN_ONLY check; rolling_hash also
+    // resolves through the injected GraftExtensions SQL path
+    def reductions(): Seq[Any] = {
+      val docs = Tables.documents(spark, sf)
+      val e = Tables.embeddings(spark, sf)
+      val toks = docs
+        .select(expr("filter(split(text, ' '), x -> x != '')").as("toks"))
+      def xorOf(arr: org.apache.spark.sql.Column) =
+        toks.select(arr.as("g"))
+          .select(expr("aggregate(g, 0L, (a, v) -> a ^ v)").as("x"))
+          .agg(expr("bit_xor(x)")).head.getLong(0)
+      Seq[Any](
+        docs.select(GraftFunctions.rolling_hash(col("text")).as("h"))
+          .agg(sum("h")).head.getLong(0),
+        e.crossJoin(e.select(col("embedding").as("e2")).limit(1))
+          .select(GraftFunctions.cosine_sim(col("embedding"), col("e2")).as("c"))
+          .agg(sum("c")).head.getDouble(0),
+        xorOf(GraftFunctions.minhash_sig_long(
+          GraftFunctions.shingle_hashes(col("toks"), 3), 64)),
+        toks.select(GraftFunctions.simhash64(col("toks")).as("h"))
+          .agg(expr("bit_xor(h)")).head.getLong(0),
+        xorOf(GraftFunctions.shingle_hashes_pos(col("toks"), 5)),
+        e.select(expr("transform(embedding, x -> " +
+            "cast(floor(cast(x as double) * 1000) as bigint))").as("q"))
+          .select(GraftFunctions.long_dot(col("q"), col("q")).as("dd"))
+          .agg(expr("bit_xor(dd)")).head.getLong(0),
+        spark.sql("SELECT rolling_hash('graft') AS h").head.getLong(0))
+    }
+    // CODEGEN_ONLY with fallback off fails on a doGenCode bug instead
+    // of interpreting; NO_CODEGEN without whole-stage codegen is the
+    // interpreted reference
+    def under(confs: (String, String)*): Seq[Any] = {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try reductions()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val compiled = under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = under("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(compiled == interpreted)
+    assert(compiled.count(_ != 0L) >= 6, s"degenerate reductions: $compiled")
+  }
 }

@@ -2,9 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.graft.shim
-
 /** The forced sweep over every size gate ([[Gate]]): each gated
   * declared query runs at sf0.01 once with defaults (the small-input
   * sides — driver twins, broadcasts, naive plans, widened scans) and
@@ -49,27 +46,15 @@ class GateSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     */
   private def sweep(mode: String, forced: Boolean)
       : Map[String, Seq[Gate.Decision]] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Gate.Decision]
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case d: Gate.Decision => seen.add(d); ()
-        case _ => ()
-      }
-    }
     graft.operators.Similarity.e13Idx.clear()
-    spark.sparkContext.addSparkListener(l)
     if (forced) spark.conf.set(Gate.AtScaleKey, "true")
     try gated.map { q =>
-      seen.clear()
-      SparkEntry.queries(q)(spark, sf01)
-        .write.mode("overwrite").parquet(s"$out/$mode/$q")
-      shim.drainListenerBus(spark)
-      q -> seen.asScala.toSeq
+      val (_, trace) = graft.tools.Trace.capture(spark)(
+        SparkEntry.queries(q)(spark, sf01)
+          .write.mode("overwrite").parquet(s"$out/$mode/$q"))
+      q -> trace.gates
     }.toMap
-    finally {
-      spark.conf.unset(Gate.AtScaleKey)
-      spark.sparkContext.removeSparkListener(l)
-    }
+    finally spark.conf.unset(Gate.AtScaleKey)
   }
 
   private lazy val (byDefault, byForce) =

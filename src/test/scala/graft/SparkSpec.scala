@@ -25,22 +25,7 @@ trait SparkSpec extends AnyFunSuite {
     * an expected refusal in a `Try` inside `f` to keep its labels.
     */
   def jobLabels[T](f: => T): (T, Seq[String]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
-      (r, scala.jdk.CollectionConverters.CollectionHasAsScala(seen)
-        .asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (r, trace) = graft.tools.Trace.capture(spark)(f)
+    (r, trace.jobs.flatMap(j => Option(j.description)))
   }
 }

@@ -897,31 +897,16 @@ class TextSimSpec extends SparkSpec {
     // classify jobs by their STAGE names (always carry the creation
     // callsite), not the callSite.short job property (absent on the
     // collect the old filter was meant to catch)
-    val sites = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        j.stageInfos.foreach(st =>
-          sites.add(st.name.takeWhile(_ != '\n')))
-        ()
-      }
-    }
     spark.conf.set(Gate.AtScaleKey, "true")
-    spark.sparkContext.addSparkListener(l)
     try {
-      assert(Similarity.queries("e9_knn_graph")(spark, sf) != null)
-      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
-      val all = scala.jdk.CollectionConverters.ListHasAsScala(sites)
-        .asScala.toList
+      val (_, trace) = graft.tools.Trace.capture(spark)(
+        assert(Similarity.queries("e9_knn_graph")(spark, sf) != null))
+      val all = trace.jobs.flatMap(_.stages).toList
       val bad = all.filterNot(_.startsWith("parquet at"))
       assert(bad.isEmpty,
         s"at-scale e9 plan construction must be lazy (footer/schema " +
           s"reads only), saw stages: $all")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.conf.unset(Gate.AtScaleKey)
-    }
+    } finally spark.conf.unset(Gate.AtScaleKey)
     // the footer-metadata count the width derives from is exact
     assert(Tables.parquetRowCount(spark, s"$sf/embeddings.parquet") ==
       Tables.embeddings(spark, sf).count())
