@@ -391,14 +391,13 @@ object GraftDataSource {
       // the ROW-LEVEL change feed as a stream: payload schema from the
       // log (falling back to inference for legacy logs)
       val t = GraftTable.forPath(spark, path)
-      require(t.latestVersion > 0, s"no graft table at $path (empty log)")
-      val payload = t.schemaAt(t.latestVersion)
-        .getOrElse(t.readVersion(t.latestVersion).schema)
+      val at = t.snapshot()
+      require(at.version > 0, s"no graft table at $path (empty log)")
+      val payload = at.schema.getOrElse(t.readVersion(at.version).schema)
       // partitioned tables serve their keys too: append slices
       // restore them from paths through the log-backed index, DML
       // image files store them as columns (the dmlRead restore)
-      return new GraftCdfStreamTable(spark, path, payload,
-        t.partMetaAt(t.latestVersion))
+      return new GraftCdfStreamTable(spark, path, payload, at.partMeta)
     }
     val version = Option(options.get("versionAsOf")).map(_.toLong)
       .orElse(Option(options.get("timestampAsOf")).map { ts =>
@@ -419,7 +418,8 @@ object GraftDataSource {
                                      batchWritable: Boolean = false)
       : Table = {
     val t = GraftTable.forPath(spark, path)
-    val version = versionOpt.getOrElse(t.latestVersion)
+    val at = versionOpt.fold(t.snapshot())(t.snapshot)
+    val version = versionOpt.getOrElse(at.version)
     if (version <= 0) new EmptyTable(path)
     else {
       // READER-FEATURE gates (Delta's protocol discipline): this path
@@ -430,8 +430,9 @@ object GraftDataSource {
       // the WRITE surfaces (the streaming sink, SQL DML routing)
       // still resolve the table; the verb API reads apply both.
       val readRefusal: Option[String] =
-        t.rawReadRefusal(version, "graft raw-parquet scan")
-      val meta = t.fileMetaAsOf(version)
+        t.rawReadRefusal(at, "graft raw-parquet scan")
+      val meta = at.files.toSeq.sortBy(_._1)
+        .map { case (p, m) => (t.absOf(p), m.bytes, m.stats) }
       // HIVE-PARTITIONED snapshots serve the partition columns too
       // (Delta's contract — the values live in the paths, and a read
       // that silently dropped the key column would lose data): the
@@ -441,8 +442,8 @@ object GraftDataSource {
       // parsed from its value-dir chain, so staged (data/<uuid>/k=v),
       // converted (k=v at root) and cloned (absolute external paths)
       // layouts all restore uniformly.
-      val pcs = t.partMetaAt(version)
-      val payload = t.schemaAt(version)
+      val pcs = at.partMeta
+      val payload = at.schema
       val tableOver: Option[(Seq[(String, Long)], String) => Table] =
         if (pcs.isEmpty || payload.isEmpty) None
         else {

@@ -260,8 +260,9 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
     // uses, then prunes to the template's read schema — so the
     // PartitionedFiles this slice emits carry partition values of
     // exactly the arity the template's reader factory expects.
-    val pcs = table.partMetaAt(e0.version)
-    val payload = table.schemaAt(e0.version)
+    val at = table.snapshot(e0.version)
+    val pcs = at.partMeta
+    val payload = at.schema
     val label = s"graft-stream:$root@(${s0.json()},${e0.json()}]"
     val slice =
       if (pcs.isEmpty || payload.isEmpty)

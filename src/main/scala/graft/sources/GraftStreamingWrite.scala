@@ -69,9 +69,7 @@ private[sources] class GraftWriteBuilder(spark: SparkSession, path: String,
     // the writers see them, so each task opens O(its own values)
     // files instead of every task opening every partition's file —
     // the dynamic-partition write discipline at 1000 executors
-    private val partCols =
-      GraftTable.forPath(spark, path).partMetaAt(
-        GraftTable.forPath(spark, path).latestVersion)
+    private val partCols = GraftTable.forPath(spark, path).snapshot().partMeta
     override def requiredDistribution
         : org.apache.spark.sql.connector.distributions.Distribution =
       if (partCols.isEmpty)
@@ -116,7 +114,7 @@ private[sources] class GraftWriteBuilder(spark: SparkSession, path: String,
   */
 private object GraftPartitionedStaging {
   def partCols(t: GraftTable): Seq[GraftTable.PartMeta] =
-    t.partMetaAt(t.latestVersion)
+    t.snapshot().partMeta
 
   /** (payload schema, key (name, type, ordinal-in-full) list) — the
     * incoming schema must carry every recorded key with its recorded

@@ -93,28 +93,37 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private val fs: FileSystem = rootPath.getFileSystem(conf)
   private def logDir = new Path(rootPath, LogDir)
 
-  // ---- log resolution -------------------------------------------------
+  // ---- log resolution: one listing, one snapshot per version ----------
+  //
+  // Every question about version v — live files, schema, constraints,
+  // bloom index, column mapping, partition keys, protocol, committed
+  // tags — is read from ONE immutable [[Snapshot]] of v. A snapshot
+  // is built by folding commits: forward from the instance's memo (the
+  // newest snapshot it resolved or committed) when v is at most a
+  // checkpoint interval ahead of it, else — and always on a fresh
+  // instance — cold from the newest checkpoint ≤ v. The memo holds
+  // one snapshot, so driver memory is O(live files), never
+  // O(versions). The log-directory LISTING is the freshness signal a
+  // concurrent writer advances, so it is never cached: a verb lists
+  // once to pin its base, and once per commit attempt.
+
+  private def log(): LogListing = {
+    val names =
+      try fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    def numbered(prefix: String) = names.flatMap { n =>
+      if (n.startsWith(prefix) && n.endsWith(Suffix))
+        scala.util.Try(n.substring(prefix.length,
+          n.length - Suffix.length).toLong).toOption
+      else None
+    }.sorted
+    LogListing(numbered(VerPrefix), numbered(CkptPrefix))
+  }
 
   /** Committed versions present in the log, ascending. */
-  def versions(): Seq[Long] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).toSeq.map(_.getPath.getName).flatMap { n =>
-      if (n.startsWith(VerPrefix) && n.endsWith(Suffix))
-        scala.util.Try(n.substring(VerPrefix.length,
-          n.length - Suffix.length).toLong).toOption
-      else None
-    }.sorted
+  def versions(): Seq[Long] = log().versions
 
-  def latestVersion: Long = versions().lastOption.getOrElse(0L)
-
-  private def checkpointVersions(): Seq[Long] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).toSeq.map(_.getPath.getName).flatMap { n =>
-      if (n.startsWith(CkptPrefix) && n.endsWith(Suffix))
-        scala.util.Try(n.substring(CkptPrefix.length,
-          n.length - Suffix.length).toLong).toOption
-      else None
-    }.sorted
+  def latestVersion: Long = log().latest
 
   private def readLines(p: Path): Seq[String] = {
     val in = fs.open(p)
@@ -126,38 +135,75 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private def commitPath(v: Long) = new Path(logDir, f"$VerPrefix$v%012d$Suffix")
   private def ckptPath(v: Long) = new Path(logDir, f"$CkptPrefix$v%012d$Suffix")
 
-  private[graft] case class Commit(version: Long, action: String,
-                                   adds: Seq[AddFile],
-                                   removes: Seq[String],
-                                   cdf: Seq[(String, Long)],
-                                   schemaJson: Option[String],
-                                   constraintsJson: Option[String],
-                                   tsMillis: Long,
-                                   dvs: Seq[(String, DvRef)] = Seq.empty,
-                                   bloomIdxJson: Option[String] = None,
-                                   colmapJson: Option[String] = None,
-                                   partMetaJson: Option[String] = None,
-                                   protocolJson: Option[String] = None,
-                                   info: Option[String] = None)
+  private[graft] type Commit = graft.sources.Commit
 
-  /** Commit files and checkpoints are IMMUTABLE once published
-    * (single-winner atomic publish; vacuum only ever deletes behind
-    * the retention horizon, and resolution never consults versions
-    * the fresh listing doesn't return) — so their PARSES are cached
-    * per table instance. At a million-commit log this turns the
-    * repeated metadata resolutions of one DML flow (live set +
-    * schema + constraints + bloom index + column mapping each walk
-    * the post-checkpoint tail) from five log re-reads into one.
-    * `versions()`/`latestVersion` stay uncached: they are the
-    * freshness signal a concurrent writer advances.
+  /** Parsed commit files, per table instance. Commit files are
+    * IMMUTABLE once published (single-winner atomic publish; vacuum
+    * only deletes behind the retention horizon), so a parse never
+    * goes stale: the change feeds, the history and a writer's
+    * conflict check re-read commits the snapshot fold already parsed.
     */
   private val commitCache =
     scala.collection.concurrent.TrieMap.empty[Long, Commit]
-  private val ckptCache =
-    scala.collection.concurrent.TrieMap.empty[Long, Seq[String]]
 
-  private def ckptLines(v: Long): Seq[String] =
-    ckptCache.getOrElseUpdate(v, readLines(ckptPath(v)))
+  private[graft] def readCommit(v: Long): Commit =
+    commitCache.getOrElseUpdate(v, Commit.parse(v, readLines(commitPath(v))))
+
+  /** The newest snapshot this instance resolved or committed. */
+  private val memo =
+    new java.util.concurrent.atomic.AtomicReference[Snapshot](Snapshot.empty)
+
+  /** The latest snapshot — the one a verb pins: one listing. */
+  private[graft] def snapshot(): Snapshot = {
+    val l = log()
+    resolve(l.latest, l)
+  }
+
+  /** The snapshot of version `v`; lists the log only when it has to
+    * fold cold. A fresh instance (empty memo) always folds cold, so it
+    * starts from the newest checkpoint ≤ v: a checkpoint may hold state
+    * no commit does (the tag ledger a clone seeds into its v1
+    * checkpoint).
+    */
+  private[graft] def snapshot(v: Long): Snapshot = resolve(v, log())
+
+  private def resolve(v: Long, listing: => LogListing): Snapshot =
+    if (v <= 0) Snapshot.empty
+    else {
+      val m = memo.get
+      val s =
+        if (m.version == v) m
+        else if (m.version > 0 && m.version < v &&
+                 v - m.version <= CheckpointEvery)
+          forward(m, v).getOrElse(cold(v, listing))
+        else cold(v, listing)
+      if (s.version == v) remember(s)
+      s
+    }
+
+  private def remember(s: Snapshot): Unit = {
+    memo.accumulateAndGet(s, (a, b) => if (b.version >= a.version) b else a)
+    ()
+  }
+
+  /** `from` with the commits in (from, v] applied; None when one of
+    * them is gone (vacuumed), so the caller folds cold instead.
+    */
+  private def forward(from: Snapshot, v: Long): Option[Snapshot] =
+    try Some(((from.version + 1) to v).foldLeft(from)((s, x) => s(readCommit(x))))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The cold fold: the newest checkpoint ≤ v, then the listed commits
+    * after it — O(checkpoint interval) log files, not O(table age).
+    */
+  private def cold(v: Long, l: LogListing): Snapshot = {
+    val start = l.checkpoints.filter(_ <= v).lastOption.fold(Snapshot.empty) { cv =>
+      Snapshot.fromCheckpoint(cv, readLines(ckptPath(cv)), ckptSidecar(cv),
+        l.versions.filter(_ <= cv).map(readCommit(_).action))
+    }
+    l.versions.filter(x => x > start.version && x <= v)
+      .foldLeft(start)((s, x) => s(readCommit(x)))
+  }
 
   // ---- parquet checkpoint sidecar -------------------------------------
   //
@@ -175,70 +221,50 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private def ckptParquetPath(v: Long) =
     new Path(logDir, f"$CkptPrefix$v%012d.parquet")
 
-  private val ckptMetaCache =
-    scala.collection.concurrent.TrieMap.empty[Long, Map[String, FileMeta]]
-
-  /** The live (relpath → meta) set RECORDED by checkpoint `cv` —
-    * parquet sidecar when present, else the text body's file/filedv
-    * lines. Cached like the line parse (checkpoints are immutable).
+  /** The live (relpath → meta) set the parquet sidecar of checkpoint
+    * `cv` records; None when there is no readable sidecar.
     */
-  private def ckptFileMeta(cv: Long): Map[String, FileMeta] =
-    ckptMetaCache.getOrElseUpdate(cv, {
-      val fromSidecar =
-        if (!fs.exists(ckptParquetPath(cv))) None
-        else scala.util.Try {
-          val rd = org.apache.parquet.hadoop.ParquetReader
-            .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              ckptParquetPath(cv))
-            .withConf(conf).build()
-          try {
-            val b = Map.newBuilder[String, FileMeta]
-            var g = rd.read()
-            while (g != null) {
-              val stats =
-                if (g.getFieldRepetitionCount("stats") > 0)
-                  Some(g.getString("stats", 0))
-                else None
-              val dv =
-                if (g.getFieldRepetitionCount("dv_path") > 0)
-                  Some(DvRef(g.getString("dv_path", 0),
-                    g.getLong("dv_bytes", 0), g.getLong("dv_deleted", 0)))
-                else None
-              b += g.getString("path", 0) ->
-                FileMeta(g.getLong("bytes", 0), stats, dv)
-              g = rd.read()
-            }
-            b.result()
-          } finally rd.close()
-        }.toOption
-      fromSidecar.getOrElse {
-        val lines = ckptLines(cv)
-        val files = lines.flatMap { l =>
-          val f = l.split("\t", 4)
-          if (f(0) == "file")
-            Some((f(1), FileMeta(f(2).toLong,
-              if (f.length >= 4 && f(3).nonEmpty) Some(f(3)) else None)))
-          else None // header / tag ledger / schema / filedv lines
-        }.toMap
-        // filedv lines re-attach deletion vectors to their data files
-        lines.foldLeft(files) { (m, l) =>
-          val f = l.split("\t", 5)
-          if (f(0) == "filedv" && m.contains(f(1)))
-            m.updated(f(1), m(f(1)).copy(dv =
-              Some(DvRef(f(2), f(3).toLong, f(4).toLong))))
-          else m
+  private def ckptSidecar(cv: Long): Option[Map[String, FileMeta]] =
+    if (!fs.exists(ckptParquetPath(cv))) None
+    else scala.util.Try {
+      val rd = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          ckptParquetPath(cv))
+        .withConf(conf).build()
+      try {
+        val b = Map.newBuilder[String, FileMeta]
+        var g = rd.read()
+        while (g != null) {
+          val stats =
+            if (g.getFieldRepetitionCount("stats") > 0)
+              Some(g.getString("stats", 0))
+            else None
+          val dv =
+            if (g.getFieldRepetitionCount("dv_path") > 0)
+              Some(DvRef(g.getString("dv_path", 0),
+                g.getLong("dv_bytes", 0), g.getLong("dv_deleted", 0)))
+            else None
+          b += g.getString("path", 0) ->
+            FileMeta(g.getLong("bytes", 0), stats, dv)
+          g = rd.read()
         }
-      }
-    })
+        b.result()
+      } finally rd.close()
+    }.toOption
+
+  /** Publish the checkpoint of `at` (text, then the parquet sidecar). */
+  private def writeCheckpoint(at: Snapshot): Unit =
+    if (publish(ckptPath(at.version), at.checkpointText.getBytes(UTF_8)))
+      writeCkptParquet(at)
 
   /** Write the parquet sidecar for an already-published checkpoint.
     * Non-critical by design: a failure leaves the text checkpoint
     * fully authoritative (the read path falls back), so the commit
     * that triggered the checkpoint never aborts on sidecar IO.
     */
-  private def writeCkptParquet(v: Long): Unit =
+  private def writeCkptParquet(at: Snapshot): Unit =
     try {
-      val dst = ckptParquetPath(v)
+      val dst = ckptParquetPath(at.version)
       if (fs.exists(dst)) return
       val schema = org.apache.parquet.schema.MessageTypeParser
         .parseMessageType(GraftTable.CkptParquetSchema)
@@ -252,7 +278,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       val gf = new org.apache.parquet.example.data.simple
         .SimpleGroupFactory(schema)
       try {
-        resolveMeta(v).toSeq.sortBy(_._1).foreach { case (p, m) =>
+        at.files.toSeq.sortBy(_._1).foreach { case (p, m) =>
           val g = gf.newGroup()
           g.append("path", p)
           g.append("bytes", m.bytes)
@@ -270,81 +296,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     } catch {
       case e: Exception =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"parquet checkpoint sidecar v$v not written " +
+          s"parquet checkpoint sidecar v${at.version} not written " +
             s"(text checkpoint remains authoritative): $e")
     }
-
-  private[graft] def readCommit(v: Long): Commit =
-    commitCache.getOrElseUpdate(v, readCommitUncached(v))
-
-  private def readCommitUncached(v: Long): Commit = {
-    val lines = readLines(commitPath(v))
-    // header: graft-commit \t version \t action [\t epoch-millis]
-    // (the timestamp field is round-9; older logs read as ts = -1)
-    val hdr = lines.head.split("\t", 4)
-    val (ver, action) = (hdr(1), hdr(2))
-    val ts = if (hdr.length >= 4) hdr(3).toLong else -1L // -1: pre-ts log
-    val adds = Seq.newBuilder[AddFile]
-    val rems = Seq.newBuilder[String]
-    val cdfs = Seq.newBuilder[(String, Long)]
-    val dvs = Seq.newBuilder[(String, DvRef)]
-    var schema: Option[String] = None
-    var constraints: Option[String] = None
-    var bloomIdx: Option[String] = None
-    var colmap: Option[String] = None
-    var partMeta: Option[String] = None
-    var protocol: Option[String] = None
-    var info: Option[String] = None
-    lines.tail.foreach { l =>
-      val f = l.split("\t", 5)
-      f(0) match {
-        case "add" =>
-          adds += AddFile(f(1), f(2).toLong,
-            if (f.length >= 4 && f(3).nonEmpty) Some(f(3)) else None)
-        case "remove"      => rems += f(1)
-        case "cdf"         => cdfs += ((f(1), f(2).toLong))
-        case "dv"          => // dv \t dataRel \t dvRel \t bytes \t nDeleted
-          dvs += ((f(1), DvRef(f(2), f(3).toLong, f(4).toLong)))
-        case "schema"      => schema = Some(l.split("\t", 2)(1))
-        case "constraints" => constraints = Some(l.split("\t", 2)(1))
-        case "bloomidx"    => bloomIdx = Some(l.split("\t", 2)(1))
-        case "colmap"      => colmap = Some(l.split("\t", 2)(1))
-        case "partmeta"    => partMeta = Some(l.split("\t", 2)(1))
-        case "protocol"    => protocol = Some(l.split("\t", 2)(1))
-        case "info"        => info = Some(l.split("\t", 2)(1))
-        case other => sys.error(s"corrupt commit v$v: unknown action $other")
-      }
-    }
-    Commit(ver.toLong, action, adds.result(), rems.result(), cdfs.result(),
-      schema, constraints, ts, dvs.result(), bloomIdx, colmap, partMeta,
-      protocol, info)
-  }
-
-  /** The live (relpath → meta) set at version `v` — checkpoint ≤ v
-    * plus the deltas after it; O(checkpointEvery) log files read, not
-    * O(table age). Meta carries bytes + the add-time footer stats.
-    */
-  private def resolveMeta(v: Long): Map[String, FileMeta] = {
-    if (v <= 0) return Map.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val start: Map[String, FileMeta] = base match {
-      case None => Map.empty
-      case Some(cv) => ckptFileMeta(cv) // sidecar-first, text fallback
-    }
-    val from = base.getOrElse(0L)
-    versions().filter(x => x > from && x <= v)
-      .foldLeft(start) { (live, cv) =>
-        val c = readCommit(cv)
-        val applied = (live -- c.removes) ++
-          c.adds.map(a => a.path -> FileMeta(a.bytes, a.stats))
-        // dv actions attach to files still live after the fold above;
-        // a dv for a file this same commit removed is dropped with it
-        c.dvs.foldLeft(applied) { (m, d) =>
-          if (m.contains(d._1)) m.updated(d._1, m(d._1).copy(dv = Some(d._2)))
-          else m
-        }
-      }
-  }
 
   /** True when any live file of version `v` carries a deletion
     * vector — the READER FEATURE gate: paths that serve raw parquet
@@ -352,55 +306,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * rather than silently resurrect deleted rows (Delta's
     * reader-version protocol does the same).
     */
-  def hasDvAsOf(v: Long): Boolean =
-    resolveMeta(v).values.exists(_.dv.isDefined)
+  def hasDvAsOf(v: Long): Boolean = snapshot(v).hasDv
 
-  private def resolve(v: Long): Map[String, Long] =
-    resolveMeta(v).view.mapValues(_.bytes).toMap
-
-  /** The recorded table schema at version `v` — the newest `schema`
-    * line in (checkpoint, v], else the checkpoint's. None on legacy
-    * logs that predate schema recording (readers fall back to parquet
+  /** The recorded table schema at version `v`. None on legacy logs
+    * that predate schema recording (readers fall back to parquet
     * inference).
     */
-  private[graft] def schemaAt(v: Long): Option[StructType] = {
-    if (v <= 0) return None
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).schemaJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("schema\t") => l.split("\t", 2)(1)
-      }
-    }).map(j => DataType.fromJson(j).asInstanceOf[StructType])
-  }
+  private[graft] def schemaAt(v: Long): Option[StructType] = snapshot(v).schema
 
-  /** The active CHECK constraints at version `v` (name → SQL
-    * expression), resolved exactly like the schema: newest
-    * `constraints` line in (checkpoint, v], else the checkpoint's,
-    * else empty (legacy logs). Every commit re-records the full
-    * active set, so resolution never walks past a checkpoint.
+  /** The active CHECK constraints (name → SQL expression). Every
+    * commit re-records the full active set.
     */
-  private[graft] def constraintsAt(v: Long): Seq[(String, String)] = {
-    if (v <= 0) return Seq.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).constraintsJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("constraints\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.constraintsFromJson).getOrElse(Seq.empty)
-  }
-
-  /** The active CHECK constraints (name → SQL expression). */
-  def constraints(): Map[String, String] = constraintsAt(latestVersion).toMap
+  def constraints(): Map[String, String] = snapshot().constraints.toMap
 
   /** ADD CONSTRAINT (Delta's `ALTER TABLE … ADD CONSTRAINT … CHECK`):
     * validates that EVERY existing row satisfies `exprSql` (one
@@ -414,9 +331,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
       s"bad constraint name: $name")
     require(!exprSql.exists(c => c == '\t' || c == '\n'),
       s"constraint expression must be a single line: $exprSql")
-    val cur = constraintsAt(latestVersion)
+    val base = snapshot()
+    val cur = base.constraints
     require(!cur.exists(_._1 == name), s"constraint '$name' already exists")
-    val violating = read()
+    val violating = readAt(base)
       .filter(!org.apache.spark.sql.functions.expr(exprSql))
     if (!violating.isEmpty) throw new IllegalArgumentException(
       s"cannot add constraint '$name': existing rows violate ($exprSql)")
@@ -426,127 +344,51 @@ class GraftTable private (val s: SparkSession, val root: String) {
 
   /** DROP CONSTRAINT: metadata-only commit removing it from the set. */
   def dropConstraint(name: String): Long = {
-    val cur = constraintsAt(latestVersion)
+    val cur = snapshot().constraints
     require(cur.exists(_._1 == name), s"no constraint named '$name'")
     commit(s"constraint:drop:$name", Seq.empty, Seq.empty,
       constraints = Some(cur.filterNot(_._1 == name)))
   }
 
-  /** The active BLOOM FILTER INDEX at version `v` (column → numBits),
-    * resolved like schema/constraints: newest `bloomidx` line in
-    * (checkpoint, v], else the checkpoint's, else empty.
-    */
-  private[graft] def bloomIndexAt(v: Long): Seq[(String, Long)] = {
-    if (v <= 0) return Seq.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).bloomIdxJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("bloomidx\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.bloomIdxFromJson).getOrElse(Seq.empty)
-  }
-
-  /** The active bloom filter index (column → numBits). */
-  def bloomIndex(): Map[String, Long] = bloomIndexAt(latestVersion).toMap
+  /** The active BLOOM FILTER INDEX (column → numBits). */
+  def bloomIndex(): Map[String, Long] = snapshot().bloomIndex.toMap
 
   // ---- column mapping (rename / drop as metadata-only commits) --------
-
-  /** The COLUMN MAPPING at version `v` (Delta's column-mapping table
-    * feature): logical name → the PHYSICAL name the data files store.
-    * A column's physical name is fixed at creation; `renameColumn`
-    * re-keys the logical side only (metadata commit — zero files
-    * rewritten, old files keep reading, old-version time travel
-    * returns epoch-correct names); `dropColumn` removes the logical
-    * entry and TOMBSTONES the physical name so a later re-added
-    * column of the same name can never resurrect the dropped data.
-    * Empty mapping = identity (every pre-mapping table).
-    */
-  private[graft] def colmapAt(v: Long): GraftTable.ColMap = {
-    if (v <= 0) return GraftTable.ColMap.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).colmapJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("colmap\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.colmapFromJson).getOrElse(GraftTable.ColMap.empty)
-  }
+  //
+  // The COLUMN MAPPING (Delta's column-mapping table feature,
+  // `Snapshot.colmap`): logical name → the PHYSICAL name the data
+  // files store. A column's physical name is fixed at creation;
+  // `renameColumn` re-keys the logical side only (metadata commit —
+  // zero files rewritten, old files keep reading, old-version time
+  // travel returns epoch-correct names); `dropColumn` removes the
+  // logical entry and TOMBSTONES the physical name so a later re-added
+  // column of the same name can never resurrect the dropped data.
+  // Empty mapping = identity (every pre-mapping table).
 
   /** True when version `v` reads through a non-identity column
     * mapping — the READER-FEATURE gate twin of [[hasDvAsOf]]: paths
     * serving raw parquet (the DSv2 format, the log-follower stream)
     * would surface PHYSICAL column names and must refuse instead.
     */
-  def hasColMapAsOf(v: Long): Boolean = !colmapAt(v).isIdentity
+  def hasColMapAsOf(v: Long): Boolean = !snapshot(v).colmap.isIdentity
 
-  /** The recorded partition keys at `v` — the newest `partmeta`
-    * row in (checkpoint, v], else the checkpoint's (colmapAt's
-    * resolution). Ordered outermost directory first; empty on flat
-    * tables and legacy partitioned logs.
+  /** The recorded partition keys at `v`, outermost directory first;
+    * empty on flat tables and legacy partitioned logs.
     */
-  private[graft] def partMetaAt(v: Long): Seq[GraftTable.PartMeta] = {
-    if (v <= 0) return Seq.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).partMetaJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("partmeta\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.partMetaFromJson).getOrElse(Seq.empty)
-  }
+  private[graft] def partMetaAt(v: Long): Seq[GraftTable.PartMeta] =
+    snapshot(v).partMeta
 
   /** The recorded protocol feature set at `v` (Delta's protocol row):
     * monotone — the high-water mark of every feature any commit ≤ v
     * activated. Empty on legacy logs.
     */
-  def protocolAt(v: Long): Set[String] = {
-    if (v <= 0) return Set.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).protocolJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("protocol\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.protocolFromJson).getOrElse(Set.empty)
-  }
+  def protocolAt(v: Long): Set[String] = snapshot(v).protocol
 
-  /** The reader features ACTIVE at version `v` — derived from actual
-    * state, not the (monotone) protocol row: a purge that cleared the
-    * last DV leaves `deletionVectors` in the protocol but inactive
-    * here, and the raw-parquet paths serve the version again. The
-    * refusal messages below speak the protocol row's vocabulary.
+  /** The reader features ACTIVE at version `v` (see
+    * [[Snapshot.activeReaderFeatures]]).
     */
-  def activeReaderFeatures(v: Long): Set[String] = {
-    val b = Set.newBuilder[String]
-    if (hasDvAsOf(v)) b += GraftTable.Features.DeletionVectors
-    if (hasColMapAsOf(v)) b += GraftTable.Features.ColumnMapping
-    // active only while the LIVE LAYOUT actually carries a string
-    // key: a recorded row whose value dirs are gone (epoch change) is
-    // history, not an active requirement
-    val layoutCols = partColsOf(resolveMeta(v).keys)
-    partMetaAt(v).filter(_.tpe == StringType).foreach { pm =>
-      if (layoutCols.contains(pm.col))
-        b += GraftTable.Features.StringPartitionValues
-    }
-    b.result()
-  }
+  def activeReaderFeatures(v: Long): Set[String] =
+    snapshot(v).activeReaderFeatures
 
   /** DROP FEATURE (Delta's `ALTER TABLE … DROP FEATURE`): the ONE
     * sanctioned shrink of the (otherwise monotone) protocol row —
@@ -557,15 +399,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * new version.
     */
   def dropFeature(name: String): Long = {
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
-    val proto = protocolAt(base)
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
+    val proto = base.protocol
     require(proto.contains(name),
       s"feature '$name' is not in the protocol row " +
         s"[${proto.toSeq.sorted.mkString(", ")}]")
-    val active = activeReaderFeatures(base)
-    require(!active.contains(name),
-      s"cannot drop '$name': the feature is still ACTIVE at v$base — " +
+    require(!base.activeReaderFeatures.contains(name),
+      s"cannot drop '$name': the feature is still ACTIVE at v${base.version} — " +
         "deactivate first (purge() for deletionVectors, restore the " +
         "identity mapping for columnMapping, replace the string-keyed " +
         "layout for stringPartitionValues)")
@@ -576,9 +417,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // partmeta tombstone. Inactivity above guarantees no live value
     // dir carries the key, so no reader loses restore information.
     val clearPm = name == GraftTable.Features.StringPartitionValues &&
-      partMetaAt(base).exists(_.tpe == StringType)
+      base.partMeta.exists(_.tpe == StringType)
     commit(s"protocol:drop:$name", Seq.empty, Seq.empty,
-      basedOn = Some(base), protocolOverride = Some(proto - name),
+      basedOn = Some(base.version), protocolOverride = Some(proto - name),
       clearPartMeta = clearPm)
   }
 
@@ -591,13 +432,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * that must defer the error to scan construction (the DSv2 path)
     * can.
     */
-  private[sources] def rawReadRefusal(v: Long, who: String): Option[String] = {
-    val blocking = activeReaderFeatures(v) intersect GraftTable.Features.RawBlocking
+  private[sources] def rawReadRefusal(at: Snapshot, who: String): Option[String] = {
+    val blocking = at.activeReaderFeatures intersect GraftTable.Features.RawBlocking
     if (blocking.isEmpty) None
     else Some(
-      s"$who refused: graft table at $root (v$v) requires active reader " +
+      s"$who refused: graft table at $root (v${at.version}) requires active reader " +
         s"features [${blocking.toSeq.sorted.mkString(", ")}] (protocol " +
-        s"[${protocolAt(v).toSeq.sorted.mkString(", ")}]) that a " +
+        s"[${at.protocol.toSeq.sorted.mkString(", ")}]) that a " +
         "raw-parquet reader cannot apply — deletionVectors would " +
         "resurrect deleted rows (run purge() first), columnMapping would " +
         "surface physical column names. Read through GraftTable.read()/" +
@@ -605,7 +446,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
   }
 
   /** The logical→physical column mapping (empty = identity). */
-  def columnMapping(): Map[String, String] = colmapAt(latestVersion).map
+  def columnMapping(): Map[String, String] = snapshot().colmap.map
 
   /** df with its columns renamed logical → physical for STAGING
     * (files always store physical names).
@@ -660,11 +501,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * physical access translates through the mapping.
     */
   def renameColumn(oldName: String, newName: String): Long = {
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
     require(newName.nonEmpty && !newName.exists(c => c == '\t' || c == '\n'),
       s"bad column name: $newName")
-    val sc = schemaAt(base).getOrElse(throw new IllegalStateException(
+    val sc = base.schema.getOrElse(throw new IllegalStateException(
       "renameColumn needs a recorded schema (legacy log)"))
     require(sc.fieldNames.contains(oldName),
       s"no column '$oldName' in ${sc.fieldNames.mkString(",")}")
@@ -675,24 +516,24 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // schema so renaming one already refuses above — but a payload
     // column must not take a key's name, or the path-restored column
     // would mask it
-    partColsFor(base).foreach { pc =>
+    base.partCols.foreach { pc =>
       require(!newName.equalsIgnoreCase(pc),
         s"'$pc' is a partition column (its values live in the file " +
           "paths) — a payload column cannot take its name")
     }
-    constraintsAt(base).find(c => referencedCols(c._2).contains(oldName))
+    base.constraints.find(c => referencedCols(c._2).contains(oldName))
       .foreach { c =>
         throw new IllegalArgumentException(
           s"cannot rename '$oldName': CHECK constraint '${c._1}' " +
             s"references it (drop the constraint first)")
       }
-    val cm = colmapAt(base)
+    val cm = base.colmap
     val next = GraftTable.ColMap(
       (cm.map - oldName) + (newName -> cm.phys(oldName)), cm.dead)
     val nextSchema = StructType(sc.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
     commit(s"colmap:rename:$oldName>$newName", Seq.empty, Seq.empty,
-      basedOn = Some(base), schema = Some(nextSchema), colmap = Some(next))
+      basedOn = Some(base.version), schema = Some(nextSchema), colmap = Some(next))
   }
 
   /** ADD COLUMN as a metadata-only commit (`ALTER TABLE … ADD
@@ -702,27 +543,27 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * data), same rule as the mergeSchema append path.
     */
   def addColumn(name: String, dt: DataType): Long = {
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
     require(name.nonEmpty && !name.exists(c => c == '\t' || c == '\n'),
       s"bad column name: $name")
-    val sc = schemaAt(base).getOrElse(throw new IllegalStateException(
+    val sc = base.schema.getOrElse(throw new IllegalStateException(
       "addColumn needs a recorded schema (legacy log)"))
     require(!sc.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"column '$name' already exists")
-    partColsFor(base).foreach { pc =>
+    base.partCols.foreach { pc =>
       require(!name.equalsIgnoreCase(pc),
         s"'$pc' is a partition column (its values live in the file " +
           "paths) — a payload column cannot take its name")
     }
-    val cm = colmapAt(base)
+    val cm = base.colmap
     val usedPhys = sc.fieldNames.map(cm.phys).toSet ++ cm.dead
     val next =
       if (!usedPhys.contains(name)) cm
       else cm.copy(map = cm.map +
         (name -> s"${name}_${java.util.UUID.randomUUID.toString.take(8)}"))
     commit(s"colmap:addcol:$name", Seq.empty, Seq.empty,
-      basedOn = Some(base),
+      basedOn = Some(base.version),
       schema = Some(StructType(sc.fields :+ StructField(name, dt))),
       colmap = Some(next))
   }
@@ -734,22 +575,22 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * dropped data cannot resurrect.
     */
   def dropColumn(name: String): Long = {
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
-    val sc = schemaAt(base).getOrElse(throw new IllegalStateException(
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
+    val sc = base.schema.getOrElse(throw new IllegalStateException(
       "dropColumn needs a recorded schema (legacy log)"))
     require(sc.fieldNames.contains(name),
       s"no column '$name' in ${sc.fieldNames.mkString(",")}")
     require(sc.fields.length > 1, "cannot drop the last column")
-    constraintsAt(base).find(c => referencedCols(c._2).contains(name))
+    base.constraints.find(c => referencedCols(c._2).contains(name))
       .foreach { c =>
         throw new IllegalArgumentException(
           s"cannot drop '$name': CHECK constraint '${c._1}' references " +
             "it (drop the constraint first)")
       }
-    val cm = colmapAt(base)
+    val cm = base.colmap
     val phys = cm.phys(name)
-    bloomIndexAt(base).find(_._1 == phys).foreach { _ =>
+    base.bloomIndex.find(_._1 == phys).foreach { _ =>
       throw new IllegalArgumentException(
         s"cannot drop '$name': it is bloom-indexed (setBloomIndex " +
           "without it first)")
@@ -757,7 +598,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val next = GraftTable.ColMap(cm.map - name, (cm.dead :+ phys).distinct)
     val nextSchema = StructType(sc.fields.filterNot(_.name == name))
     commit(s"colmap:drop:$name", Seq.empty, Seq.empty,
-      basedOn = Some(base), schema = Some(nextSchema), colmap = Some(next))
+      basedOn = Some(base.version), schema = Some(nextSchema), colmap = Some(next))
   }
 
   /** CREATE BLOOMFILTER INDEX (Delta's bloom filter index, recorded
@@ -778,7 +619,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     require(cols.nonEmpty, "setBloomIndex needs at least one column")
     require(numBits >= 64 && numBits <= (1L << 26),
       s"numBits out of range: $numBits")
-    schemaAt(latestVersion).foreach { sc =>
+    val base = snapshot()
+    base.schema.foreach { sc =>
       cols.foreach { c =>
         val f = sc.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
@@ -791,7 +633,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // stored under PHYSICAL names: the staged-file aggregation and
     // the stats-token probe both see physical columns, and a later
     // rename (logical-only) leaves the index intact
-    val cm = colmapAt(latestVersion)
+    val cm = base.colmap
     commit("constraint:bloomidx:set", Seq.empty, Seq.empty,
       bloomIdx = Some(cols.map(c => cm.phys(c) -> numBits)))
   }
@@ -814,9 +656,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * violation; skipped entirely when no constraints exist). NULL
     * results count as violations (SQL CHECK accepts only TRUE).
     */
-  private def enforceConstraints(df: DataFrame, action: String): Unit = {
-    val active = constraintsAt(latestVersion)
-    active.foreach { case (name, sql) =>
+  private def enforceConstraints(df: DataFrame, action: String,
+                                 at: Snapshot): Unit =
+    at.constraints.foreach { case (name, sql) =>
       val ok = org.apache.spark.sql.functions.expr(sql)
       val bad = df.filter(
         !org.apache.spark.sql.functions.coalesce(ok,
@@ -824,7 +666,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
       if (!bad.isEmpty) throw new IllegalArgumentException(
         s"$action violates CHECK constraint '$name' ($sql)")
     }
-  }
 
   // ---- reads ----------------------------------------------------------
 
@@ -832,7 +673,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * later commits (appends, compactions) do not perturb this
     * DataFrame — snapshot isolation.
     */
-  def read(): DataFrame = readVersion(latestVersion)
+  def read(): DataFrame = readAt(snapshot())
+
+  /** The rows of a pinned snapshot (deletion vectors applied). */
+  private def readAt(at: Snapshot): DataFrame =
+    readMeta(at.files.toSeq, at.schema, cm = at.colmap)
 
   /** The live files of version `v` as absolute paths — the snapshot
     * a reader (readVersion, or the `graft` DataSource) scans. May be
@@ -842,7 +687,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def filesAsOf(v: Long): Seq[String] = {
     require(v >= 1 && fs.exists(commitPath(v)),
       s"version $v does not exist (have: ${versions().mkString(",")})")
-    resolveMeta(v).keys.toSeq.sorted.map(absOf)
+    snapshot(v).files.keys.toSeq.sorted.map(absOf)
   }
 
   /** Absolute path of a recorded add path: EXTERNAL entries (a
@@ -855,15 +700,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private[sources] def absOf(rel: String): String =
     if (GraftTable.isExternal(rel)) rel else s"$root/$rel"
 
-  /** (absolute path, add-time stats token) of version `v`'s live
-    * files — what the DSv2 scan's log-level data skipping evaluates
-    * pushed filters against.
-    */
-  private[sources] def fileMetaAsOf(v: Long)
-      : Seq[(String, Long, Option[String])] =
-    resolveMeta(v).toSeq.sortBy(_._1)
-      .map { case (p, m) => (absOf(p), m.bytes, m.stats) }
-
   /** Time travel: the table exactly as committed at version `v`.
     * Reads through the schema RECORDED at `v` when the log has one —
     * so old-version reads return the old schema across an additive
@@ -874,7 +710,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def readVersion(v: Long): DataFrame = {
     require(v >= 1 && fs.exists(commitPath(v)),
       s"version $v does not exist (have: ${versions().mkString(",")})")
-    readMeta(resolveMeta(v).toSeq, schemaAt(v), cm = colmapAt(v))
+    readAt(snapshot(v))
   }
 
   // ---- deletion-vector-aware reads ------------------------------------
@@ -1041,14 +877,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def commitInfo(v: Long): Option[String] = readCommit(v).info
 
   /** Live parquet files (relative path, bytes) at the latest version. */
-  def liveFiles(): Seq[(String, Long)] = resolve(latestVersion).toSeq.sorted
+  def liveFiles(): Seq[(String, Long)] =
+    snapshot().files.toSeq.map { case (p, m) => (p, m.bytes) }.sorted
 
   /** Live files with their logged row counts and dv state —
     * (path, bytes, n_rows from the stats token or null, has_dv) —
     * the `graft_files` SQL table function's payload.
     */
   def liveFileMeta(): Seq[(String, Long, Option[Long], Boolean)] =
-    resolveMeta(latestVersion).toSeq.sortBy(_._1).map { case (p, m) =>
+    snapshot().files.toSeq.sortBy(_._1).map { case (p, m) =>
       (p, m.bytes, m.stats.flatMap(FileStats.numRows), m.dv.isDefined)
     }
 
@@ -1059,7 +896,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * this is an O(checkpoint) log read instead of a cluster job.
     */
   def tableStats(): (Option[Long], Long, Int) = {
-    val live = resolveMeta(latestVersion).values.toSeq
+    val live = snapshot().files.values.toSeq
     // a deletion vector's cardinality subtracts from its file's stats
     // row count — the logged count names the PHYSICAL rows
     val rows = live.foldLeft(Option(0L)) { (acc, m) =>
@@ -1084,10 +921,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * unsupported column types) are conservatively kept, so the pruned
     * list is always a superset of the matching rows' files.
     */
-  def prunedFiles(pred: Column): Seq[String] =
-    statsCandidates(resolveMeta(latestVersion),
+  def prunedFiles(pred: Column): Seq[String] = {
+    val at = snapshot()
+    statsCandidates(at.files,
       org.apache.spark.sql.graft.shim.catalystExpression(pred),
-      colmapAt(latestVersion)).map(absOf)
+      at.colmap).map(absOf)
+  }
 
   /** Filtered read that plans ONLY the stats-surviving files (then
     * re-applies `pred` exactly — skipping is an optimization, never
@@ -1096,14 +935,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * files, instead of opening every footer at scan time.
     */
   def readWhere(pred: Column): DataFrame = {
-    val cm = colmapAt(latestVersion)
-    val live = resolveMeta(latestVersion)
-    val survivors = statsCandidates(live,
-      org.apache.spark.sql.graft.shim.catalystExpression(pred), cm)
-      .map(p => p -> live(p))
-    val sc = schemaAt(latestVersion)
-    if (survivors.isEmpty && sc.isEmpty) read().filter(pred) // legacy log
-    else readMeta(survivors, sc, cm = cm).filter(pred)
+    val at = snapshot()
+    val survivors = statsCandidates(at.files,
+      org.apache.spark.sql.graft.shim.catalystExpression(pred), at.colmap)
+      .map(p => p -> at.files(p))
+    if (survivors.isEmpty && at.schema.isEmpty) readAt(at).filter(pred) // legacy log
+    else readMeta(survivors, at.schema, cm = at.colmap).filter(pred)
   }
 
   // ---- writes ---------------------------------------------------------
@@ -1125,12 +962,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * are introducing NEW columns (mergeSchema append) pass the
     * already-updated mapping explicitly.
     */
-  private def stage(df: DataFrame,
+  private def stage(df: DataFrame, at: Snapshot,
                     cmOpt: Option[GraftTable.ColMap] = None)
       : Seq[(String, Long)] = {
-    val cm = cmOpt.getOrElse(colmapAt(latestVersion))
+    val cm = cmOpt.getOrElse(at.colmap)
     val sub = freshSub()
-    bloomWrite(toPhysical(df, cm).write).parquet(s"$root/$sub")
+    bloomWrite(toPhysical(df, cm).write, at).parquet(s"$root/$sub")
     listStaged(sub)
   }
 
@@ -1141,8 +978,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * rides the stats token ([[statsOf]]).
     */
   private def bloomWrite(w: org.apache.spark.sql.DataFrameWriter[
-      org.apache.spark.sql.Row]) =
-    bloomIndexAt(latestVersion).foldLeft(w) { case (w0, (c, _)) =>
+      org.apache.spark.sql.Row], at: Snapshot) =
+    at.bloomIndex.foldLeft(w) { case (w0, (c, _)) =>
       w0.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
 
@@ -1152,7 +989,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * When a bloom index is active, each token additionally carries a
     * capped per-file bloom per indexed column ([[bloomTokens]]).
     */
-  private def statsOf(adds: Seq[(String, Long)]): Map[String, String] = {
+  private def statsOf(adds: Seq[(String, Long)],
+                      at: Snapshot): Map[String, String] = {
     // footers are independent files — read them concurrently (a merge
     // or compaction staging hundreds of files would otherwise serialize
     // hundreds of driver round-trips; r19, guide §1.2 driver-side work)
@@ -1162,7 +1000,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         FileStats.fromFooter(new Path(rootPath, rel), conf).map(rel -> _)
       }.seq.toMap
     }
-    val idx = bloomIndexAt(latestVersion)
+    val idx = at.bloomIndex
     if (idx.isEmpty || footer.isEmpty) footer
     else {
       val blooms = bloomTokens(adds, idx)
@@ -1255,74 +1093,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
     won
   }
 
-  /** Committed idempotence tags at or before `v`, resolved from the
-    * newest checkpoint's TAG LEDGER plus the commits after it —
-    * O(checkpointEvery) reads, and tags survive vacuum dropping their
-    * commits (the ledger rides every checkpoint). Legacy checkpoints
-    * (no `graft-ckpt` header) predate the ledger: fall back to the
-    * full commit scan so no pre-checkpoint tag is forgotten.
-    */
-  private def tagsAsOf(v: Long): collection.mutable.Set[String] = {
-    val s0 = scala.collection.mutable.Set.empty[String]
-    val base = checkpointVersions().filter(_ <= v).lastOption.filter { cv =>
-      val lines = ckptLines(cv)
-      val ledgered = lines.headOption.exists(_.startsWith("graft-ckpt\t"))
-      if (ledgered) lines.foreach { l =>
-        if (l.startsWith("tag\t")) s0 += l.split("\t", 2)(1)
-      }
-      ledgered
-    }
-    versions().filter(x => x > base.getOrElse(0L) && x <= v).foreach { x =>
-      val a = readCommit(x).action
-      if (a.contains("@")) s0 += a // append@<tag> / replace@<tag>
-    }
-    s0
-  }
-
-  private var tagCache: Option[scala.collection.mutable.Set[String]] = None
-  private def committedTags(): scala.collection.Set[String] =
-    tagCache.getOrElse {
-      val s0 = tagsAsOf(latestVersion)
-      tagCache = Some(s0)
-      s0
-    }
-
-  /** Checkpoint body at `v`: header, schema, the full live set (with
-    * stats) and the committed-tag ledger.
-    */
-  private def checkpointBody(v: Long,
-                             extraTags: Iterable[String] = Nil)
-      : Array[Byte] = {
-    val b = new StringBuilder(s"graft-ckpt\t$v\n")
-    schemaAt(v).foreach(sc => b.append(s"schema\t${sc.json}\n"))
-    val cons = constraintsAt(v)
-    if (cons.nonEmpty)
-      b.append(s"constraints\t${GraftTable.constraintsToJson(cons)}\n")
-    val bIdx = bloomIndexAt(v)
-    if (bIdx.nonEmpty)
-      b.append(s"bloomidx\t${GraftTable.bloomIdxToJson(bIdx)}\n")
-    val cmV = colmapAt(v)
-    if (!cmV.isIdentity)
-      b.append(s"colmap\t${GraftTable.colmapToJson(cmV)}\n")
-    val pmk = partMetaAt(v)
-    if (pmk.nonEmpty)
-      b.append(s"partmeta\t${GraftTable.partMetaToJson(pmk)}\n")
-    val protoV = protocolAt(v)
-    if (protoV.nonEmpty)
-      b.append(s"protocol\t${GraftTable.protocolToJson(protoV)}\n")
-    val live = resolveMeta(v).toSeq.sortBy(_._1)
-    live.foreach { case (p, m) =>
-      b.append(s"file\t$p\t${m.bytes}${m.stats.map("\t" + _).getOrElse("")}\n")
-    }
-    live.foreach { case (p, m) =>
-      m.dv.foreach(d =>
-        b.append(s"filedv\t$p\t${d.path}\t${d.bytes}\t${d.nDeleted}\n"))
-    }
-    (tagsAsOf(v) ++ extraTags).toSeq.distinct.sorted
-      .foreach(t => b.append(s"tag\t$t\n"))
-    b.toString.getBytes(UTF_8)
-  }
-
   /** Optimistic-concurrency commit loop. `removes` must still be live
     * at the winning version's predecessor — appends (no removes) can
     * always retry; a compact whose victims were removed by a
@@ -1363,9 +1133,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * file invalidates the computation (the probe's "no matching rows
     * here" may no longer hold) even though this commit does not
     * rewrite it.
+    *
+    * Each attempt lists the log once and reads the predecessor's state
+    * from its snapshot. `idempotent` marks a [[tagged]] verb's
+    * commit: when the predecessor already carries its action
+    * (`<prefix>@<tag>`) the call is a replay — it deletes the files it
+    * staged, publishes nothing, and [[tagged]] turns it into a no-op.
+    * Other actions may contain '@' too (a column name in `zorder:` or
+    * `colmap:`), so only a tagged call is checked.
     */
   private[graft] def commit(action: String, adds: Seq[(String, Long)],
                             removes: Seq[String],
+                            idempotent: Boolean = false,
                             basedOn: Option[Long] = None,
                             stats: Map[String, String] = Map.empty,
                             schema: Option[StructType] = None,
@@ -1375,7 +1154,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
                             dvs: Seq[(String, DvRef)] = Seq.empty,
                             readFiles: Seq[String] = Seq.empty,
                             bloomIdx: Option[Seq[(String, Long)]] = None,
-                            reschema: Option[Long => StructType] = None,
+                            reschema: Option[Snapshot => StructType] = None,
                             colmap: Option[GraftTable.ColMap] = None,
                             partMeta: Option[Seq[GraftTable.PartMeta]] = None,
                             clearPartMeta: Boolean = false,
@@ -1385,19 +1164,20 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (!fs.exists(logDir)) fs.mkdirs(logDir)
     var attempt = 0
     while (attempt < MaxRetries) {
-      val prev = latestVersion
+      val l = log()
+      val prev = l.latest
       basedOn.foreach { b =>
         if (prev != b) {
           // an intervening append that CHANGED the schema (mergeSchema
           // evolution) is a conflict too: committing the DML's staged
           // files under the old schema would silently narrow the table
-          val baseSchemaJson = schemaAt(b).map(_.json)
+          lazy val baseSchemaJson = resolve(b, l).schema.map(_.json)
           def fileScoped(a: String) = GraftTable.isMergeAction(a) ||
             a == "delete" || a == "update" || a == "compact" ||
             a == "purge" || a.startsWith("zorder:")
           val inter =
             if (tolerateAppends)
-              versions().filter(v => v > b && v <= prev).map(readCommit)
+              l.versions.filter(v => v > b && v <= prev).map(readCommit)
             else Seq.empty
           val hard =
             if (!tolerateAppends) Seq((prev, "untracked"))
@@ -1429,8 +1209,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
                 overlap.take(3).mkString(","))
         }
       }
+      val at = resolve(prev, l)
+      if (idempotent && at.tags(action)) {
+        // a replay: what this call staged will never be referenced
+        (adds ++ cdf).foreach(a => deleteStaged(a._1))
+        throw TagReplayed
+      }
       if (removes.nonEmpty || dvs.nonEmpty) {
-        val live = resolveMeta(prev).keySet
+        val live = at.files.keySet
         // a dv targets a SPECIFIC live file like a remove does: if a
         // concurrent commit rewrote/removed that file, the positions
         // no longer name the rows they were computed from — abort.
@@ -1447,20 +1233,16 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // CURRENT predecessor on every retry of the race loop (see
       // append): a fixed `schema` computed before the loop can go
       // stale when a concurrent schema-evolving commit wins a version
-      val sch = reschema.map(f => f(prev)).map(Some(_))
-        .getOrElse(schema.orElse(if (prev > 0) schemaAt(prev) else None))
-      val cons = constraints
-        .getOrElse(if (prev > 0) constraintsAt(prev) else Seq.empty)
-      val bIdx = bloomIdx
-        .getOrElse(if (prev > 0) bloomIndexAt(prev) else Seq.empty)
-      val cm = colmap
-        .getOrElse(if (prev > 0) colmapAt(prev) else GraftTable.ColMap.empty)
+      val sch = reschema.map(f => f(at)).map(Some(_))
+        .getOrElse(schema.orElse(at.schema))
+      val cons = constraints.getOrElse(at.constraints)
+      val bIdx = bloomIdx.getOrElse(at.bloomIndex)
+      val cm = colmap.getOrElse(at.colmap)
       val pm =
         if (clearPartMeta) partMeta // an epoch change (flat overwrite,
         // restore to a pre-partitioned version): the caller's value —
         // possibly none — REPLACES the carried row
-        else partMeta.orElse(
-          if (prev > 0) Some(partMetaAt(prev)).filter(_.nonEmpty) else None)
+        else partMeta.orElse(Some(at.partMeta).filter(_.nonEmpty))
       // the protocol row is MONOTONE: the predecessor's features plus
       // whatever this commit activates (Delta's protocol discipline —
       // a feature, once required, stays recorded even if later state
@@ -1469,8 +1251,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // DROP FEATURE verb, which has already checked inactivity; the
       // implied-features union below still re-adds anything this very
       // commit activates, so a drop can never race a re-activation.
-      val proto = protocolOverride.getOrElse(
-        if (prev > 0) protocolAt(prev) else Set.empty[String]) ++
+      val proto = protocolOverride.getOrElse(at.protocol) ++
         (if (dvs.nonEmpty) Set(GraftTable.Features.DeletionVectors)
          else Set.empty) ++
         (if (!cm.isIdentity) Set(GraftTable.Features.ColumnMapping)
@@ -1493,47 +1274,34 @@ class GraftTable private (val s: SparkSession, val root: String) {
           s"features [${unknownW.toSeq.sorted.mkString(", ")}] that " +
           "this writer does not implement — upgrade the writer binary " +
           "(reads remain available; writer features never gate reads)")
-      val body = new StringBuilder(
-        s"graft-commit\t$v\t$action\t${System.currentTimeMillis()}\n")
       // free-form operation parameters (Delta's operationParameters):
       // key=value pairs a verb wants auditable — e.g. mergeInto's
       // source-strategy choice. Never load-bearing for resolution.
-      info.foreach { i =>
-        require(!i.contains('\t') && !i.contains('\n'), s"bad info: $i")
-        body.append(s"info\t$i\n")
-      }
-      sch.foreach(sc => body.append(s"schema\t${sc.json}\n"))
-      if (cons.nonEmpty || constraints.isDefined)
-        body.append(
-          s"constraints\t${GraftTable.constraintsToJson(cons)}\n")
-      if (bIdx.nonEmpty || bloomIdx.isDefined)
-        body.append(s"bloomidx\t${GraftTable.bloomIdxToJson(bIdx)}\n")
-      if (!cm.isIdentity || colmap.isDefined)
-        body.append(s"colmap\t${GraftTable.colmapToJson(cm)}\n")
-      pm match {
-        case Some(p) =>
-          body.append(s"partmeta\t${GraftTable.partMetaToJson(p)}\n")
-        case None if clearPartMeta =>
-          body.append(s"partmeta\t${GraftTable.PartMetaTombstone}\n")
-        case None => ()
-      }
-      // an explicit override must be written even when it shrinks to
-      // EMPTY — "no line" means carry-forward to the resolution, and
-      // a dropped-to-empty row would otherwise resurrect
-      if (proto.nonEmpty || protocolOverride.isDefined)
-        body.append(s"protocol\t${GraftTable.protocolToJson(proto)}\n")
-      adds.foreach { case (p, b) =>
-        body.append(s"add\t$p\t$b${stats.get(p).map("\t" + _).getOrElse("")}\n")
-      }
-      removes.foreach(p => body.append(s"remove\t$p\n"))
-      cdf.foreach { case (p, b) => body.append(s"cdf\t$p\t$b\n") }
-      dvs.foreach { case (p, d) =>
-        body.append(s"dv\t$p\t${d.path}\t${d.bytes}\t${d.nDeleted}\n")
-      }
-      if (publish(commitPath(v), body.toString.getBytes(UTF_8))) {
-        if (v % CheckpointEvery == 0) {
-          if (publish(ckptPath(v), checkpointBody(v))) writeCkptParquet(v)
-        }
+      info.foreach(i =>
+        require(!i.contains('\t') && !i.contains('\n'), s"bad info: $i"))
+      val c = Commit(v, action,
+        adds.map { case (p, n) => AddFile(p, n, stats.get(p)) },
+        removes, cdf, sch.map(_.json),
+        if (cons.nonEmpty || constraints.isDefined)
+          Some(GraftTable.constraintsToJson(cons)) else None,
+        System.currentTimeMillis(), dvs,
+        if (bIdx.nonEmpty || bloomIdx.isDefined)
+          Some(GraftTable.bloomIdxToJson(bIdx)) else None,
+        if (!cm.isIdentity || colmap.isDefined)
+          Some(GraftTable.colmapToJson(cm)) else None,
+        pm.map(GraftTable.partMetaToJson)
+          .orElse(if (clearPartMeta) Some(GraftTable.PartMetaTombstone) else None),
+        // an explicit override must be written even when it shrinks to
+        // EMPTY — "no line" means carry-forward to the resolution, and
+        // a dropped-to-empty row would otherwise resurrect
+        if (proto.nonEmpty || protocolOverride.isDefined)
+          Some(GraftTable.protocolToJson(proto)) else None,
+        info)
+      if (publish(commitPath(v), c.text.getBytes(UTF_8))) {
+        commitCache.put(v, c)
+        val next = at(c)
+        remember(next)
+        if (v % CheckpointEvery == 0) writeCheckpoint(next)
         return v
       }
       attempt += 1 // lost the race — re-resolve and try the next version
@@ -1553,9 +1321,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * columns must keep their type. Delta's mergeSchema rule.
     */
   private def appendSchema(df: StructType, mergeSchema: Boolean,
-                           base: Long = latestVersion): StructType = {
+                           at: Snapshot): StructType = {
     val incoming = org.apache.spark.sql.graft.shim.nullable(df)
-    schemaAt(base) match {
+    at.schema match {
       case None => incoming
       case Some(cur) =>
         if (sig(cur) == sig(incoming)) cur
@@ -1584,8 +1352,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * there — old-version time travel keeps the old schema).
     */
   def append(df: DataFrame, mergeSchema: Boolean = false): Long = {
-    appendSchema(df.schema, mergeSchema) // fail fast, before staging
-    enforceConstraints(df, "append")
+    val base = snapshot()
+    appendSchema(df.schema, mergeSchema, base) // fail fast, before staging
+    enforceConstraints(df, "append", base)
     // a FLAT append onto a hive-partitioned layout stages files with
     // no value dirs — the partition-subset readers (token-matched at
     // the log) would silently MISS those rows on every pruned read.
@@ -1594,23 +1363,21 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // RECORDED partmeta row, not just live paths (ADVICE r13): a
     // partitioned table emptied by deleteWhere still refuses until
     // the epoch is explicitly ended.
-    partColsFor(latestVersion).headOption.foreach { _ =>
-      val pcs = partColsFor(latestVersion)
+    val pcs = base.partCols
+    if (pcs.nonEmpty)
       throw new IllegalArgumentException(
         s"table is hive-partitioned on '${pcs.mkString(", ")}' — a flat " +
           "append would stage files outside the value dirs and pruned " +
           "reads would miss them; use appendPartitioned(df, " +
           s"Seq(${pcs.map("\"" + _ + "\"").mkString(", ")}))")
-    }
     // physical names for columns NEW to the table: identity unless
     // the name is TOMBSTONED (a dropped column once stored under it —
     // its data must never resurrect) or already used physically by a
     // renamed column; those get a fresh suffixed physical name
-    val base0 = latestVersion
-    val cm0 = colmapAt(base0)
-    val existing = schemaAt(base0).map(_.fieldNames.toSet)
+    val cm0 = base.colmap
+    val existing = base.schema.map(_.fieldNames.toSet)
       .getOrElse(Set.empty)
-    val usedPhys = schemaAt(base0)
+    val usedPhys = base.schema
       .map(_.fieldNames.map(cm0.phys).toSet).getOrElse(Set.empty) ++
       cm0.dead
     val freshEntries = df.schema.fieldNames
@@ -1621,14 +1388,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val cmNew =
       if (freshEntries.isEmpty) cm0
       else cm0.copy(map = cm0.map ++ freshEntries)
-    val adds = stage(df, Some(cmNew))
+    val adds = stage(df, base, Some(cmNew))
     // the recorded schema is re-derived INSIDE the commit loop against
     // the winning predecessor: an append racing a concurrent
     // mergeSchema append that widened the table must re-merge (or
     // abort) rather than commit the stale narrower schema at a later
     // version — which would silently drop the new column from every
     // subsequent read
-    commit("append", adds, Seq.empty, stats = statsOf(adds),
+    commit("append", adds, Seq.empty, stats = statsOf(adds, base),
       reschema = Some(prev => appendSchema(df.schema, mergeSchema, prev)),
       colmap = if (freshEntries.isEmpty) None else Some(cmNew))
   }
@@ -1638,16 +1405,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * what lets replacePartitions/readPartitions prune at the LOG
     * level — no filesystem listing, no partition discovery scan.
     */
-  private def stagePartitioned(df: DataFrame,
-                               partCols: Seq[String]): Seq[(String, Long)] = {
+  private def stagePartitioned(df: DataFrame, partCols: Seq[String],
+                               at: Snapshot): Seq[(String, Long)] = {
     // payload columns stage under PHYSICAL names exactly like the
     // flat `stage` (the partition column is never in the recorded
     // schema or the mapping, so its name — and the value dirs — pass
     // through unchanged); the partition-subset readers translate back
     // to logical on read
-    val cm = colmapAt(latestVersion)
     val sub = s"$DataDir/${java.util.UUID.randomUUID.toString.take(12)}"
-    bloomWrite(toPhysical(df, cm).write)
+    bloomWrite(toPhysical(df, at.colmap).write, at)
       .partitionBy(partCols: _*).parquet(s"$root/$sub")
     def walk(p: Path, rel: String): Seq[(String, Long)] =
       fs.listStatus(p).toSeq.flatMap { st =>
@@ -1707,8 +1473,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * string layout fails loudly instead of restoring null.
     */
   private def partTypeOf(pc: String, live: Iterable[String],
-                         v: Long): DataType =
-    partMetaAt(v).find(_.col == pc).map(_.tpe).getOrElse {
+                         at: Snapshot): DataType =
+    at.partMeta.find(_.col == pc).map(_.tpe).getOrElse {
       val pat = s"/${java.util.regex.Pattern.quote(pc)}=([^/]+)/".r
       live.iterator
         .flatMap(p => pat.findFirstMatchIn("/" + p).map(_.group(1)))
@@ -1759,14 +1525,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * for every reader at once.
     */
   private def requirePartConsistent(pms: Seq[GraftTable.PartMeta],
-                                    base: Long): Unit = {
-    val existing = partColsFor(base)
+                                    base: Snapshot): Unit = {
+    val existing = base.partCols
     if (existing.nonEmpty)
       require(existing == pms.map(_.col),
         s"table is hive-partitioned on '${existing.mkString(", ")}' — " +
           s"cannot stage a batch partitioned on " +
           s"'${pms.map(_.col).mkString(", ")}'")
-    val rec = partMetaAt(base)
+    val rec = base.partMeta
     pms.foreach { pm =>
       rec.find(_.col == pm.col).foreach { r =>
         require(r.tpe == pm.tpe,
@@ -1798,18 +1564,19 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def appendPartitioned(df: DataFrame, partCols: Seq[String],
                         tag: String): Option[Long] =
-    tagged("append", tag) { a =>
-      enforceConstraints(df, "appendPartitioned")
+    tagged("append", tag) { (a, base) =>
+      enforceConstraints(df, "appendPartitioned", base)
       val pms = partMetaOf(df, partCols)
-      requirePartConsistent(pms, latestVersion)
+      requirePartConsistent(pms, base)
       val payload = partitionedSchema(df, partCols)
-      appendSchema(payload, mergeSchema = false) // fail fast
-      val adds = stagePartitioned(df, partCols)
+      appendSchema(payload, mergeSchema = false, base) // fail fast
+      val adds = stagePartitioned(df, partCols, base)
       // compat is re-checked against the winning predecessor: a
       // partitioned batch with renamed/missing/retyped columns must
       // NOT silently re-record the schema and retroactively change
       // how earlier files read
-      commit(a, adds, Seq.empty, stats = statsOf(adds),
+      commit(a, adds, Seq.empty, idempotent = true,
+        stats = statsOf(adds, base),
         reschema = Some(prev => appendSchema(payload, false, prev)),
         partMeta = Some(pms))
     }
@@ -1822,13 +1589,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
 
   /** Multi-key form of [[overwritePartitioned]] (ordered key list). */
   def overwritePartitioned(df: DataFrame, partCols: Seq[String]): Long = {
-    enforceConstraints(df, "overwritePartitioned")
+    val base = snapshot()
+    enforceConstraints(df, "overwritePartitioned", base)
     val pms = partMetaOf(df, partCols)
-    val base = latestVersion
-    val removes = resolveMeta(base).keys.toSeq
-    val adds = stagePartitioned(df, partCols)
-    commit("overwrite", adds, removes, basedOn = Some(base),
-      stats = statsOf(adds),
+    val removes = base.files.keys.toSeq
+    val adds = stagePartitioned(df, partCols, base)
+    commit("overwrite", adds, removes, basedOn = Some(base.version),
+      stats = statsOf(adds, base),
       schema = Some(partitionedSchema(df, partCols)),
       partMeta = Some(pms))
   }
@@ -1838,7 +1605,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def partitionValues(partCol: String): Seq[Long] = {
     val pat = s"/${java.util.regex.Pattern.quote(partCol)}=(-?\\d+)/".r
-    resolveMeta(latestVersion).keys
+    snapshot().files.keys
       .flatMap(p => pat.findFirstMatchIn("/" + p).map(_.group(1).toLong))
       .toSeq.distinct.sorted
   }
@@ -1852,10 +1619,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * O(live files × keys), no listing, no scan.
     */
   def partitionSummary(): Seq[(String, String, String, Long, Long)] = {
-    val v = latestVersion
-    val live = resolveMeta(v)
-    partColsOf(live.keys).flatMap { pc =>
-      val tpe = partTypeOf(pc, live.keys, v)
+    val at = snapshot()
+    val live = at.files
+    Snapshot.partColsOf(live.keys).flatMap { pc =>
+      val tpe = partTypeOf(pc, live.keys, at)
       val pat = s"/${java.util.regex.Pattern.quote(pc)}=([^/]+)/".r
       live.toSeq
         .flatMap { case (p, m) =>
@@ -1877,7 +1644,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def partitionValuesString(partCol: String): Seq[String] = {
     val pat = s"/${java.util.regex.Pattern.quote(partCol)}=([^/]+)/".r
-    resolveMeta(latestVersion).keys
+    snapshot().files.keys
       .flatMap(p => pat.findFirstMatchIn("/" + p).map(_.group(1)))
       .toSeq.distinct
       .map(t => if (t == GraftTable.HiveDefaultPartition) null
@@ -1891,19 +1658,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * schema-evolved subset would unresolved-column-fail on files that
     * predate an addColumn, ADVICE r12) and projected to logical names.
     */
-  private def readPartitionFiles(tokens: Seq[String])
+  private def readPartitionFiles(tokens: Seq[String], at: Snapshot)
       : Option[(Seq[String], DataFrame)] = {
-    val files = resolveMeta(latestVersion).keys
+    val files = at.files.keys
       .filter(p => tokens.exists(("/" + p).contains)).toSeq.sorted
     if (files.isEmpty) None
     else {
-      val cm = colmapAt(latestVersion)
-      val raw = schemaAt(latestVersion) match {
-        case Some(st) => s.read.schema(physSchema(st, cm))
+      val raw = at.schema match {
+        case Some(st) => s.read.schema(physSchema(st, at.colmap))
           .parquet(files.map(absOf): _*)
         case None => s.read.parquet(files.map(absOf): _*)
       }
-      Some((files, logicalView(raw)))
+      Some((files, logicalView(raw, at)))
     }
   }
 
@@ -1928,16 +1694,17 @@ class GraftTable private (val s: SparkSession, val root: String) {
 
   private def readPartitionedColumnTokens(partCol: String,
                                           values: Seq[String])
-      : Option[DataFrame] =
-    readPartitionFiles(values.map(v => partToken(partCol, v))).map {
+      : Option[DataFrame] = {
+    val at = snapshot()
+    readPartitionFiles(values.map(v => partToken(partCol, v)), at).map {
       case (files, df) =>
         // restore EVERY layout key, not just the pruned one: on a
         // multi-key table the caller filtered on `country` but still
         // needs `source` as a column
-        partColsOf(files).foldLeft(df)((acc, pc) =>
-          acc.withColumn(pc,
-            partRestore(pc, partTypeOf(pc, files, latestVersion))))
+        Snapshot.partColsOf(files).foldLeft(df)((acc, pc) =>
+          acc.withColumn(pc, partRestore(pc, partTypeOf(pc, files, at))))
     }
+  }
 
   /** Physical-file frame → LOGICAL column view at the latest version
     * (identity mapping: pass-through) — what lets the partition-
@@ -1945,10 +1712,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * store physical names; the projection selects exactly the live
     * logical schema.
     */
-  private def logicalView(df: DataFrame): DataFrame = {
-    val cm = colmapAt(latestVersion)
+  private def logicalView(df: DataFrame, at: Snapshot): DataFrame = {
+    val cm = at.colmap
     if (cm.isIdentity) df
-    else schemaAt(latestVersion).fold(df)(sc =>
+    else at.schema.fold(df)(sc =>
       df.select(sc.fields.map(f =>
         org.apache.spark.sql.functions.col(cm.phys(f.name)).as(f.name))
         .toIndexedSeq: _*))
@@ -1983,12 +1750,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private def replacePartitionTokens(df: DataFrame, partCol: String,
                                      values: Seq[String],
                                      tag: String): Option[Long] =
-    tagged("replace", tag) { action =>
-      val base = latestVersion
+    tagged("replace", tag) { (action, base) =>
       // on a multi-key table the replace SCOPE is one key's values,
       // but the staged files must carry ALL layout keys or pruned
       // reads on the other keys would miss the rewritten rows
-      val existing = partColsFor(base)
+      val existing = base.partCols
       val partCols = if (existing.isEmpty) Seq(partCol) else existing
       require(partCols.contains(partCol),
         s"'$partCol' is not a partition column of the layout " +
@@ -1996,14 +1762,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
       val pms = partMetaOf(df, partCols)
       requirePartConsistent(pms, base)
       val tokens = values.map(v => partToken(partCol, v))
-      val removes = resolveMeta(base).keys
+      val removes = base.files.keys
         .filter(p => tokens.exists(("/" + p).contains)).toSeq
-      enforceConstraints(df, "replacePartitions")
+      enforceConstraints(df, "replacePartitions", base)
       // files of OTHER partitions survive this commit, so the payload
       // schema must stay compatible with what they were written under
       appendSchema(partitionedSchema(df, partCols),
         mergeSchema = false, base)
-      val adds = stagePartitioned(df, partCols)
+      val adds = stagePartitioned(df, partCols, base)
       val outOfScope = adds.map(_._1)
         .filterNot(p => tokens.exists(("/" + p).contains))
       if (outOfScope.nonEmpty) {
@@ -2014,8 +1780,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
             s"outside the declared scope: ${outOfScope.take(3).mkString(",")}" +
             " — the commit would silently append them inside a 'replace'")
       }
-      commit(action, adds, removes, basedOn = Some(base),
-        stats = statsOf(adds),
+      commit(action, adds, removes, idempotent = true,
+        basedOn = Some(base.version),
+        stats = statsOf(adds, base),
         schema = Some(partitionedSchema(df, partCols)),
         partMeta = Some(pms))
     }
@@ -2119,9 +1886,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
                    tag: String = null,
                    cdfImages: Boolean = false,
                    mergeSchema: Boolean = false): Option[Long] =
-    tagged("replace", tag) { action =>
-      val base = latestVersion
-      val pcs = partColsFor(base)
+    tagged("replace", tag) { (action, base) =>
+      val pcs = base.partCols
       // unresolved-tree walk, not .references: the predicate's columns
       // aren't bound to any plan yet
       val refs = org.apache.spark.sql.graft.shim
@@ -2175,16 +1941,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
   }
 
   /** The file-level (partition-predicate) replaceWhere regime. */
-  private def replaceChains(action: String, base: Long, pcs: Seq[String],
+  private def replaceChains(action: String, base: Snapshot, pcs: Seq[String],
                             predicate: Column, df: DataFrame,
                             cdfImages: Boolean = false,
                             mergeSchema: Boolean = false): Long = {
     val pms = partMetaOf(df, pcs)
     requirePartConsistent(pms, base)
-    enforceConstraints(df, "replaceWhere")
+    enforceConstraints(df, "replaceWhere", base)
     requireSatisfies(predicate, df)
-    val liveM = resolveMeta(base)
-    val live = liveM.keys.toSeq
+    val live = base.files.keys.toSeq
     val matched = evalChainPredicate(
       live.flatMap(p => chainTokenOf(p, pcs)).distinct, pms, predicate)
     val removes = live.filter(p =>
@@ -2201,9 +1966,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // replace must never resurrect a dropped column's data from the
     // untouched files
     requireEvolvableFresh(validated.fieldNames.filterNot(n =>
-      schemaAt(base).exists(_.fieldNames.exists(_.equalsIgnoreCase(n))))
+      base.schema.exists(_.fieldNames.exists(_.equalsIgnoreCase(n))))
       .toSeq, base)
-    val adds = stagePartitioned(df, pcs)
+    val adds = stagePartitioned(df, pcs, base)
     // CDF (opt-in): the ONLY read of the replaced files this regime
     // ever performs — the delete images need their rows
     val cdf =
@@ -2211,8 +1976,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
       else stageCdf(replaceImages(
         if (removes.isEmpty) None
         else Some(new DmlScope(base).read(removes.sorted)), df))
-    commit(action, adds, removes, basedOn = Some(base),
-      stats = statsOf(adds),
+    commit(action, adds, removes, idempotent = true,
+      basedOn = Some(base.version),
+      stats = statsOf(adds, base),
       schema = Some(validated),
       partMeta = Some(pms), cdf = cdf)
   }
@@ -2226,22 +1992,23 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * flat tables too — an atomic "restate everything in this key
     * range" needs no partition layout.
     */
-  private def replaceRows(action: String, base: Long,
+  private def replaceRows(action: String, base: Snapshot,
                           predicate: Column, df: DataFrame,
                           cdfImages: Boolean = false,
                           mergeSchema: Boolean = false): Long = {
     val d = new DmlScope(base)
-    if (d.pc.nonEmpty) requirePartConsistent(partMetaOf(df, d.pc), base)
-    enforceConstraints(df, "replaceWhere")
+    val pc = base.partCols
+    if (pc.nonEmpty) requirePartConsistent(partMetaOf(df, pc), base)
+    enforceConstraints(df, "replaceWhere", base)
     requireSatisfies(predicate, df)
     val payloadSchema =
-      if (d.pc.isEmpty) org.apache.spark.sql.graft.shim.nullable(df.schema)
-      else partitionedSchema(df, d.pc)
+      if (pc.isEmpty) org.apache.spark.sql.graft.shim.nullable(df.schema)
+      else partitionedSchema(df, pc)
     val validated = appendSchema(payloadSchema, mergeSchema, base)
     // evolution guard (ADVICE r16): same tombstone/collision refusal
     // as the chain regime — see replaceChains
     requireEvolvableFresh(validated.fieldNames.filterNot(n =>
-      d.sc.exists(_.fieldNames.exists(_.equalsIgnoreCase(n))))
+      base.schema.exists(_.fieldNames.exists(_.equalsIgnoreCase(n))))
       .toSeq, base)
     // survivors = rows NOT matching — which includes rows where the
     // predicate evaluates NULL (Delta keeps them via
@@ -2253,16 +2020,17 @@ class GraftTable private (val s: SparkSession, val root: String) {
       _.filter(notMatching(predicate)),
       rows => if (!cdfImages) None
               else Some(replaceImages(Some(rows.filter(predicate)), df)))
-    val incoming = jobPhase("replaceWhere: stage batch")(dmlStage(df, d.pc))
+    val incoming = jobPhase("replaceWhere: stage batch")(dmlStage(df, base))
     val cdf = w.map(_.cdf).getOrElse(
       if (!cdfImages) Seq.empty
       else jobPhase("replaceWhere: stage CDF images")(
         stageCdf(replaceImages(None, df))))
     commit(action, w.toSeq.flatMap(_.adds) ++ incoming,
-      w.toSeq.flatMap(_.touched), basedOn = Some(base),
-      stats = w.fold(Map.empty[String, String])(_.stats) ++ statsOf(incoming),
+      w.toSeq.flatMap(_.touched), idempotent = true,
+      basedOn = Some(base.version),
+      stats = w.fold(Map.empty[String, String])(_.stats) ++ statsOf(incoming, base),
       schema = Some(validated),
-      partMeta = if (d.pc.isEmpty) None else Some(partMetaOf(df, d.pc)),
+      partMeta = if (pc.isEmpty) None else Some(partMetaOf(df, pc)),
       cdf = cdf)
   }
 
@@ -2276,10 +2044,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * `append(mergeSchema=true)` stays the evolution path for those
     * names: it assigns a fresh suffixed physical name.
     */
-  private def requireEvolvableFresh(fresh: Seq[String], base: Long): Unit = {
+  private def requireEvolvableFresh(fresh: Seq[String], base: Snapshot): Unit = {
     if (fresh.isEmpty) return
-    val cm = colmapAt(base)
-    val physInUse = schemaAt(base)
+    val cm = base.colmap
+    val physInUse = base.schema
       .map(_.fieldNames.map(cm.phys).toSet).getOrElse(Set.empty)
     fresh.foreach { n =>
       require(!cm.dead.exists(_.equalsIgnoreCase(n)),
@@ -2328,20 +2096,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def overwritePartitionsDynamic(df: DataFrame,
                                  tag: String = null,
                                  cdfImages: Boolean = false): Option[Long] =
-    tagged("replace", tag) { action =>
-      val base = latestVersion
-      val pcs = partColsFor(base)
+    tagged("replace", tag) { (action, base) =>
+      val pcs = base.partCols
       require(pcs.nonEmpty,
         "dynamic partition overwrite needs a hive-partitioned table — " +
           "on a flat table use overwrite() (whole-set replace)")
       val pms = partMetaOf(df, pcs)
       requirePartConsistent(pms, base)
-      enforceConstraints(df, "overwritePartitionsDynamic")
+      enforceConstraints(df, "overwritePartitionsDynamic", base)
       appendSchema(partitionedSchema(df, pcs), mergeSchema = false, base)
-      val adds = stagePartitioned(df, pcs)
+      val adds = stagePartitioned(df, pcs, base)
       val incoming = adds.map(_._1).flatMap(chainTokenOf(_, pcs)).toSet
-      val liveM = resolveMeta(base)
-      val removes = liveM.keys.toSeq.filter(p =>
+      val removes = base.files.keys.toSeq.filter(p =>
         chainTokenOf(p, pcs).exists(incoming.contains))
       // CDF (opt-in): replaceWhere's image rule — replaced chains'
       // rows as delete, the batch as insert (see replaceImages)
@@ -2350,8 +2116,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
         else stageCdf(replaceImages(
           if (removes.isEmpty) None
           else Some(new DmlScope(base).read(removes.sorted)), df))
-      commit(action, adds, removes, basedOn = Some(base),
-        stats = statsOf(adds),
+      commit(action, adds, removes, idempotent = true,
+        basedOn = Some(base.version),
+        stats = statsOf(adds, base),
         schema = Some(partitionedSchema(df, pcs)),
         partMeta = Some(pms), cdf = cdf)
     }
@@ -2365,30 +2132,33 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def readPartitions(partCol: String, values: Seq[Long]): Option[DataFrame] =
     // no basePath/partition recovery: callers key on real columns and
     // re-derive the partition value (s7 recomputes pmod(user_id, n))
-    readPartitionFiles(values.map(v => partToken(partCol, v.toString)))
-      .map(_._2)
+    readPartitionFiles(values.map(v => partToken(partCol, v.toString)),
+      snapshot()).map(_._2)
 
   /** [[readPartitions]] for string-keyed layouts. */
   def readPartitionsString(partCol: String,
                            values: Seq[String]): Option[DataFrame] =
-    readPartitionFiles(values.map(v => partToken(partCol, v))).map(_._2)
+    readPartitionFiles(values.map(v => partToken(partCol, v)), snapshot())
+      .map(_._2)
 
   /** Exactly-once streaming append: the tag (a micro-batch id) is
     * recorded in the commit action, and a replayed batch whose tag is
     * already committed is a no-op — a checkpoint-restarted
     * foreachBatch sink lands each batch exactly once without any sink
-    * -side dedup state. Tags are resolved from the checkpoint tag
-    * ledger + later commits on first use (restart-safe, vacuum-safe)
-    * and cached thereafter. Single writer per tag namespace assumed
-    * (Structured Streaming's guarantee).
+    * -side dedup state. Tags are read from the snapshot the call pins
+    * (checkpoint tag ledger + later commits: restart-safe,
+    * vacuum-safe) and re-checked against the predecessor of the
+    * version the commit publishes, so a tag another writer or
+    * instance committed meanwhile is still a replay.
     */
   def appendIdempotent(df: DataFrame, tag: String): Option[Long] = {
     require(tag != null, "appendIdempotent needs a tag; use append")
-    tagged("append", tag) { a =>
-      appendSchema(df.schema, mergeSchema = false) // fail fast
-      enforceConstraints(df, "appendIdempotent")
-      val adds = stage(df)
-      commit(a, adds, Seq.empty, stats = statsOf(adds),
+    tagged("append", tag) { (a, base) =>
+      appendSchema(df.schema, mergeSchema = false, base) // fail fast
+      enforceConstraints(df, "appendIdempotent", base)
+      val adds = stage(df, base)
+      commit(a, adds, Seq.empty, idempotent = true,
+        stats = statsOf(adds, base),
         reschema =
           Some(prev => appendSchema(df.schema, mergeSchema = false, prev)))
     }
@@ -2399,7 +2169,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * No-op on a not-yet-created table (streaming BOOTSTRAP).
     */
   private[sources] def validateAppendSchema(sch: StructType): Unit = {
-    if (latestVersion > 0) appendSchema(sch, mergeSchema = false)
+    appendSchema(sch, mergeSchema = false, snapshot())
     ()
   }
 
@@ -2408,7 +2178,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * the parquet schema needs translating.
     */
   private[sources] def physicalWriteSchema(sch: StructType): StructType =
-    physSchema(sch, colmapAt(latestVersion))
+    physSchema(sch, snapshot().colmap)
 
   /** One micro-batch of the DSv2 STREAMING WRITE: the executor-staged
     * files (already under the table root) land as ONE idempotent-
@@ -2442,8 +2212,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val adds = staged.sorted.map { rel =>
       (rel, fs.getFileStatus(new Path(rootPath, rel)).getLen)
     }
+    val base = snapshot()
     try {
-      if (constraintsAt(latestVersion).nonEmpty && adds.nonEmpty) {
+      if (base.constraints.nonEmpty && adds.nonEmpty) {
         // staged files carry PHYSICAL names; constraints are logical.
         // EXCEPT on overwrite: the batch writer stages overwrite files
         // under the new schema's own LOGICAL names (the commit resets
@@ -2451,8 +2222,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         // `if (overwrite) schema`), so the constraint read must use
         // the identity mapping or a renamed column reads back all-null
         // and a valid INSERT OVERWRITE aborts on a phantom violation.
-        val cm = if (overwrite) GraftTable.ColMap.empty
-                 else colmapAt(latestVersion)
+        val cm = if (overwrite) GraftTable.ColMap.empty else base.colmap
         val raw = s.read
           .schema(physSchema(
             org.apache.spark.sql.graft.shim.nullable(sch), cm))
@@ -2462,7 +2232,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
           else raw.select(sch.fields.map(f =>
             org.apache.spark.sql.functions.col(cm.phys(f.name))
               .as(f.name)).toIndexedSeq: _*)
-        enforceConstraints(logical, "stagedWrite")
+        enforceConstraints(logical, "stagedWrite", base)
       }
     } catch {
       case e: Throwable =>
@@ -2475,8 +2245,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // files never read or restaged. Files staged under PHYSICAL
       // names like an append (other partitions' files survive, so the
       // recorded schema and mapping must keep serving them).
-      val base = latestVersion
-      val pcs = partColsFor(base)
+      val pcs = base.partCols
       if (pcs.isEmpty) {
         adds.foreach(a => deleteStaged(a._1))
         throw new UnsupportedOperationException(
@@ -2485,32 +2254,31 @@ class GraftTable private (val s: SparkSession, val root: String) {
       }
       val incoming = adds.map(_._1)
         .flatMap(p => chainTokenOf(p, pcs)).toSet
-      val removes = resolveMeta(base).keys.toSeq.filter(p =>
+      val removes = base.files.keys.toSeq.filter(p =>
         chainTokenOf(p, pcs).exists(incoming.contains))
-      Some(commit("replace", adds, removes, basedOn = Some(base),
-        stats = statsOf(adds),
+      Some(commit("replace", adds, removes, basedOn = Some(base.version),
+        stats = statsOf(adds, base),
         reschema = Some(prev =>
           appendSchema(sch, mergeSchema = false, prev))))
     } else if (overwrite) {
       // whole-set replace (INSERT OVERWRITE): serializable like the
       // overwrite verb — any intervening commit aborts. Column
       // mapping resets with the live set, matching `overwrite`.
-      val base = latestVersion
-      val removes = resolveMeta(base).keys.toSeq
-      Some(commit("overwrite", adds, removes, basedOn = Some(base),
-        stats = statsOf(adds),
+      Some(commit("overwrite", adds, base.files.keys.toSeq,
+        basedOn = Some(base.version), stats = statsOf(adds, base),
         schema = Some(org.apache.spark.sql.graft.shim.nullable(sch)),
         colmap = Some(GraftTable.ColMap.empty)))
     } else tag match {
       case Some(t) =>
-        tagged("append", t,
-          onReplay = () => adds.foreach(a => deleteStaged(a._1))) { a =>
-          commit(a, adds, Seq.empty, stats = statsOf(adds),
+        tagged("append", t, base = base,
+          onReplay = () => adds.foreach(a => deleteStaged(a._1))) { (a, _) =>
+          commit(a, adds, Seq.empty, idempotent = true,
+            stats = statsOf(adds, base),
             reschema = Some(prev =>
               appendSchema(sch, mergeSchema = false, prev)))
         }
       case None =>
-        Some(commit("append", adds, Seq.empty, stats = statsOf(adds),
+        Some(commit("append", adds, Seq.empty, stats = statsOf(adds, base),
           reschema = Some(prev =>
             appendSchema(sch, mergeSchema = false, prev))))
     }
@@ -2525,24 +2293,26 @@ class GraftTable private (val s: SparkSession, val root: String) {
 
   /** The ONE tagged-idempotence guard all tagged verbs share:
     * validate the tag, no-op (running `onReplay`) if its action is
-    * already committed, otherwise run `body` with the action string
-    * and record it in the cache.
+    * already committed at `base` — the snapshot the verb pins, by
+    * default the latest — otherwise run `body` with the action string
+    * and `base`. A tag that lands between the pin and the publish
+    * (another writer, another instance) is caught by [[commit]]'s
+    * re-check and no-ops the same way.
     */
   private def tagged(prefix: String, tag: String,
-                     onReplay: () => Unit = () => ())
-                    (body: String => Long): Option[Long] = {
+                     onReplay: () => Unit = () => (),
+                     base: Snapshot = snapshot())
+                    (body: (String, Snapshot) => Long): Option[Long] = {
     val action =
       if (tag == null) prefix
       else {
         require(!tag.exists(c => c == '\t' || c == '\n'), s"bad tag: $tag")
         s"$prefix@$tag"
       }
-    if (tag != null && committedTags().contains(action)) { onReplay(); None }
-    else {
-      val v = body(action)
-      tagCache.foreach(_ += action)
-      Some(v)
-    }
+    if (tag != null && base.tags(action)) { onReplay(); None }
+    else
+      try Some(body(action, base))
+      catch { case TagReplayed => onReplay(); None }
   }
 
   /** Replace the whole live set with `df` atomically. Serializable:
@@ -2551,15 +2321,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * silently survive the "replace everything").
     */
   def overwrite(df: DataFrame): Long = {
-    enforceConstraints(df, "overwrite")
-    val base = latestVersion
-    val removes = resolveMeta(base).keys.toSeq
+    val base = snapshot()
+    enforceConstraints(df, "overwrite", base)
+    val removes = base.files.keys.toSeq
     // a whole-table replace RESETS column mapping: no old file
     // survives, so physical names can be the new schema's own (and a
     // stale map could collide a new column with an old physical name)
-    val adds = stage(df, Some(GraftTable.ColMap.empty))
-    commit("overwrite", adds, removes, basedOn = Some(base),
-      stats = statsOf(adds),
+    val adds = stage(df, base, Some(GraftTable.ColMap.empty))
+    commit("overwrite", adds, removes, basedOn = Some(base.version),
+      stats = statsOf(adds, base),
       schema = Some(org.apache.spark.sql.graft.shim.nullable(df.schema)),
       colmap = Some(GraftTable.ColMap.empty),
       // ... and a FLAT replace ends the partitioned epoch: no value
@@ -2596,16 +2366,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
     }
   }
 
-  /** One DML verb's view of version `base`: the recorded schema, live
-    * files, partition columns and column mapping that every pass of
-    * the verb reads against, plus its prune and probe.
+  /** One DML verb's prune, probe and read over its pinned snapshot
+    * `base`.
     */
-  private final class DmlScope(val base: Long) {
-    val sc: Option[StructType] = schemaAt(base)
-    val live: Map[String, FileMeta] = resolveMeta(base)
-    val pc: Seq[String] = partColsFor(base)
-    val cm: GraftTable.ColMap = colmapAt(base)
-    lazy val byName: Map[String, String] = byBaseName(live)
+  private final class DmlScope(val base: Snapshot) {
+    lazy val byName: Map[String, String] = byBaseName(base.files)
 
     /** DML read of the named live files: recorded schema applied, and
       * — on a hive-partitioned table — EVERY partition column RESTORED
@@ -2616,13 +2381,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
       * already-dead rows.
       */
     def read(paths: Seq[String], keepPos: Boolean = false): DataFrame =
-      pc.foldLeft(readMeta(paths.map(p => p -> live(p)), sc, keepPos, cm)) {
+      base.partCols.foldLeft(readMeta(paths.map(p => p -> base.files(p)),
+        base.schema, keepPos, base.colmap)) {
         (acc, c) => acc.withColumn(c,
           partRestore(c, partTypeOf(c, paths, base)))
       }
 
     def candidates(pred: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Seq[String] = statsCandidates(live, pred, cm)
+        : Seq[String] = statsCandidates(base.files, pred, base.colmap)
 
     def candidates(pred: Column): Seq[String] =
       candidates(org.apache.spark.sql.graft.shim.catalystExpression(pred))
@@ -2644,9 +2410,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * replace data files with empty ones — and an all-rows delete
     * leaves a genuinely empty table the schema-bearing read serves.
     */
-  private def dropEmpty(adds: Seq[(String, Long)])
+  private def dropEmpty(adds: Seq[(String, Long)], at: Snapshot)
       : (Seq[(String, Long)], Map[String, String]) = {
-    val st = statsOf(adds)
+    val st = statsOf(adds, at)
     val (kept, emptied) = adds.partition(a =>
       st.get(a._1).flatMap(FileStats.numRows).forall(_ > 0))
     emptied.foreach(a => fs.delete(new Path(rootPath, a._1), false))
@@ -2696,12 +2462,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // drain the image staging before a failed rewrite propagates,
       // so no background job outlives the verb
       val staged =
-        try jobPhase(s"$verb: stage rewrite")(dmlStage(out, d.pc))
+        try jobPhase(s"$verb: stage rewrite")(dmlStage(out, d.base))
         catch {
           case e: Throwable => Await.ready(cdfFuture, Duration.Inf); throw e
         }
       val cdf = Await.result(cdfFuture, Duration.Inf)
-      val (adds, st) = dropEmpty(staged)
+      val (adds, st) = dropEmpty(staged, d.base)
       Some(GraftTable.Rewritten(touched, adds, st, cdf))
     }
   }
@@ -2711,9 +2477,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * keeping pruned reads on every key working —
     * compactPartitioned's rule), flat otherwise.
     */
-  private def dmlStage(df: DataFrame,
-                       partCols: Seq[String]): Seq[(String, Long)] =
-    if (partCols.isEmpty) stage(df) else stagePartitioned(df, partCols)
+  private def dmlStage(df: DataFrame, at: Snapshot): Seq[(String, Long)] =
+    if (at.partCols.isEmpty) stage(df, at)
+    else stagePartitioned(df, at.partCols, at)
 
   /** Copy-on-write DELETE (Delta's `DELETE FROM t WHERE pred`), the
     * reference's delete endpoints (`DeleteData` app.py:5216) made
@@ -2730,13 +2496,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def deleteWhere(pred: Column, cdfImages: Boolean = true,
                   mor: Boolean = false): Long = {
     import org.apache.spark.sql.functions.lit
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
     val d = new DmlScope(base)
     val candidates = d.candidates(pred)
-    if (candidates.isEmpty) return base
+    if (candidates.isEmpty) return base.version
     if (mor) {
-      require(d.pc.isEmpty, "merge-on-read DML is not supported on " +
+      require(base.partCols.isEmpty, "merge-on-read DML is not supported on " +
         "hive-partitioned tables — the partition-subset readers " +
         "(readPartitions/readPartitionedColumn) serve raw files; use " +
         "the copy-on-write default")
@@ -2757,9 +2523,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
       _.filter(notMatching(pred)),
       rows => if (!cdfImages) None
               else Some(rows.filter(pred).withColumn(ChangeTypeCol, lit("delete")))
-    ).fold(base) { w =>
-      commit("delete", w.adds, w.touched, basedOn = Some(base),
-        stats = w.stats, schema = d.sc, cdf = w.cdf,
+    ).fold(base.version) { w =>
+      commit("delete", w.adds, w.touched, basedOn = Some(base.version),
+        stats = w.stats, schema = base.schema, cdf = w.cdf,
         tolerateAppends = true, readFiles = candidates)
     }
   }
@@ -2783,7 +2549,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
                         readFiles: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
     import s.implicits._
-    val live = d.live
+    val live = d.base.files
     def readDv(dirs: Seq[String]) = s.read
       .schema(new StructType().add("__file", StringType)
         .add("__pos", LongType)) // explicit: an empty stage stays readable
@@ -2805,7 +2571,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       col("__ri").as("__pos")), 8)
     val touchedNames = readDv(Seq(dvSub0)).select("__file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    if (touchedNames.isEmpty) { drop(dvSub0); return d.base }
+    if (touchedNames.isEmpty) { drop(dvSub0); return d.base.version }
     val touched = touchedNames.map(d.byName)
     val oldDvDirs = touched.flatMap(p => live(p).dv.map(_.path)).distinct
     // SUPERSEDE: fold the touched files' existing dv positions in — a
@@ -2843,8 +2609,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
       drop(dvSubC)
     val dvs = partial.map(p =>
       p -> DvRef(dvSubC, dvBytes, counts(fileKey(p))))
-    commit(action, adds, fullDead, basedOn = Some(d.base),
-      stats = statsOf(adds), schema = d.sc,
+    commit(action, adds, fullDead, basedOn = Some(d.base.version),
+      stats = statsOf(adds, d.base), schema = d.base.schema,
       cdf = cdf.map(stageCdf).getOrElse(Seq.empty),
       tolerateAppends = true, dvs = dvs, readFiles = readFiles)
   }
@@ -2865,23 +2631,23 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def update(pred: Column, set: Map[String, Column],
              cdfImages: Boolean = true, mor: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{lit, when}
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
     val d = new DmlScope(base)
     require(set.nonEmpty, "update needs at least one SET column")
-    d.pc.foreach { p =>
+    base.partCols.foreach { p =>
       require(!set.contains(p),
         s"cannot SET hive-partition column '$p' — the row would move to " +
           "another partition; use replacePartitions for partition rewrites")
     }
-    d.sc.foreach { st =>
-      val missing = set.keySet -- st.fieldNames.toSet -- d.pc.toSet
+    base.schema.foreach { st =>
+      val missing = set.keySet -- st.fieldNames.toSet -- base.partCols.toSet
       require(missing.isEmpty, s"SET columns not in the table: $missing")
     }
     val candidates = d.candidates(pred)
-    if (candidates.isEmpty) return base
+    if (candidates.isEmpty) return base.version
     if (mor) {
-      require(d.pc.isEmpty, "merge-on-read DML is not supported on " +
+      require(base.partCols.isEmpty, "merge-on-read DML is not supported on " +
         "hive-partitioned tables — use the copy-on-write default")
       // matched pre-rows, dv-aware, with their (file, position) —
       // persisted: slice rewrite, dv stage and cdf images all read
@@ -2894,11 +2660,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
         // every matched row updates — no when(pred) needed
         val post = matched.select(payload.map(c =>
           set.get(c).map(_.as(c)).getOrElse(matched(c))).toIndexedSeq: _*)
-        if (matched.isEmpty) return base
-        enforceConstraints(post, "update")
+        if (matched.isEmpty) return base.version
+        enforceConstraints(post, "update", base)
         // the updated copies APPEND as new files; the old copies go
         // dead via the dv — the only data written is the touched slice
-        val adds = stage(post)
+        val adds = stage(post, base)
         return morCommit("update", d, matched, adds,
           cdf = if (!cdfImages) None
                 else Some(matched.drop("__fn", "__ri")
@@ -2916,7 +2682,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
             case None => touchedDf(c)
           }
         }.toIndexedSeq: _*)
-        enforceConstraints(rewritten, "update")
+        enforceConstraints(rewritten, "update", base)
         rewritten
       },
       rows => if (!cdfImages) None else {
@@ -2932,9 +2698,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
           .unionByName(pre.select(postCols.toIndexedSeq: _*)
             .withColumn(ChangeTypeCol, lit("update_postimage"))))
       }
-    ).fold(base) { w =>
-      commit("update", w.adds, w.touched, basedOn = Some(base),
-        stats = w.stats, schema = d.sc, cdf = w.cdf,
+    ).fold(base.version) { w =>
+      commit("update", w.adds, w.touched, basedOn = Some(base.version),
+        stats = w.stats, schema = base.schema, cdf = w.cdf,
         tolerateAppends = true, readFiles = candidates)
     }
   }
@@ -2965,9 +2731,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
             mergeSchema: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{coalesce, col}
     import MergeClauses._
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root — append the batch instead")
-    val cur = schemaAt(base).getOrElse(new StructType())
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root — append the batch instead")
+    val cur = base.schema.getOrElse(new StructType())
     val (shared, fresh) = org.apache.spark.sql.graft.shim
       .nullable(updates.schema).fields.toSeq
       .filterNot(_.name.equalsIgnoreCase(key))
@@ -2981,7 +2747,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         s"mergeSchema cannot change column '${f.name}' from " +
           s"${t.simpleString} to ${f.dataType.simpleString}")
     }
-    partColsFor(base).headOption.foreach { p =>
+    base.partCols.headOption.foreach { p =>
       throw new IllegalArgumentException(
         s"table is hive-partitioned on '$p' — use mergeInto (clause " +
           "merge, restages under value-dir chains) or " +
@@ -2992,13 +2758,27 @@ class GraftTable private (val s: SparkSession, val root: String) {
       s"merge key '$key' is not a column of the table")
     val carried = if (mergeSchema) fresh.map(_.name) else Seq.empty
     def src(c: String) = col(s"s.$c")
-    mergeInto(updates, Seq(key),
+    pinned(updates)(mergeIntoBody("merge", base, _, Seq(key),
       matched = Seq(MatchedUpdate(None, (shared.map(f =>
         f.name -> coalesce(src(f.name), col(s"t.${f.name}"))) ++
         carried.map(c => c -> src(c))).toMap)),
       notMatched = Seq(NotMatchedInsert(None,
         (Seq(key) ++ shared.map(_.name) ++ carried).map(c => c -> src(c)).toMap)),
-      cdfImages = cdfImages, mergeSchema = mergeSchema)
+      notMatchedBySource = Seq.empty,
+      cdfImages = cdfImages, mergeSchema = mergeSchema, residual = None))
+  }
+
+  /** Runs `f` on `df` persisted, unpersisting after: the merge source
+    * stays one evaluation across the whole validate-then-stage window
+    * (ADVICE r16, replaceWhere's rule) — the range agg, both probes,
+    * the dup check, the survivor join, the insert anti-join and the
+    * CDF staging each re-execute it, and a non-deterministic source
+    * could otherwise pass the dup check yet stage inconsistent
+    * survivors/inserts/images.
+    */
+  private def pinned[T](df: DataFrame)(f: DataFrame => T): T = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally { p.unpersist(); () }
   }
 
   /** Conditional multi-clause MERGE — Delta's FULL `MERGE INTO`
@@ -3108,18 +2888,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
           df.withColumnRenamed(sk, tk)
         }
       }
-    tagged("merge", tag) { commitAction =>
-      // pin the source across the whole validate-then-stage window
-      // (ADVICE r16, replaceWhere's rule): the range agg, both
-      // probes, the dup check, the survivor join, the insert
-      // anti-join and the CDF staging each re-execute this plan — a
-      // non-deterministic source could pass the dup check yet stage
-      // inconsistent survivors/inserts/images
-      val src = src0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try mergeIntoBody(commitAction, src, keys, matched, notMatched,
-        notMatchedBySource, cdfImages, mergeSchema, residual)
-      finally { src.unpersist(); () }
+    tagged("merge", tag) { (commitAction, base) =>
+      pinned(src0)(mergeIntoBody(commitAction, base, _, keys, matched,
+        notMatched, notMatchedBySource, cdfImages, mergeSchema, residual))
     }.getOrElse(latestVersion)
   }
 
@@ -3134,7 +2905,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     try f finally sc.setJobDescription(prev)
   }
 
-  private def mergeIntoBody(commitAction: String,
+  private def mergeIntoBody(commitAction: String, base: Snapshot,
                             source: DataFrame, keys: Seq[String],
                             matched: Seq[MergeClauses.Matched],
                             notMatched: Seq[MergeClauses.NotMatchedInsert],
@@ -3144,26 +2915,25 @@ class GraftTable private (val s: SparkSession, val root: String) {
                             residual: Option[Column]): Long = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, min, when}
     import MergeClauses._
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root — append the batch instead")
+    require(base.version > 0, s"no graft table at $root — append the batch instead")
     // hive-partitioned tables merge too (round 16 — Delta does): the
     // probes restore the partition columns from paths (DmlScope.read), the
     // rewrite restages under full value-dir chains (dmlStage), so an
     // update that SETs a partition key simply moves the row to its
     // new chain, and partition-column ON keys chain-prune candidates
     val d = new DmlScope(base)
-    val pc = d.pc
+    val pc = base.partCols
     require(keys.nonEmpty, "mergeInto needs at least one ON key")
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "mergeInto needs at least one clause")
-    val payload = d.sc.getOrElse(throw new IllegalStateException(
+    val payload = base.schema.getOrElse(throw new IllegalStateException(
       s"table at $root has no recorded schema"))
     // the full logical row = payload fields + path-restored partition
     // fields (the recorded schema is payload-only on partitioned
     // layouts — partition values live in the value dirs)
     val schema = StructType(payload.fields ++ pc.map(p =>
       org.apache.spark.sql.types.StructField(p,
-        partTypeOf(p, d.live.keys, base))))
+        partTypeOf(p, base.files.keys, base))))
     val tNames = schema.fieldNames.toSeq
     val tSet = tNames.map(_.toLowerCase).toSet
     keys.foreach { k =>
@@ -3290,7 +3060,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         val payloadKeys = keys.zipWithIndex.filterNot { case (k, _) =>
           pc.exists(_.equalsIgnoreCase(k)) }
         val statsKept =
-          if (payloadKeys.isEmpty) d.live.keys.toSeq.sorted
+          if (payloadKeys.isEmpty) base.files.keys.toSeq.sorted
           else d.candidates(payloadKeys.map { case (k, i) =>
             col(k) >= lit(range.get(2 * i)) &&
               col(k) <= lit(range.get(2 * i + 1))
@@ -3350,7 +3120,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       else {
         val conds = notMatchedBySource.map(_.condition)
         val cands =
-          if (conds.exists(_.isEmpty)) d.live.keys.toSeq.sorted
+          if (conds.exists(_.isEmpty)) base.files.keys.toSeq.sorted
           else d.candidates(conds.flatten.map(stripT).reduce(
             org.apache.spark.sql.catalyst.expressions.Or(_, _)))
         if (cands.isEmpty) (cands, Seq.empty[String])
@@ -3380,7 +3150,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // notMatched alone they are read (for the anti-join) but survive
     val touched = ((if (matched.nonEmpty) matchedKeyFiles
                     else Seq.empty) ++ touchedBySource).distinct.sorted
-    if (touched.isEmpty && (srcEmpty || notMatched.isEmpty)) return base
+    if (touched.isEmpty && (srcEmpty || notMatched.isEmpty)) return base.version
 
     // 3. one joined pass: per-row action CASE over touched ⟕ source
     val srcMarked = src.withColumn("__s_exists", lit(true))
@@ -3562,7 +3332,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       insertsRef = insertsSized
       val outRows = insertsSized.map(survivors.unionByName(_))
         .getOrElse(survivors)
-      enforceConstraints(outRows, "merge")
+      enforceConstraints(outRows, "merge", base)
       if (pc.nonEmpty) requirePartConsistent(partMetaOf(outRows, pc), base)
       // CDF images stage CONCURRENTLY with the rewrite (r19, guide
       // §2.6 — overlap independent jobs): both passes read only the
@@ -3604,20 +3374,20 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // zero-row rewrite outputs drop (deleteWhere's rule); and an
       // insert-only merge that inserted nothing publishes no commit
       val (kept, st0) = dropEmpty(jobPhase("merge: stage rewrite + inserts")(
-        dmlStage(outRows, pc)))
+        dmlStage(outRows, base)), base)
       if (touched.isEmpty && kept.isEmpty) {
         // drain the concurrent CDF staging before abandoning the
         // commit, so no background job outlives the verb
         scala.concurrent.Await.ready(cdfFuture,
           scala.concurrent.duration.Duration.Inf)
-        return base
+        return base.version
       }
       val cdf = scala.concurrent.Await.result(cdfFuture,
         scala.concurrent.duration.Duration.Inf)
       // the committed schema carries the evolved PAYLOAD (partition
       // keys stay path-borne, recorded via partMeta)
       val evolvedPayload =
-        if (newFields.isEmpty) d.sc
+        if (newFields.isEmpty) base.schema
         else Some(org.apache.spark.sql.graft.shim.nullable(
           StructType(payload.fields ++ newFields)))
       // operation metrics (Delta's operationMetrics): per-outcome
@@ -3646,7 +3416,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
           case None => jobPhase("merge: insert count")(i.count())
         }
       }
-      commit(commitAction, kept, touched, basedOn = Some(base),
+      commit(commitAction, kept, touched, idempotent = true,
+        basedOn = Some(base.version),
         stats = st0, schema = evolvedPayload, cdf = cdf,
         tolerateAppends = true,
         readFiles = (keyCandidates ++ bsCandidates).distinct,
@@ -3683,9 +3454,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def compact(targetBytes: Long): Long = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val base = latestVersion
-    val liveM = resolveMeta(base)
-    partColsFor(base).headOption.foreach { pc =>
+    val base = snapshot()
+    val liveM = base.files
+    base.partCols.headOption.foreach { pc =>
       throw new IllegalArgumentException(
         s"table is hive-partitioned on '$pc' — a flat rewrite would drop " +
           s"the partition paths and break pruned reads; use " +
@@ -3693,20 +3464,20 @@ class GraftTable private (val s: SparkSession, val root: String) {
     }
     val small = liveM.toSeq.map { case (p, m) => (p, m.bytes) }
       .filter(_._2 < targetBytes / 2).sortBy(_._1)
-    if (small.size <= 1) return base // nothing to gain
+    if (small.size <= 1) return base.version // nothing to gain
     val smallBytes = small.map(_._2).sum
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
     // dv-aware: compacting a dv-carrying small file MATERIALIZES its
     // deletes (the remove clears the dv association)
-    val merged = readMeta(small.map(f => f._1 -> liveM(f._1)), schemaAt(base),
-      cm = colmapAt(base))
+    val merged = readMeta(small.map(f => f._1 -> liveM(f._1)), base.schema,
+      cm = base.colmap)
       .repartition(nOut)
-    val adds = stage(merged)
+    val adds = stage(merged, base)
     // serializable vs row-level DML: a concurrent dv commit on one of
     // the victims would be silently dropped by our remove — abort on
     // any intervening non-append commit (blind appends stay fine)
-    commit("compact", adds, small.map(_._1), basedOn = Some(base),
-      stats = statsOf(adds), tolerateAppends = true)
+    commit("compact", adds, small.map(_._1), basedOn = Some(base.version),
+      stats = statsOf(adds, base), tolerateAppends = true)
   }
 
   /** REORG TABLE … APPLY (PURGE) (Delta's dv materializer): rewrite
@@ -3718,45 +3489,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * while dvs are live. No-op when nothing carries a dv.
     */
   def purge(): Long = {
-    val base = latestVersion
-    val live = resolveMeta(base)
-    val dvd = live.toSeq.filter(_._2.dv.isDefined).sortBy(_._1)
-    if (dvd.isEmpty) return base
-    val sc = schemaAt(base)
-    require(partColsOf(live.keys).isEmpty,
+    val base = snapshot()
+    val dvd = base.files.toSeq.filter(_._2.dv.isDefined).sortBy(_._1)
+    if (dvd.isEmpty) return base.version
+    require(Snapshot.partColsOf(base.files.keys).isEmpty,
       "dv on a hive-partitioned table should be impossible (MoR refuses)")
-    val survivors = readMeta(dvd, sc, cm = colmapAt(base))
-    val adds = stage(survivors)
-    commit("purge", adds, dvd.map(_._1), basedOn = Some(base),
-      stats = statsOf(adds), schema = sc, tolerateAppends = true)
-  }
-
-  /** The ORDERED hive-partition columns of the live set (outermost
-    * value dir first; empty = flat) — parsed from the logged relpaths
-    * (stagePartitioned's construction). Every `k=v` DIRECTORY
-    * component counts, so a two-key layout (`country=…/source=…`)
-    * reports both keys; a converted table's value dirs may sit at the
-    * table root with no parent component, which segment-splitting
-    * handles uniformly.
-    */
-  private def partColsOf(files: Iterable[String]): Seq[String] = {
-    files.iterator
-      .map(f => f.split("/").dropRight(1).toSeq.collect {
-        case GraftTable.PartSegment(k, _) => k
-      })
-      .find(_.nonEmpty).getOrElse(Seq.empty)
-  }
-
-  /** The partition columns GOVERNING version `v`: the recorded
-    * partmeta keys when present — so an emptied-but-still-partitioned
-    * table (a deleteWhere that removed every file) keeps refusing
-    * flat appends until the epoch is explicitly ended (overwrite /
-    * DROP FEATURE write the tombstone) — else the live layout's
-    * parse (legacy pre-partmeta logs).
-    */
-  private def partColsFor(v: Long): Seq[String] = {
-    val rec = partMetaAt(v).map(_.col)
-    if (rec.nonEmpty) rec else partColsOf(resolveMeta(v).keys)
+    val survivors = readMeta(dvd, base.schema, cm = base.colmap)
+    val adds = stage(survivors, base)
+    commit("purge", adds, dvd.map(_._1), basedOn = Some(base.version),
+      stats = statsOf(adds, base), schema = base.schema, tolerateAppends = true)
   }
 
   /** OPTIMIZE for a hive-partitioned table: undersized files rewrite
@@ -3814,17 +3555,17 @@ class GraftTable private (val s: SparkSession, val root: String) {
                                        anchor: Seq[String]): Long = {
     require(targetBytes > 0, "targetBytes must be positive")
     import org.apache.spark.sql.functions.col
-    val base = latestVersion
-    val pcs = partColsFor(base)
+    val base = snapshot()
+    val pcs = base.partCols
     anchor.foreach { a =>
       require(pcs.contains(a),
         s"'$a' is not a partition column of the layout " +
           s"(${pcs.mkString(", ")})")
     }
-    val live = resolve(base).toSeq
+    val live = base.files.toSeq.map { case (p, m) => (p, m.bytes) }
     val inScope = scopeFilter(live, scope)
     val small = inScope.filter(_._2 < targetBytes / 2)
-    if (small.size <= 1) return base
+    if (small.size <= 1) return base.version
     val smallBytes = small.map(_._2).sum
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
     val merged = pcs.foldLeft(s.read
@@ -3832,9 +3573,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
       acc.withColumn(pc,
         partRestore(pc, partTypeOf(pc, small.map(_._1), base)))
     }.repartition(nOut, pcs.map(col): _*)
-    val adds = stagePartitioned(merged, pcs)
-    commit("compact", adds, small.map(_._1), basedOn = Some(base),
-      stats = statsOf(adds), tolerateAppends = true)
+    val adds = stagePartitioned(merged, pcs, base)
+    commit("compact", adds, small.map(_._1), basedOn = Some(base.version),
+      stats = statsOf(adds, base), tolerateAppends = true)
   }
 
   /** OPTIMIZE ZORDER: rewrite the WHOLE live set z-ordered on
@@ -3854,23 +3595,24 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * budget): Delta's `OPTIMIZE ZORDER BY (a, b, c, …)`.
     */
   def compactZOrder(dims: Seq[String], numFiles: Int): Long = {
-    val base = latestVersion
-    val live = resolveMeta(base)
+    val base = snapshot()
+    val live = base.files
     require(live.nonEmpty, "cannot z-order an empty table")
-    partColsFor(base).headOption.foreach { pc =>
+    base.partCols.headOption.foreach { pc =>
       throw new IllegalArgumentException(
         s"table is hive-partitioned on '$pc' — a flat z-order rewrite " +
           "would drop the partition paths and break pruned reads")
     }
     // dv-aware whole-set rewrite: deletes materialize, dvs clear
-    val df = readMeta(live.toSeq, schemaAt(base), cm = colmapAt(base))
+    val df = readAt(base)
     val sub = freshSub()
     ZOrderLayout.writeZOrdered(df,
       dims.map(org.apache.spark.sql.functions.col),
       s"$root/$sub", numFiles)
     val adds = listStaged(sub)
     commit(s"zorder:${dims.mkString(",")}", adds, live.keys.toSeq,
-      basedOn = Some(base), stats = statsOf(adds), tolerateAppends = true)
+      basedOn = Some(base.version), stats = statsOf(adds, base),
+      tolerateAppends = true)
   }
 
   /** Partition-SCOPED OPTIMIZE ZORDER (round 15): rewrite every live
@@ -3902,8 +3644,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
         "z-order refuses on partitioned layouts)")
     require(numFiles > 0, "numFiles must be positive")
     import org.apache.spark.sql.functions.col
-    val base = latestVersion
-    val pcs = partColsFor(base)
+    val base = snapshot()
+    val pcs = base.partCols
     scope.map(_._1).foreach { a =>
       require(pcs.contains(a),
         s"'$a' is not a partition column of the layout " +
@@ -3914,9 +3656,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
         s"'${dims.mkString("','")}' overlap the partition keys " +
         s"(${pcs.mkString(", ")}), whose clustering the value dirs " +
         "already provide")
-    val live = resolveMeta(base).keys.toSeq.sorted.map(p => (p, ()))
+    val live = base.files.keys.toSeq.sorted.map(p => (p, ()))
     val inScope = scopeFilter(live, scope).map(_._1)
-    if (inScope.isEmpty) return base
+    if (inScope.isEmpty) return base.version
     val restored = pcs.foldLeft(
       s.read.parquet(inScope.map(absOf): _*)) { (acc, pc) =>
       acc.withColumn(pc, partRestore(pc, partTypeOf(pc, inScope, base)))
@@ -3930,9 +3672,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-    val adds = stagePartitioned(clustered, pcs)
+    val adds = stagePartitioned(clustered, pcs, base)
     commit(s"zorder:${dims.mkString(",")}", adds, inScope,
-      basedOn = Some(base), stats = statsOf(adds), tolerateAppends = true)
+      basedOn = Some(base.version), stats = statsOf(adds, base),
+      tolerateAppends = true)
   }
 
   /** Adopt a caller-staged parquet directory as ONE atomic (and
@@ -3949,10 +3692,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val staged = new Path(stagedDir)
     // replay: the segment is already in — drop the re-staged copy
     tagged("append", tag, onReplay = () => { fs.delete(staged, true); () }) {
-      action =>
+      (action, base) =>
         // flat-append guard (append's rule): adopted segments are
         // listed flat, so they cannot serve a partitioned layout
-        partColsFor(latestVersion).headOption.foreach { pc =>
+        base.partCols.headOption.foreach { pc =>
           throw new IllegalArgumentException(
             s"table is hive-partitioned on '$pc' — adoptDir stages a " +
               "FLAT segment that pruned reads would miss; land through " +
@@ -3961,15 +3704,16 @@ class GraftTable private (val s: SparkSession, val root: String) {
         // schema recorded from the segment's own footers (no DataFrame
         // here), enforced against the table like any other append
         val segment = s.read.parquet(stagedDir)
-        val sch = appendSchema(segment.schema, mergeSchema = false)
-        enforceConstraints(segment, "adoptDir")
+        val sch = appendSchema(segment.schema, mergeSchema = false, base)
+        enforceConstraints(segment, "adoptDir", base)
         val sub = freshSub()
         if (!fs.exists(new Path(rootPath, DataDir)))
           fs.mkdirs(new Path(rootPath, DataDir))
         require(fs.rename(staged, new Path(rootPath, sub)),
           s"adopt rename failed: $stagedDir -> $root/$sub")
         val adds = listStaged(sub)
-        commit(action, adds, Seq.empty, stats = statsOf(adds),
+        commit(action, adds, Seq.empty, idempotent = true,
+          stats = statsOf(adds, base),
           schema = Some(sch))
     }
   }
@@ -4071,9 +3815,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * any commit is read).
     */
   private def rangeVersions(since: Long, untilVersion: Long): Seq[Long] = {
-    val until = math.min(untilVersion, latestVersion)
-    val vs = versions().filter(v => v > since && v <= until)
-    val missing = ((since + 1) to until).filterNot(vs.contains)
+    val l = log()
+    val until = math.min(untilVersion, l.latest)
+    val vs = l.versions.filter(v => v > since && v <= until)
+    val listed = vs.toSet
+    val missing = ((since + 1) to until).filterNot(listed)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"change feed range ($since, $until] has vacuumed commits: " +
         s"v${missing.head}..v${missing.last}")
@@ -4130,7 +3876,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
           // image slices store them as columns (the DML restore) —
           // restore here too or the union would null-fill the keys
           // on exactly the inserted rows
-          val withKeys = partMetaAt(c.version).foldLeft(base)((acc, pm) =>
+          // (every commit re-records the keys it carries, or their
+          // tombstone: no partmeta line means no keys at that version)
+          val keys = c.partMetaJson.map(GraftTable.partMetaFromJson)
+            .getOrElse(Seq.empty)
+          val withKeys = keys.foldLeft(base)((acc, pm) =>
             acc.withColumn(pm.col, partRestore(pm.col, pm.tpe)))
           Some(withKeys.withColumn(ChangeTypeCol, lit("insert"))
             .withColumn(VersionCol, lit(c.version)))
@@ -4268,11 +4018,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def restore(v: Long): Long = {
     require(v >= 1 && fs.exists(commitPath(v)),
       s"cannot restore to unknown version $v")
-    val target = resolveMeta(v) // may be legitimately EMPTY (delete-all):
+    val to = snapshot(v)
+    val target = to.files // may be legitimately EMPTY (delete-all):
     // the restore then removes every live file and the recorded schema
     // keeps the empty version readable
-    val base = latestVersion
-    val current = resolveMeta(base)
+    val base = snapshot()
+    val current = base.files
     // a file whose DV STATE differs between current and target is
     // re-established by remove+add(+dv) in the one commit (the fold
     // applies removes, then adds — fresh entry, dv=None — then dvs),
@@ -4282,14 +4033,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val removes = current.keySet.filter(p =>
       !target.contains(p) || target(p).dv != current(p).dv).toSeq
     commit(s"restore:$v", readds.map { case (p, m) => (p, m.bytes) }, removes,
-      basedOn = Some(base),
+      basedOn = Some(base.version),
       stats = readds.collect {
         case (p, FileMeta(_, Some(st), _)) => p -> st }.toMap,
-      schema = schemaAt(v),
-      colmap = Some(colmapAt(v)), // epoch-correct names after restore
+      schema = to.schema,
+      colmap = Some(to.colmap), // epoch-correct names after restore
       // partition metadata is epoch-correct too: restoring across the
       // partitioned epoch re-establishes (or clears) the row AS OF v
-      partMeta = Some(partMetaAt(v)).filter(_.nonEmpty), clearPartMeta = true,
+      partMeta = Some(to.partMeta).filter(_.nonEmpty), clearPartMeta = true,
       dvs = readds.flatMap { case (p, m) => m.dv.map(p -> _) })
   }
 
@@ -4318,30 +4069,30 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val dest = new GraftTable(s, destRoot)
     require(dest.latestVersion == 0,
       s"clone destination $destRoot already holds a table")
-    val meta = resolveMeta(v)
+    val src = snapshot(v)
+    val meta = src.files
     val adds = meta.toSeq.sortBy(_._1)
       .map { case (p, m) => (absOf(p), m.bytes) }
     dest.commit(s"clone:$root@$v", adds, Seq.empty,
       stats = meta.collect {
         case (p, m) if m.stats.isDefined => absOf(p) -> m.stats.get },
-      schema = schemaAt(v),
-      constraints = Some(constraintsAt(v)),
+      schema = src.schema,
+      constraints = Some(src.constraints),
       dvs = meta.toSeq.sortBy(_._1).flatMap { case (p, m) =>
         m.dv.map(d => absOf(p) -> d.copy(path = absOf(d.path))) },
-      bloomIdx = Some(bloomIndexAt(v)),
-      colmap = Some(colmapAt(v)))
+      bloomIdx = Some(src.bloomIndex),
+      colmap = Some(src.colmap))
     // carry the COMMITTED-TAG LEDGER (Delta CLONE copies txn
     // identifiers for exactly this): a streaming query repointed at
     // the clone with its old checkpoint must see its already-landed
     // epochs as committed, or replay would double-land them. Seeded
     // as a v1 checkpoint so later checkpoints (which fold the newest
     // ledger forward) and vacuum both preserve it.
-    val srcTags = tagsAsOf(v)
-    if (srcTags.nonEmpty) {
-      if (dest.publish(dest.ckptPath(1L), dest.checkpointBody(1L, srcTags)))
-        dest.writeCkptParquet(1L)
-      dest.tagCache = None // rebuilt from the seeded ledger on next read
-      ()
+    if (src.tags.nonEmpty) {
+      val seeded = dest.snapshot(1L)
+      val withTags = seeded.copy(tags = seeded.tags ++ src.tags)
+      dest.writeCheckpoint(withTags)
+      dest.remember(withTags) // the seeded ledger, not the bare commit
     }
     dest
   }
@@ -4363,14 +4114,16 @@ class GraftTable private (val s: SparkSession, val root: String) {
       s"cannot export manifest for unknown version $v")
     // the ONE reader-feature gate (protocol-row vocabulary) — shared
     // with the DSv2 raw scan path
-    rawReadRefusal(v, "manifest export").foreach(m =>
+    val at = snapshot(v)
+    rawReadRefusal(at, "manifest export").foreach(m =>
       throw new IllegalArgumentException(m))
     val dir = new Path(rootPath, ManifestDir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    partColsOf(resolveMeta(v).keys) match {
+    val files = at.files.keys.toSeq.sorted.map(absOf)
+    Snapshot.partColsOf(at.files.keys) match {
       case Seq() =>
         val out = new Path(dir, f"manifest-v$v%012d.txt")
-        val body = filesAsOf(v).sorted.mkString("", "\n", "\n")
+        val body = files.mkString("", "\n", "\n")
           .getBytes(UTF_8)
         val os = fs.create(out, true)
         os.write(body); os.close()
@@ -4392,7 +4145,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         // (on-disk) form — exactly the symlink-manifest convention:
         // the external engine's partition discovery unescapes them
         // the same way it unescapes data paths
-        filesAsOf(v).groupBy { p =>
+        files.groupBy { p =>
           val segs = p.split("/").dropRight(1).toSeq.collect {
             case seg @ GraftTable.PartSegment(_, _) => seg
           }
@@ -4423,18 +4176,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * O(live files) driver-side existence sweep, no Spark job.
     */
   def fsck(dryRun: Boolean = false): Seq[String] = {
-    val base = latestVersion
-    require(base > 0, s"no graft table at $root")
+    val base = snapshot()
+    require(base.version > 0, s"no graft table at $root")
     // a live file whose DV SIDECAR is missing is lost too: serving it
     // raw would RESURRECT rows a takedown deleted (unsound), so the
     // sound repair is dropping the whole reference — conservative
     // (surviving rows go with it), explicit, never a resurrection
-    val missing = resolveMeta(base).toSeq.collect {
+    val missing = base.files.toSeq.collect {
       case (p, m) if !fs.exists(new Path(absOf(p))) ||
         m.dv.exists(d => !fs.exists(new Path(absOf(d.path)))) => p
     }.sorted
     if (!dryRun && missing.nonEmpty) {
-      commit("fsck", Seq.empty, missing, basedOn = Some(base))
+      commit("fsck", Seq.empty, missing, basedOn = Some(base.version))
       ()
     }
     missing
@@ -4492,10 +4245,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (versions().isEmpty) return // nothing committed: nothing to reclaim
     // checkpoint the horizon so resolution (and the tag ledger) never
     // needs dropped entries
-    if (plan.horizon > 0 && !fs.exists(ckptPath(plan.horizon))) {
-      if (publish(ckptPath(plan.horizon), checkpointBody(plan.horizon)))
-        writeCkptParquet(plan.horizon)
-    }
+    if (plan.horizon > 0 && !fs.exists(ckptPath(plan.horizon)))
+      writeCheckpoint(snapshot(plan.horizon))
     plan.files.foreach { case (rel, _) =>
       fs.delete(new Path(rootPath, rel), false) }
     plan.commits.foreach(v => fs.delete(commitPath(v), false))
@@ -4519,11 +4270,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def vacuumPlan(retainVersions: Int = 2,
                  orphanGraceMillis: Long = 10L * 60 * 1000)
       : GraftTable.VacuumPlan = {
-    val vs = versions()
+    val l = log()
+    val vs = l.versions
     if (vs.isEmpty)
       return GraftTable.VacuumPlan(0L, Seq.empty, Seq.empty, Seq.empty)
     val keep = vs.takeRight(math.max(1, retainVersions))
-    val keptMeta = keep.map(resolveMeta)
+    // one fold across the retained versions, not one resolution each
+    val keptMeta = keep.tail.scanLeft(resolve(keep.head, l)) { (at, v) =>
+      if (v == at.version + 1) at(readCommit(v)) else resolve(v, l)
+    }.map(_.files)
     val referenced = keptMeta.flatMap(_.keys).toSet
     val referencedCdf = keep.flatMap(v => readCommit(v).cdf.map(_._1)).toSet
     // dv refs are DIRECTORIES (one staged dv dir may serve several
@@ -4557,7 +4312,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (fs.exists(dvRoot)) sweep(dvRoot, DvDir,
       r => referencedDv.exists(d => r.startsWith(d + "/")))
     GraftTable.VacuumPlan(horizon, out.result().sorted,
-      vs.filter(_ < horizon), checkpointVersions().filter(_ < horizon))
+      vs.filter(_ < horizon), l.checkpoints.filter(_ < horizon))
   }
 }
 
@@ -4592,6 +4347,17 @@ object GraftTable {
   private val Suffix = ".txt"
   private val CheckpointEvery = 8L
   private val MaxRetries = 64
+  /** One listing of the log: committed versions and checkpoint
+    * versions, ascending.
+    */
+  private final case class LogListing(versions: Seq[Long],
+                                      checkpoints: Seq[Long]) {
+    def latest: Long = versions.lastOption.getOrElse(0L)
+  }
+  /** [[GraftTable.commit]]'s signal that its tagged action is already
+    * in the predecessor: the call is a replay and publishes nothing.
+    */
+  private object TagReplayed extends scala.util.control.ControlThrowable
   /** The CDF change-type / commit-version column names (Delta's). */
   val ChangeTypeCol = "_change_type"
   val VersionCol = "_commit_version"
@@ -5120,7 +4886,7 @@ object GraftTable {
       _.equalsIgnoreCase(p.col)),
       s"cannot convert: files already contain a column named " +
         s"'${p.col}' that the partition dirs would shadow"))
-    t.commit("convert", adds, Seq.empty, stats = t.statsOf(adds),
+    t.commit("convert", adds, Seq.empty, stats = t.statsOf(adds, Snapshot.empty),
       schema = Some(org.apache.spark.sql.graft.shim.nullable(schema)),
       partMeta = if (pm.isEmpty) None else Some(pm))
     t

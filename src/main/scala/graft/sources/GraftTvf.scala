@@ -117,9 +117,9 @@ object GraftTvf {
     val s = SparkSession.active
     import s.implicits._
     val t = GraftTable.forPath(s, pathArg(args, "graft_protocol"))
-    val v = t.latestVersion
-    val rec = t.protocolAt(v)
-    val act = t.activeReaderFeatures(v)
+    val at = t.snapshot()
+    val rec = at.protocol
+    val act = at.activeReaderFeatures
     val rows = (rec ++ act).toSeq.sorted
       .map(f => (f, rec.contains(f), act.contains(f)))
     plan(rows.toDF("feature", "recorded", "active"))
