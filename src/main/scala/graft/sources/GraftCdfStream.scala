@@ -50,7 +50,7 @@ object GraftCdfStream {
 /** `partCols` are the table's recorded partition keys (empty on flat
   * tables): their values ride file PATHS on append slices (restored
   * through the log-backed partitioned index) and STORED COLUMNS on
-  * DML image files (the dmlRead restore wrote them), so both slice
+  * DML image files (the DML read restored them), so both slice
   * shapes serve `payload ++ partCols` uniformly.
   */
 class GraftCdfStreamTable(spark: SparkSession, path: String,
@@ -149,7 +149,7 @@ class GraftCdfMicroBatchStream(spark: SparkSession, root: String,
     if (fCap.isEmpty && bCap.isEmpty) return GraftOffset(latest)
     val perV = table.cdfSliceVersions(floor, latest).map(s => (s._1, s._2))
     val (pos, capBound) = GraftAdmission.walk(s0, perV, fCap, bCap)
-    // cdfSlices OMITS content-neutral versions, so an un-capped walk
+    // cdfSliceVersions OMITS content-neutral versions, so an un-capped walk
     // must still advance the boundary past a metadata-only tail
     if (capBound) pos else GraftOffset(latest)
   }
@@ -189,7 +189,7 @@ class GraftCdfMicroBatchStream(spark: SparkSession, root: String,
     val s0 = start.asInstanceOf[GraftOffset]
     val e0 = end.asInstanceOf[GraftOffset]
     val floor = if (s0.index < 0L) s0.version else s0.version - 1L
-    table.cdfSlices(floor, e0.version).flatMap {
+    table.cdfSliceVersions(floor, e0.version).toSeq.flatMap {
       case (v, files, changeType) =>
         val window = GraftAdmission.window(s0, e0, v, files)
         if (window.isEmpty) Array.empty[InputPartition]

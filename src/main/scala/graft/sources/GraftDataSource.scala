@@ -393,10 +393,23 @@ object GraftDataSource {
       val t = GraftTable.forPath(spark, path)
       val at = t.snapshot()
       require(at.version > 0, s"no graft table at $path (empty log)")
+      // append slices stream their files as raw parquet under the
+      // payload schema, so a live column mapping would serve renamed
+      // columns as null — refuse, like the raw snapshot scan. A stream
+      // resolved at identity never reaches a mapped commit: the slice
+      // walk refuses rename/add/drop (`colmap:` commits). Deletion
+      // vectors do not block: the feed serves each commit's own adds
+      // and images, never the live set.
+      require(at.colmap.isIdentity,
+        s"readChangeFeed stream refused: graft table at $path " +
+          s"(v${at.version}) has the active reader feature " +
+          s"${GraftTable.Features.ColumnMapping}, which the stream's " +
+          "raw-parquet slices cannot apply — read the batch " +
+          "GraftTable.changeFeed() instead")
       val payload = at.schema.getOrElse(t.readVersion(at.version).schema)
       // partitioned tables serve their keys too: append slices
       // restore them from paths through the log-backed index, DML
-      // image files store them as columns (the dmlRead restore)
+      // image files store them as columns (the DML read restored them)
       return new GraftCdfStreamTable(spark, path, payload, at.partMeta)
     }
     val version = Option(options.get("versionAsOf")).map(_.toLong)

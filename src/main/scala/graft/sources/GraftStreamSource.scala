@@ -292,7 +292,7 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
                            e0: GraftOffset): Seq[(String, Long)] = {
     val floor = if (s0.index < 0L) s0.version else s0.version - 1L
     if (e0.version <= floor && e0.index < 0L) return Seq.empty
-    table.appendSliceByVersion(floor, e0.version).flatMap {
+    table.appendSliceVersions(floor, e0.version).toSeq.flatMap {
       case (v, files) => GraftAdmission.window(s0, e0, v, files)
     }
   }

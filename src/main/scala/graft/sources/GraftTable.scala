@@ -457,12 +457,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
     else df.select(df.columns.map(c =>
       df(c).as(cm.phys(c))).toIndexedSeq: _*)
 
-  /** The physical-file view of a recorded (logical) schema. */
-  private def physSchema(st: StructType,
-                         cm: GraftTable.ColMap): StructType =
-    if (cm.isIdentity) st
-    else StructType(st.fields.map(f => f.copy(name = cm.phys(f.name))))
-
   /** Predicate attribute names logical → physical, for evaluating
     * pushed/DML predicates against the PHYSICAL stats tokens.
     */
@@ -676,8 +670,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def read(): DataFrame = readAt(snapshot())
 
   /** The rows of a pinned snapshot (deletion vectors applied). */
-  private def readAt(at: Snapshot): DataFrame =
-    readMeta(at.files.toSeq, at.schema, cm = at.colmap)
+  private def readAt(at: Snapshot): DataFrame = readLive(at, at.files.keys.toSeq)
 
   /** The live files of version `v` as absolute paths — the snapshot
     * a reader (readVersion, or the `graft` DataSource) scans. May be
@@ -737,71 +730,87 @@ class GraftTable private (val s: SparkSession, val root: String) {
     a.substring(j + 1)
   }
 
-  /** The payload rows of `metaSeq`'s files with every DELETION VECTOR
-    * applied: files without a dv scan straight through Spark's parquet
-    * reader; files with one read WITH their per-file row position
-    * (`_metadata.file_name` / `_metadata.row_index` — stable because
-    * table files are immutable) and anti-join the dv's dead
-    * (file, position) pairs, so marked rows vanish without the data
-    * file ever being rewritten (Delta's merge-on-read scan). The dv
-    * side is sidecar-sized — AQE broadcasts it; the anti-join costs
-    * nothing on tables with no dvs (that branch is not planned).
+  /** THE reader of the table's own data files — every read, rewrite
+    * and change feed goes through it, so column mapping, deletion
+    * vectors and partition keys are served by one rule:
+    *   1. SCHEMA: files store PHYSICAL names; they are read through
+    *      the recorded (logical) schema `sc` mapped by `cm`, so a
+    *      renamed column keeps its data, a re-added name reads its
+    *      fresh physical column (null in older files) and files that
+    *      predate an addColumn read null there. `sc = None` (legacy
+    *      log) infers from the footers;
+    *   2. LOGICAL NAMES: a non-identity `cm` projects each physical
+    *      column back to its logical name, in `sc`'s order;
+    *   3. DELETION VECTORS: files without a dv scan straight through
+    *      Spark's parquet reader; files with one read WITH their
+    *      per-file row position (`_metadata.file_path` /
+    *      `_metadata.row_index` — stable because table files are
+    *      immutable) and anti-join the dv's dead (file, position)
+    *      pairs, so marked rows vanish without the data file ever being
+    *      rewritten (Delta's merge-on-read scan). The dv side is
+    *      sidecar-sized — AQE broadcasts it; tables without dvs never
+    *      plan the anti-join;
+    *   4. PARTITION KEYS: each of `keys` is restored from the row's
+    *      file path ([[partRestore]]) and appended after the payload,
+    *      on the scan itself (before any dv join, where
+    *      input_file_name still resolves).
     * `keepPos` retains (__fn, __ri) on every row — the MoR writers'
     * probe reads use it to name the positions they mark dead.
-    *
-    * Keying is by file BASENAME: Spark part-file names embed the
-    * write-job UUID, so basenames are unique across the table
-    * (asserted below — a collision would mask rows in the wrong file).
+    * dv keying is by [[fileKey]] (asserted unique below — a collision
+    * would mask rows in the wrong file).
     */
   private def readMeta(metaSeq: Seq[(String, FileMeta)],
                        sc: Option[StructType],
-                       keepPos: Boolean = false,
-                       cm: GraftTable.ColMap = GraftTable.ColMap.empty)
+                       cm: GraftTable.ColMap,
+                       keys: Seq[GraftTable.PartMeta] = Seq.empty,
+                       keepPos: Boolean = false)
       : DataFrame = {
     import org.apache.spark.sql.functions.col
     val (dvd, plain) = metaSeq.sortBy(_._1).partition(_._2.dv.isDefined)
     def posCols(st: StructType) =
       st.add("__fn", StringType).add("__ri", LongType)
-    def readP(paths: Seq[String], pos: Boolean): DataFrame =
-      if (paths.isEmpty) {
-        val st = sc.getOrElse(sys.error(
-          "empty live set and no recorded schema (legacy log) — " +
-            "nothing to infer a schema from"))
-        s.createDataFrame(s.sparkContext.emptyRDD[Row],
-          if (pos) posCols(st) else st)
-      } else {
-        // files store PHYSICAL names: read through the physical
-        // schema, derive the pos columns while _metadata is still
-        // resolvable, then project back to the LOGICAL names
-        val raw = sc match {
-          case Some(st) =>
-            s.read.schema(physSchema(st, cm))
-              .parquet(paths.map(absOf): _*)
-          case None => s.read.parquet(paths.map(absOf): _*)
+    def readP(paths: Seq[String], pos: Boolean): DataFrame = {
+      val payload =
+        if (paths.isEmpty) {
+          val st = sc.getOrElse(sys.error(
+            "empty live set and no recorded schema (legacy log) — " +
+              "nothing to infer a schema from"))
+          s.createDataFrame(s.sparkContext.emptyRDD[Row],
+            if (pos) posCols(st) else st)
+        } else {
+          // derive the pos columns while _metadata is still resolvable,
+          // then project back to the LOGICAL names
+          val raw = sc match {
+            case Some(st) =>
+              s.read.schema(cm.physical(st)).parquet(paths.map(absOf): _*)
+            case None => s.read.parquet(paths.map(absOf): _*)
+          }
+          // _metadata.file_path serves the URI form — the on-disk name
+          // percent-ENCODED once more (a string-partition value dir
+          // `c=a%3Db` arrives as `c=a%253Db`) — while fileKey/byBaseName
+          // key on the raw path, so the probe key decodes that one URI
+          // layer (URI encoding never encodes '/', so splitting first is
+          // component-safe; under integer-valued layouts the decode is a
+          // no-op)
+          val withPos =
+            if (pos) raw.withColumn("__fn",
+              graft.functions.GraftFunctions.path_unescape(
+                org.apache.spark.sql.functions.substring_index(
+                  col("_metadata.file_path"), "/", -2)))
+              .withColumn("__ri", col("_metadata.row_index"))
+            else raw
+          sc match {
+            case Some(st) if !cm.isIdentity =>
+              withPos.select((st.fields.map(f =>
+                col(cm.phys(f.name)).as(f.name)) ++
+                (if (pos) Seq(col("__fn"), col("__ri")) else Nil))
+                .toIndexedSeq: _*)
+            case _ => withPos
+          }
         }
-        // _metadata.file_path serves the URI form — the on-disk name
-        // percent-ENCODED once more (a string-partition value dir
-        // `c=a%3Db` arrives as `c=a%253Db`) — while fileKey/byBaseName
-        // key on the raw path, so the probe key decodes that one URI
-        // layer (URI encoding never encodes '/', so splitting first is
-        // component-safe; under integer-valued layouts the decode is a
-        // no-op)
-        val withPos =
-          if (pos) raw.withColumn("__fn",
-            graft.functions.GraftFunctions.path_unescape(
-              org.apache.spark.sql.functions.substring_index(
-                col("_metadata.file_path"), "/", -2)))
-            .withColumn("__ri", col("_metadata.row_index"))
-          else raw
-        sc match {
-          case Some(st) if !cm.isIdentity =>
-            withPos.select((st.fields.map(f =>
-              col(cm.phys(f.name)).as(f.name)) ++
-              (if (pos) Seq(col("__fn"), col("__ri")) else Nil))
-              .toIndexedSeq: _*)
-          case _ => withPos
-        }
-      }
+      keys.foldLeft(payload)((acc, pm) =>
+        acc.withColumn(pm.col, partRestore(pm.col, pm.tpe)))
+    }
     if (dvd.isEmpty) readP(plain.map(_._1), keepPos)
     else {
       val names = dvd.map(f => fileKey(f._1))
@@ -825,6 +834,21 @@ class GraftTable private (val s: SparkSession, val root: String) {
       else readP(plain.map(_._1), keepPos).unionByName(cleaned)
     }
   }
+
+  /** [[readMeta]] over the live files `paths` of `at`, under its
+    * recorded schema and column mapping; `keys` restores every
+    * partition column of the layout (the DML, rewrite and
+    * `readPartitionedColumn` shape — `read()` and `readPartitions`
+    * serve none).
+    */
+  private def readLive(at: Snapshot, paths: Seq[String],
+                       keys: Boolean = false,
+                       keepPos: Boolean = false): DataFrame =
+    readMeta(paths.map(p => p -> at.files(p)), at.schema, at.colmap,
+      if (!keys) Seq.empty
+      else at.partCols.map(pc =>
+        GraftTable.PartMeta(pc, partTypeOf(pc, paths, at))),
+      keepPos)
 
   /** The newest version committed at or before `tsMillis` — the
     * TIMESTAMP AS OF resolution (commit wall-clocks are recorded in
@@ -938,9 +962,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val at = snapshot()
     val survivors = statsCandidates(at.files,
       org.apache.spark.sql.graft.shim.catalystExpression(pred), at.colmap)
-      .map(p => p -> at.files(p))
-    if (survivors.isEmpty && at.schema.isEmpty) readAt(at).filter(pred) // legacy log
-    else readMeta(survivors, at.schema, cm = at.colmap).filter(pred)
+    // a legacy log (no recorded schema) infers from every live file
+    readLive(at,
+      if (survivors.isEmpty && at.schema.isEmpty) at.files.keys.toSeq
+      else survivors).filter(pred)
   }
 
   // ---- writes ---------------------------------------------------------
@@ -1652,36 +1677,29 @@ class GraftTable private (val s: SparkSession, val root: String) {
       .sortBy(v => Option(v)) // nulls first, stable
   }
 
-  /** Token-match core of the partition-subset readers: live files
-    * whose path carries any of `tokens`, read through the RECORDED
-    * physical schema (readMeta's rule — without it a colmapped or
-    * schema-evolved subset would unresolved-column-fail on files that
-    * predate an addColumn, ADVICE r12) and projected to logical names.
+  /** The partition-subset readers' core: the latest live files under
+    * any of `values`' value dirs of `partCol` (logical, unescaped —
+    * the partToken contract), read through [[readLive]]. None if
+    * nothing matches.
     */
-  private def readPartitionFiles(tokens: Seq[String], at: Snapshot)
-      : Option[(Seq[String], DataFrame)] = {
-    val files = at.files.keys
-      .filter(p => tokens.exists(("/" + p).contains)).toSeq.sorted
-    if (files.isEmpty) None
-    else {
-      val raw = at.schema match {
-        case Some(st) => s.read.schema(physSchema(st, at.colmap))
-          .parquet(files.map(absOf): _*)
-        case None => s.read.parquet(files.map(absOf): _*)
-      }
-      Some((files, logicalView(raw, at)))
-    }
+  private def readPartitionTokens(partCol: String, values: Seq[String],
+                                  keys: Boolean): Option[DataFrame] = {
+    val at = snapshot()
+    val tokens = values.map(v => partToken(partCol, v))
+    val files = at.files.keys.filter(p => tokens.exists(("/" + p).contains)).toSeq
+    if (files.isEmpty) None else Some(readLive(at, files, keys))
   }
 
-  /** Read the named partitions WITH the partition column restored:
-    * ONE scan over the log-pruned file list, the value parsed back
-    * from each row's file path (the partition dir is in the path by
-    * stagePartitioned's construction) — no per-value scan fan-out,
-    * no directory listing. None if nothing matches.
+  /** Read the named partitions WITH every partition column of the
+    * layout restored (on a multi-key table the caller filtered on
+    * `country` but still needs `source`): ONE scan over the
+    * log-pruned file list, each value parsed back from the row's file
+    * path — no per-value scan fan-out, no directory listing. None if
+    * nothing matches.
     */
   def readPartitionedColumn(partCol: String,
                             values: Seq[Long]): Option[DataFrame] =
-    readPartitionedColumnTokens(partCol, values.map(_.toString))
+    readPartitionTokens(partCol, values.map(_.toString), keys = true)
 
   /** [[readPartitionedColumn]] for string-keyed layouts: `values` are
     * the logical (unescaped) strings; matching and restore go through
@@ -1690,36 +1708,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def readPartitionedColumnString(partCol: String,
                                   values: Seq[String]): Option[DataFrame] =
-    readPartitionedColumnTokens(partCol, values)
-
-  private def readPartitionedColumnTokens(partCol: String,
-                                          values: Seq[String])
-      : Option[DataFrame] = {
-    val at = snapshot()
-    readPartitionFiles(values.map(v => partToken(partCol, v)), at).map {
-      case (files, df) =>
-        // restore EVERY layout key, not just the pruned one: on a
-        // multi-key table the caller filtered on `country` but still
-        // needs `source` as a column
-        Snapshot.partColsOf(files).foldLeft(df)((acc, pc) =>
-          acc.withColumn(pc, partRestore(pc, partTypeOf(pc, files, at))))
-    }
-  }
-
-  /** Physical-file frame → LOGICAL column view at the latest version
-    * (identity mapping: pass-through) — what lets the partition-
-    * subset readers serve renamed/dropped-column tables: files always
-    * store physical names; the projection selects exactly the live
-    * logical schema.
-    */
-  private def logicalView(df: DataFrame, at: Snapshot): DataFrame = {
-    val cm = at.colmap
-    if (cm.isIdentity) df
-    else at.schema.fold(df)(sc =>
-      df.select(sc.fields.map(f =>
-        org.apache.spark.sql.functions.col(cm.phys(f.name)).as(f.name))
-        .toIndexedSeq: _*))
-  }
+    readPartitionTokens(partCol, values, keys = true)
 
   /** Dynamic-partition-overwrite as ONE atomic commit (Delta's
     * replaceWhere): every live file under `partCol` ∈ `values` is
@@ -2130,16 +2119,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * empty frame with the right schema.
     */
   def readPartitions(partCol: String, values: Seq[Long]): Option[DataFrame] =
-    // no basePath/partition recovery: callers key on real columns and
-    // re-derive the partition value (s7 recomputes pmod(user_id, n))
-    readPartitionFiles(values.map(v => partToken(partCol, v.toString)),
-      snapshot()).map(_._2)
+    // no key restore: callers key on real columns and re-derive the
+    // partition value (s7 recomputes pmod(user_id, n))
+    readPartitionTokens(partCol, values.map(_.toString), keys = false)
 
   /** [[readPartitions]] for string-keyed layouts. */
   def readPartitionsString(partCol: String,
                            values: Seq[String]): Option[DataFrame] =
-    readPartitionFiles(values.map(v => partToken(partCol, v)), snapshot())
-      .map(_._2)
+    readPartitionTokens(partCol, values, keys = false)
 
   /** Exactly-once streaming append: the tag (a micro-batch id) is
     * recorded in the commit action, and a replayed batch whose tag is
@@ -2178,7 +2165,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * the parquet schema needs translating.
     */
   private[sources] def physicalWriteSchema(sch: StructType): StructType =
-    physSchema(sch, snapshot().colmap)
+    snapshot().colmap.physical(sch)
 
   /** One micro-batch of the DSv2 STREAMING WRITE: the executor-staged
     * files (already under the table root) land as ONE idempotent-
@@ -2222,17 +2209,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
         // `if (overwrite) schema`), so the constraint read must use
         // the identity mapping or a renamed column reads back all-null
         // and a valid INSERT OVERWRITE aborts on a phantom violation.
-        val cm = if (overwrite) GraftTable.ColMap.empty else base.colmap
-        val raw = s.read
-          .schema(physSchema(
-            org.apache.spark.sql.graft.shim.nullable(sch), cm))
-          .parquet(adds.map(a => s"$root/${a._1}"): _*)
-        val logical =
-          if (cm.isIdentity) raw
-          else raw.select(sch.fields.map(f =>
-            org.apache.spark.sql.functions.col(cm.phys(f.name))
-              .as(f.name)).toIndexedSeq: _*)
-        enforceConstraints(logical, "stagedWrite", base)
+        enforceConstraints(
+          readMeta(adds.map { case (p, n) => p -> FileMeta(n, None) },
+            Some(org.apache.spark.sql.graft.shim.nullable(sch)),
+            if (overwrite) GraftTable.ColMap.empty else base.colmap),
+          "stagedWrite", base)
       }
     } catch {
       case e: Throwable =>
@@ -2381,11 +2362,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       * already-dead rows.
       */
     def read(paths: Seq[String], keepPos: Boolean = false): DataFrame =
-      base.partCols.foldLeft(readMeta(paths.map(p => p -> base.files(p)),
-        base.schema, keepPos, base.colmap)) {
-        (acc, c) => acc.withColumn(c,
-          partRestore(c, partTypeOf(c, paths, base)))
-      }
+      readLive(base, paths, keys = true, keepPos = keepPos)
 
     def candidates(pred: org.apache.spark.sql.catalyst.expressions.Expression)
         : Seq[String] = statsCandidates(base.files, pred, base.colmap)
@@ -3469,9 +3446,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
     // dv-aware: compacting a dv-carrying small file MATERIALIZES its
     // deletes (the remove clears the dv association)
-    val merged = readMeta(small.map(f => f._1 -> liveM(f._1)), base.schema,
-      cm = base.colmap)
-      .repartition(nOut)
+    val merged = readLive(base, small.map(_._1)).repartition(nOut)
     val adds = stage(merged, base)
     // serializable vs row-level DML: a concurrent dv commit on one of
     // the victims would be silently dropped by our remove — abort on
@@ -3494,7 +3469,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (dvd.isEmpty) return base.version
     require(Snapshot.partColsOf(base.files.keys).isEmpty,
       "dv on a hive-partitioned table should be impossible (MoR refuses)")
-    val survivors = readMeta(dvd, base.schema, cm = base.colmap)
+    val survivors = readLive(base, dvd.map(_._1))
     val adds = stage(survivors, base)
     commit("purge", adds, dvd.map(_._1), basedOn = Some(base.version),
       stats = statsOf(adds, base), schema = base.schema, tolerateAppends = true)
@@ -3568,11 +3543,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (small.size <= 1) return base.version
     val smallBytes = small.map(_._2).sum
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
-    val merged = pcs.foldLeft(s.read
-      .parquet(small.map(f => absOf(f._1)): _*)) { (acc, pc) =>
-      acc.withColumn(pc,
-        partRestore(pc, partTypeOf(pc, small.map(_._1), base)))
-    }.repartition(nOut, pcs.map(col): _*)
+    val merged = readLive(base, small.map(_._1), keys = true)
+      .repartition(nOut, pcs.map(col): _*)
     val adds = stagePartitioned(merged, pcs, base)
     commit("compact", adds, small.map(_._1), basedOn = Some(base.version),
       stats = statsOf(adds, base), tolerateAppends = true)
@@ -3603,11 +3575,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
         s"table is hive-partitioned on '$pc' — a flat z-order rewrite " +
           "would drop the partition paths and break pruned reads")
     }
-    // dv-aware whole-set rewrite: deletes materialize, dvs clear
-    val df = readAt(base)
+    // dv-aware whole-set rewrite: deletes materialize, dvs clear; the
+    // files stage under PHYSICAL names like every other rewrite
+    val cm = base.colmap
     val sub = freshSub()
-    ZOrderLayout.writeZOrdered(df,
-      dims.map(org.apache.spark.sql.functions.col),
+    ZOrderLayout.writeZOrdered(toPhysical(readAt(base), cm),
+      dims.map(d => org.apache.spark.sql.functions.col(cm.phys(d))),
       s"$root/$sub", numFiles)
     val adds = listStaged(sub)
     commit(s"zorder:${dims.mkString(",")}", adds, live.keys.toSeq,
@@ -3659,10 +3632,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val live = base.files.keys.toSeq.sorted.map(p => (p, ()))
     val inScope = scopeFilter(live, scope).map(_._1)
     if (inScope.isEmpty) return base.version
-    val restored = pcs.foldLeft(
-      s.read.parquet(inScope.map(absOf): _*)) { (acc, pc) =>
-      acc.withColumn(pc, partRestore(pc, partTypeOf(pc, inScope, base)))
-    }
+    val restored = readLive(base, inScope, keys = true)
     // range-normalized z-value (round 16): raw keys past 2^31 would
     // alias in the spread masks and the re-cluster would silently
     // stop pruning — see ZOrderLayout.zvalNormalizedOver
@@ -3730,33 +3700,36 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def changesSince(sinceVersion: Long,
                    untilVersion: Long = Long.MaxValue): Option[DataFrame] = {
-    val files = appendSliceFiles(sinceVersion, untilVersion)
-    if (files.isEmpty) None
-    else Some(s.read.parquet(files: _*))
+    val appends = appendSliceVersions(sinceVersion, untilVersion)
+      .collect { case (v, files) if files.nonEmpty => readCommit(v) }.toSeq
+    // read()'s shape (no partition keys); one scan per distinct
+    // (schema, mapping) the range's commits record — one, unless the
+    // range crosses a mergeSchema evolution
+    val scans = appends.groupBy(c => (c.schemaJson, c.colmapJson)).values.toSeq
+      .sortBy(_.head.version).map(cs => appendedRows(cs, keys = false))
+    if (scans.isEmpty) None
+    else Some(scans.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
-  /** The absolute file paths the append commits in (since, until]
-    * added — the deterministic micro-batch slice behind both the
-    * batch change feed and the streaming source's offsets. Refuses
-    * non-append commits in the range (their adds are REWRITES of
-    * existing rows, not new data).
+  /** The rows append commits `cs` added, through [[readMeta]] under
+    * the schema, column mapping and (with `keys`) partition keys their
+    * own lines record — every commit re-records them, so no snapshot
+    * is folded per version. `cs` all record the same lines; the head's
+    * are used.
     */
-  private[sources] def appendSliceFiles(sinceVersion: Long,
-                                        untilVersion: Long): Seq[String] =
-    appendSliceFileSizes(sinceVersion, untilVersion).map(_._1)
+  private def appendedRows(cs: Seq[Commit], keys: Boolean): DataFrame = {
+    val c = cs.head
+    readMeta(cs.flatMap(_.adds).map(a => a.path -> FileMeta(a.bytes, a.stats)),
+      c.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType]),
+      c.colmapJson.fold(GraftTable.ColMap.empty)(GraftTable.colmapFromJson),
+      if (keys) c.partMetaJson.fold(Seq.empty[GraftTable.PartMeta])(
+        GraftTable.partMetaFromJson)
+      else Seq.empty)
+  }
 
-  /** [[appendSliceFiles]] with the log-recorded byte sizes — what the
-    * streaming source's log-backed file index plans splits from
-    * (no filesystem stat per micro-batch file).
-    */
-  private[sources] def appendSliceFileSizes(sinceVersion: Long,
-                                            untilVersion: Long)
-      : Seq[(String, Long)] =
-    appendSliceByVersion(sinceVersion, untilVersion)
-      .flatMap(_._2).sortBy(_._1)
-
-  /** [[appendSliceFileSizes]] WITH the version structure kept:
-    * one (version, path-sorted files) entry per commit in (since,
+  /** The append slices of (since, until] — what [[changesSince]] and
+    * the streaming source serve — one (version, path-sorted absolute
+    * files with their log-recorded sizes) entry per commit in (since,
     * until]. The per-version intra-commit file ORDER is what makes a
     * file-granular stream offset (version, fileIndex) deterministic
     * forever — commits are immutable and the sort is total, so the
@@ -3764,14 +3737,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * admission-controlled source's replay contract). Metadata-only
     * commits contribute an empty file list; non-append commits refuse
     * (their adds are rewrites, not new data).
-    */
-  private[sources] def appendSliceByVersion(sinceVersion: Long,
-                                            untilVersion: Long)
-      : Seq[(Long, Seq[(String, Long)])] =
-    appendSliceVersions(sinceVersion, untilVersion).toSeq
-
-  /** The LAZY form: commits are read (and the non-append refusal
-    * raised) only as the iterator is PULLED — what keeps an
+    *
+    * LAZY: commits are read (and the non-append refusal raised) only
+    * as the iterator is PULLED — what keeps an
     * admission-capped `latestOffset` walk O(admitted commits) per
     * trigger instead of O(remaining backlog): a 100k-commit bootstrap
     * at maxFilesPerTrigger=small would otherwise do quadratic work
@@ -3799,15 +3767,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
       (c.version,
         c.adds.map(a => (s"$root/${a.path}", a.bytes)).sortBy(_._1))
     }
-
-  /** The commits in (since, until∧latest], refusing a vacuumed gap:
-    * if vacuum dropped any commit in the range, the feed would
-    * silently lose those rows (and couldn't even see a dropped
-    * non-append commit to refuse it) — throw instead of serving a
-    * wrong feed.
-    */
-  private def commitRange(since: Long, untilVersion: Long): Seq[Commit] =
-    rangeVersions(since, untilVersion).map(readCommit)
 
   /** The gap-checked version list of (since, until∧latest] — the
     * eager half every feed range shares (a vacuumed gap anywhere in
@@ -3842,56 +3801,25 @@ class GraftTable private (val s: SparkSession, val root: String) {
     *   - overwrite/restore commits have no row-level images
     *     (they rewrite whole scopes) — the feed still REFUSES those
     *     ranges rather than lying; fall back to a snapshot diff.
-    * Returns None when the range changed nothing.
+    * That rule lives once, in [[cdfSliceVersions]] — the walk the CDF
+    * stream plans from too. Append slices read through [[readMeta]]
+    * under their own commit's schema, column mapping and partition
+    * keys. Returns None when the range changed nothing.
     */
   def changeFeed(sinceVersion: Long,
                  untilVersion: Long = Long.MaxValue): Option[DataFrame] = {
     import org.apache.spark.sql.functions.lit
-    val commits = commitRange(sinceVersion, untilVersion)
-    val unsupported = commits.filterNot(c =>
-      c.action.startsWith("append") ||
-        GraftTable.isMergeAction(c.action) ||
-        c.action == "delete" || c.action == "update" ||
-        (GraftTable.isReplaceAction(c.action) && c.cdf.nonEmpty) ||
-        c.action == "compact" || c.action == "purge" ||
-        c.action.startsWith("zorder:") ||
-        c.action.startsWith("constraint:") ||
-        c.action.startsWith("protocol:"))
-    if (unsupported.nonEmpty) throw new IllegalStateException(
-      "row-level change feed undefined across whole-scope rewrites: " +
-        unsupported.map(c => s"v${c.version}=${c.action}").mkString(",") +
-        " — fall back to a snapshot diff of the two versions")
-    val slices = commits.flatMap { c =>
-      if (c.action.startsWith("append")) {
-        val files = c.adds.map(_.path).sorted
-        if (files.isEmpty) None
-        else {
-          val base = c.schemaJson match {
-            case Some(j) => s.read
-              .schema(DataType.fromJson(j).asInstanceOf[StructType])
-              .parquet(files.map(f => s"$root/$f"): _*)
-            case None => s.read.parquet(files.map(f => s"$root/$f"): _*)
-          }
-          // partitioned appends carry their keys in the PATHS; the
-          // image slices store them as columns (the DML restore) —
-          // restore here too or the union would null-fill the keys
-          // on exactly the inserted rows
-          // (every commit re-records the keys it carries, or their
-          // tombstone: no partmeta line means no keys at that version)
-          val keys = c.partMetaJson.map(GraftTable.partMetaFromJson)
-            .getOrElse(Seq.empty)
-          val withKeys = keys.foldLeft(base)((acc, pm) =>
-            acc.withColumn(pm.col, partRestore(pm.col, pm.tpe)))
-          Some(withKeys.withColumn(ChangeTypeCol, lit("insert"))
-            .withColumn(VersionCol, lit(c.version)))
-        }
-      } else if (GraftTable.isMergeAction(c.action) ||
-          c.action == "delete" ||
-          c.action == "update" || GraftTable.isReplaceAction(c.action)) {
-        if (c.cdf.isEmpty) None
-        else Some(s.read.parquet(c.cdf.map(f => s"$root/${f._1}"): _*)
-          .withColumn(VersionCol, lit(c.version)))
-      } else None // compact / purge / zorder: content-neutral
+    val slices = cdfSliceVersions(sinceVersion, untilVersion).toSeq.map {
+      case (v, _, Some(insert)) =>
+        // partitioned appends carry their keys in the PATHS; the image
+        // slices store them as columns (the DML restore) — restore
+        // here too or the union would null-fill the keys on exactly
+        // the inserted rows
+        appendedRows(Seq(readCommit(v)), keys = true)
+          .withColumn(ChangeTypeCol, lit(insert))
+          .withColumn(VersionCol, lit(v))
+      case (v, images, None) =>
+        s.read.parquet(images.map(_._1): _*).withColumn(VersionCol, lit(v))
     }
     if (slices.isEmpty) None
     // allowMissingColumns: a feed range may CROSS an additive schema
@@ -3900,19 +3828,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
     else Some(slices.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
-  /** The commits in (since, until] as CDF stream slices:
-    * (version, absolute files, constant change type) — `Some("insert")`
-    * for append slices (payload-shaped files), `None` for DML image
-    * files (they carry their own `_change_type` column). Content-
-    * neutral commits contribute nothing; whole-scope rewrites refuse
-    * (changeFeed's rule). The streaming CDF source plans its
-    * micro-batch partitions from exactly this.
-    */
-  private[sources] def cdfSlices(since: Long, until: Long)
-      : Seq[(Long, Seq[(String, Long)], Option[String])] =
-    cdfSliceVersions(since, until).toSeq
-
-  /** The LAZY form of [[cdfSlices]] (appendSliceVersions' rule): the
+  /** The commits in (since, until] as CDF slices: (version, absolute
+    * files, constant change type) — `Some("insert")` for append slices
+    * (payload-shaped files), `None` for DML image files (they carry
+    * their own `_change_type` column). Content-neutral commits
+    * contribute nothing; whole-scope rewrites refuse (changeFeed's
+    * rule). [[changeFeed]] and the streaming CDF source both plan from
+    * exactly this. LAZY (appendSliceVersions' rule): the
     * admission-capped CDF walk reads only the commits it admits per
     * trigger, and the refusal on a whole-scope rewrite fires when the
     * walk REACHES it.
@@ -3953,21 +3875,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * refusal of non-append ranges.
     */
   def nextChanges(cursorDir: String)
-      : (Option[DataFrame], Long, Long, () => Unit) = {
-    val cursor = GraftTable.forPath(s, cursorDir)
-    val from =
-      if (cursor.latestVersion == 0) 0L
-      else cursor.read().agg(org.apache.spark.sql.functions.max("consumed_version"))
-        .head.getLong(0)
-    val to = latestVersion
-    val df = if (to > from) changesSince(from, to) else None
-    val commitFn = () => {
-      import s.implicits._
-      cursor.append(Seq(to).toDF("consumed_version").coalesce(1))
-      ()
-    }
-    (df, from, to, commitFn)
-  }
+      : (Option[DataFrame], Long, Long, () => Unit) =
+    nextFrom(cursorDir)(changesSince(_, _))
 
   /** [[nextChanges]] for the ROW-LEVEL feed (round 16 — the
     * reference's `sync_tags` consumer, app.py:6631, downstream of the
@@ -3981,6 +3890,14 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * exactly-once discipline: load → process → `commit()`.
     */
   def nextRowChanges(cursorDir: String)
+      : (Option[DataFrame], Long, Long, () => Unit) =
+    nextFrom(cursorDir)(changeFeed(_, _))
+
+  /** The cursor loop both consumers share: `feed` over (consumed,
+    * latest], and the callback that records `latest` as consumed.
+    */
+  private def nextFrom(cursorDir: String)
+                      (feed: (Long, Long) => Option[DataFrame])
       : (Option[DataFrame], Long, Long, () => Unit) = {
     val cursor = GraftTable.forPath(s, cursorDir)
     val from =
@@ -3988,7 +3905,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       else cursor.read().agg(org.apache.spark.sql.functions.max("consumed_version"))
         .head.getLong(0)
     val to = latestVersion
-    val df = if (to > from) changeFeed(from, to) else None
+    val df = if (to > from) feed(from, to) else None
     val commitFn = () => {
       import s.implicits._
       cursor.append(Seq(to).toDF("consumed_version").coalesce(1))
@@ -4437,6 +4354,10 @@ object GraftTable {
     def isIdentity: Boolean =
       dead.isEmpty && map.forall { case (l, p) => l == p }
     def phys(logical: String): String = map.getOrElse(logical, logical)
+    /** The physical-file view of a recorded (logical) schema. */
+    def physical(st: StructType): StructType =
+      if (isIdentity) st
+      else StructType(st.fields.map(f => f.copy(name = phys(f.name))))
   }
   private[graft] object ColMap {
     val empty: ColMap = ColMap(Map.empty, Seq.empty)

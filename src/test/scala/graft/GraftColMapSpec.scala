@@ -298,4 +298,195 @@ class GraftColMapSpec extends SparkSpec {
       org.apache.spark.sql.types.LongType) }
     ()
   }
+
+  // ---- column mapping × every reader and rewrite ----------------------
+  //
+  // Two fixtures, each after rename s→label, a re-add of the old name
+  // `s` (a fresh physical column: `s` is still the physical name of
+  // `label`), a plain addColumn `x`, and one append under the new
+  // names: rows k < 8 read label=v<k>, s=null, x=null; rows 8, 9 read
+  // label=v<k>, s=n<k>, x=10k. The partitioned fixture keys on g = k % 2.
+
+  /** The model rows of keys `ks` as (payload…[, g]) multisets. */
+  private def model(ks: Seq[Long], keys: Boolean): Map[Seq[Any], Int] =
+    ks.map { k =>
+      Seq[Any](k, s"v$k", k % 3, k * 1.5, if (k >= 8) s"n$k" else null,
+        if (k >= 8) k * 10 else null) ++ (if (keys) Seq(k % 2) else Nil)
+    }.groupBy(identity).view.mapValues(_.length).toMap
+
+  private val payloadCols = Seq("k", "label", "m", "p", "s", "x")
+
+  private def content(df: DataFrame, keys: Boolean = false) =
+    multiset(df.select((payloadCols ++ (if (keys) Seq("g") else Nil))
+      .map(col): _*))
+
+  /** Builds the fixture at `root`; returns the version of its last
+    * metadata commit (the feeds read from there: only the append).
+    */
+  private def buildFixture(root: String, partitioned: Boolean): Long = {
+    import spark.implicits._
+    val t = GraftTable.forPath(spark, root)
+    def old(lo: Long, hi: Long) = (lo until hi)
+      .map(k => (k, s"v$k", k % 3, k * 1.5, k % 2))
+      .toDF("k", "s", "m", "p", "g").repartition(2)
+    def land(df: DataFrame) =
+      if (partitioned) t.appendPartitioned(df, "g")
+      else t.append(df.drop("g"))
+    land(old(0, 6))                                         // v1
+    land(old(6, 8))                                         // v2
+    t.renameColumn("s", "label")                            // v3
+    t.addColumn("s", org.apache.spark.sql.types.StringType) // v4
+    val meta = t.addColumn("x", org.apache.spark.sql.types.LongType) // v5
+    land((8L until 10L).map(k => (k, s"v$k", k % 3, k * 1.5, s"n$k", k * 10, k % 2))
+      .toDF("k", "label", "m", "p", "s", "x", "g"))         // v6
+    meta
+  }
+
+  private lazy val fixtures: Map[Boolean, (String, Long)] =
+    Seq(false, true).map { partitioned =>
+      val root = fresh(if (partitioned) "cmfix_p" else "cmfix_f")
+      partitioned -> (root, buildFixture(root, partitioned))
+    }.toMap
+
+  /** A private copy of a fixture (for verbs that commit). */
+  private def copyOf(partitioned: Boolean): GraftTable = {
+    val src = java.nio.file.Paths.get(fixtures(partitioned)._1)
+    val dst = java.nio.file.Paths.get(fresh("cmcopy"))
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else { Files.copy(p, q); () }
+    } finally walk.close()
+    GraftTable.forPath(spark, dst.toString)
+  }
+
+  private val all = (0L until 10L)
+
+  test("column mapping × reads: read, readWhere, readPartitions and readPartitionedColumn serve renamed and re-added columns") {
+    Seq(false, true).foreach { partitioned =>
+      val t = GraftTable.forPath(spark, fixtures(partitioned)._1)
+      assert(t.read().columns.toSeq == payloadCols, t.read().columns.toSeq)
+      assert(content(t.read()) == model(all, keys = false), s"read($partitioned)")
+      assert(content(t.readWhere(col("k") >= 7)) ==
+        model(all.filter(_ >= 7), keys = false), s"readWhere($partitioned)")
+    }
+    val t = GraftTable.forPath(spark, fixtures(true)._1)
+    assert(t.readPartitions("g", Seq(1L)).get.columns.toSeq == payloadCols)
+    assert(content(t.readPartitions("g", Seq(1L)).get) ==
+      model(all.filter(_ % 2 == 1), keys = false))
+    val withKey = t.readPartitionedColumn("g", Seq(0L, 1L)).get
+    assert(withKey.columns.toSeq == payloadCols :+ "g")
+    assert(content(withKey, keys = true) == model(all, keys = true))
+    ()
+  }
+
+  test("column mapping × DML: update and deleteWhere keep every column") {
+    Seq(false, true).foreach { partitioned =>
+      val t = copyOf(partitioned)
+      t.update(col("k") === 9 || col("k") === 1, Map("s" -> lit("u")))
+      t.deleteWhere(col("k") === 8 || col("k") === 2)
+      val want = model(all.filterNot(Set(8L, 2L)), keys = false).map {
+        case (r, n) if r.head == 9L || r.head == 1L => (r.updated(4, "u"), n)
+        case e => e
+      }
+      assert(content(t.read()) == want, s"dml($partitioned)")
+    }
+  }
+
+  test("column mapping × compact is content-neutral") {
+    val t = copyOf(partitioned = false)
+    val files = t.liveFiles().size
+    t.compact(1L << 30)
+    assert(t.liveFiles().size < files, "compact rewrote nothing")
+    assert(content(t.read()) == model(all, keys = false))
+  }
+
+  test("column mapping × compactZOrder is content-neutral") {
+    val t = copyOf(partitioned = false)
+    t.compactZOrder("k", "m", 1)
+    assert(t.liveFiles().size == 1)
+    assert(content(t.read()) == model(all, keys = false))
+  }
+
+  test("column mapping × compactPartitioned is content-neutral") {
+    val t = copyOf(partitioned = true)
+    val files = t.liveFiles().size
+    t.compactPartitioned("g", 1L << 30)
+    assert(t.liveFiles().size < files, "compactPartitioned rewrote nothing")
+    assert(content(t.readPartitionedColumn("g", Seq(0L, 1L)).get, keys = true) ==
+      model(all, keys = true))
+  }
+
+  test("column mapping × compactPartitionsWhere is content-neutral") {
+    val t = copyOf(partitioned = true)
+    val files = t.liveFiles().size
+    t.compactPartitionsWhere(Seq("g" -> Seq("1")), 1L << 30)
+    assert(t.liveFiles().size < files, "compactPartitionsWhere rewrote nothing")
+    assert(content(t.readPartitionedColumn("g", Seq(0L, 1L)).get, keys = true) ==
+      model(all, keys = true))
+  }
+
+  test("column mapping × zorderPartitions is content-neutral") {
+    val t = copyOf(partitioned = true)
+    val before = t.latestVersion
+    assert(t.zorderPartitions(Seq("g" -> Seq("1")), "k", "m", 1) > before)
+    assert(content(t.readPartitionedColumn("g", Seq(0L, 1L)).get, keys = true) ==
+      model(all, keys = true))
+  }
+
+  test("column mapping × changeFeed serves the append under logical names") {
+    Seq(false, true).foreach { partitioned =>
+      val (root, meta) = fixtures(partitioned)
+      val f = GraftTable.forPath(spark, root).changeFeed(meta).get
+      assert(f.filter(col("_change_type") =!= "insert").isEmpty)
+      assert(content(f, keys = partitioned) == model(Seq(8L, 9L), keys = partitioned),
+        s"changeFeed($partitioned)")
+    }
+  }
+
+  test("column mapping × changesSince serves the append under logical names") {
+    Seq(false, true).foreach { partitioned =>
+      val (root, meta) = fixtures(partitioned)
+      val f = GraftTable.forPath(spark, root).changesSince(meta).get
+      // read()'s shape: payload columns, no partition keys
+      assert(f.columns.toSeq == payloadCols, f.columns.toSeq)
+      assert(content(f) == model(Seq(8L, 9L), keys = false),
+        s"changesSince($partitioned)")
+    }
+  }
+
+  test("the readChangeFeed stream refuses while column mapping is active") {
+    val e = intercept[IllegalArgumentException] {
+      spark.readStream.format("graft").option("readChangeFeed", "true")
+        .load(fixtures(false)._1)
+    }
+    assert(e.getMessage.contains("columnMapping"), e.getMessage)
+  }
+
+  test("a merge-on-read table's readChangeFeed stream still serves") {
+    import spark.implicits._
+    val root = fresh("cmmor")
+    val t = GraftTable.create(spark, root,
+      (0L until 20L).map(k => (k, s"v$k")).toDF("k", "s").coalesce(1)) // v1
+    t.deleteWhere(col("k") === 3, mor = true)               // v2: a dv
+    assert(t.hasDvAsOf(t.latestVersion))
+    val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+    val q = spark.readStream.format("graft").option("readChangeFeed", "true")
+      .load(root)
+      .writeStream.option("checkpointLocation", fresh("cmmor_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        got ++= b.select("k", "s", "_change_type", "_commit_version")
+          .collect().map(_.toSeq)
+        ()
+      }.start()
+    try q.awaitTermination() finally q.stop()
+    val want = t.changeFeed(0).get
+      .select("k", "s", "_change_type", "_commit_version")
+      .collect().map(_.toSeq)
+    assert(got.groupBy(identity).view.mapValues(_.size).toMap ==
+      want.groupBy(identity).view.mapValues(_.size).toMap)
+    assert(got.count(_(2) == "delete") == 1 && got.size == 21)
+  }
 }

@@ -69,4 +69,37 @@ class GraftLogTrafficSpec extends SparkSpec {
       case (k, None) => hc.unset(k)
     }
   }
+
+  test("each change feed lists the log once, however many commits it serves") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[LogCountingFileSystem].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      val root = Files.createTempDirectory("graft_feed_traffic").toString + "/t"
+      def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+        .select(col("id").as("k"), (col("id") % 7).as("v"))
+      val t0 = GraftTable.create(spark, root, rows(0, 200))
+      (1 to 9).foreach(i => t0.append(rows(200 + i * 10, 210 + i * 10)))
+      val appended = t0.latestVersion
+      t0.update(col("k") < 20, Map("v" -> (col("v") + 1)))
+      def fresh() = GraftTable.forPath(spark, root)
+      var fed = Seq.empty[Long]
+      val counts = Seq(
+        "changeFeed" -> listings {
+          fed :+= fresh().changeFeed(1).get.count() },
+        "changesSince" -> listings {
+          fed :+= fresh().changesSince(1, untilVersion = appended).get.count() })
+      println("log listings per feed: " +
+        counts.map { case (n, c) => s"$n=$c" }.mkString(" "))
+      counts.foreach { case (feed, n) =>
+        assert(n <= 1L, s"$feed listed the log $n times")
+      }
+      assert(fed == Seq(90L + 40L, 90L))
+    } finally saved.foreach {
+      case (k, Some(v)) => hc.set(k, v)
+      case (k, None) => hc.unset(k)
+    }
+  }
 }
