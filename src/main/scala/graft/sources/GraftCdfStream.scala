@@ -26,13 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - append commits stream their added files as `insert` rows;
   *   - merge/update/delete commits stream the pre/post/delete images
   *     staged at commit time (the `cdf/` files);
-  *   - compact/zorder/constraint commits are content-neutral — no rows;
+  *   - compact/zorder commits and row-neutral metadata commits
+  *     (constraint, protocol, addColumn) are content-neutral — no rows;
   *   - whole-scope rewrites (overwrite/replace/restore) REFUSE, the
   *     batch feed's honesty rule.
   *
   * Both row shapes ride Spark's own parquet reader: two template
   * scans (append slices: payload + path-restored partition keys via
-  * the log-backed index; image files: payload + stored keys +
+  * the log-seeded index; image files: payload + stored keys +
   * _change_type) supply the reader factories, and a tagging wrapper
   * appends the constant columns (`_change_type` for add-slices,
   * `_commit_version` for both) per partition — row-based (columnar
@@ -49,7 +50,7 @@ object GraftCdfStream {
 
 /** `partCols` are the table's recorded partition keys (empty on flat
   * tables): their values ride file PATHS on append slices (restored
-  * through the log-backed partitioned index) and STORED COLUMNS on
+  * through the log-seeded index) and STORED COLUMNS on
   * DML image files (the DML read restored them), so both slice
   * shapes serve `payload ++ partCols` uniformly.
   */
@@ -58,8 +59,8 @@ class GraftCdfStreamTable(spark: SparkSession, path: String,
                           partCols: Seq[GraftTable.PartMeta] = Seq.empty)
     extends Table
     with SupportsRead {
-  private val full = StructType(payload.fields ++ partCols.map(p =>
-    org.apache.spark.sql.types.StructField(p.col, p.tpe)))
+  private val full = StructType(payload.fields ++
+    LogFileIndex.partitionSchema(partCols).fields)
   override def name(): String = s"graft-cdf:$path"
   override def schema(): StructType = GraftCdfStream.cdfSchema(full)
   override def capabilities(): java.util.Set[TableCapability] =
@@ -116,12 +117,10 @@ class GraftCdfMicroBatchStream(spark: SparkSession, root: String,
     Option(options.get("maxBytesPerTrigger")).map(_.toLong)
   maxFiles.foreach(n => require(n > 0, s"maxFilesPerTrigger must be > 0: $n"))
   maxBytes.foreach(b => require(b > 0, s"maxBytesPerTrigger must be > 0: $b"))
-  private val partSchema = StructType(partCols.map(p =>
-    org.apache.spark.sql.types.StructField(p.col, p.tpe)).toArray)
   // image files STORE the partition columns (the DML restore wrote
   // them), so the image schema reads them as plain columns
   private val imageSchema = StructType(
-    payload.fields ++ partSchema.fields)
+    payload.fields ++ LogFileIndex.partitionSchema(partCols).fields)
     .add(GraftTable.ChangeTypeCol, StringType)
 
   override def initialOffset(): Offset = GraftOffset(starting)
@@ -154,35 +153,19 @@ class GraftCdfMicroBatchStream(spark: SparkSession, root: String,
     if (capBound) pos else GraftOffset(latest)
   }
 
-  /** A slice scan over DML image `files` read at `schema` (empty
-    * list is fine — the explicit schema spares inference).
+  /** A slice scan over `files`: DML images read at `imageSchema`
+    * (they store the partition keys as columns — the DML read restored
+    * them); append files at the payload schema, their keys restored
+    * from the paths by the log-seeded index, so the scan's output is
+    * payload ++ partCols. An empty list is fine (the reader-factory
+    * templates).
     */
-  private def scanOf(files: Seq[String], schema: StructType): Scan =
-    org.apache.spark.sql.graft.shim
-      .parquetTable(s"graft-cdf-slice:$root", spark,
-        CaseInsensitiveStringMap.empty(), files, Some(schema))
-      .asInstanceOf[SupportsRead]
+  private def scanOf(files: Seq[(String, Long)], images: Boolean): Scan =
+    LogFileIndex.table(s"graft-cdf-slice:$root", spark,
+        CaseInsensitiveStringMap.empty(), files,
+        Some(if (images) imageSchema else payload),
+        if (images) Seq.empty else partCols)
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-
-  /** A slice scan over append `files`: on a partitioned table the
-    * keys live in the file paths — the log-backed partitioned index
-    * restores them (the table-stream source's machinery), so the
-    * scan's output is payload ++ partCols.
-    */
-  private def appendScanOf(files: Seq[(String, Long)]): Scan = {
-    val t =
-      if (partCols.isEmpty)
-        org.apache.spark.sql.graft.shim.parquetTable(
-          s"graft-cdf-slice:$root", spark,
-          CaseInsensitiveStringMap.empty(), files.map(_._1), Some(payload))
-      else
-        org.apache.spark.sql.graft.shim.partitionedParquetTable(
-          s"graft-cdf-slice:$root", spark,
-          CaseInsensitiveStringMap.empty(), files, payload, partSchema,
-          dir => GraftTable.partDirValues(partCols, dir))
-    t.asInstanceOf[SupportsRead]
-      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-  }
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
@@ -194,10 +177,8 @@ class GraftCdfMicroBatchStream(spark: SparkSession, root: String,
         val window = GraftAdmission.window(s0, e0, v, files)
         if (window.isEmpty) Array.empty[InputPartition]
         else {
-          val scan =
-            if (changeType.isDefined) appendScanOf(window)
-            else scanOf(window.map(_._1), imageSchema)
-          scan.toBatch.planInputPartitions()
+          scanOf(window, images = changeType.isEmpty)
+            .toBatch.planInputPartitions()
             .map(p => CdfTaggedPartition(p, changeType, v)
               : InputPartition)
         }
@@ -206,8 +187,8 @@ class GraftCdfMicroBatchStream(spark: SparkSession, root: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CdfTaggingReaderFactory(
-      appendScanOf(Seq.empty).toBatch.createReaderFactory(),
-      scanOf(Seq.empty, imageSchema).toBatch.createReaderFactory())
+      scanOf(Seq.empty, images = false).toBatch.createReaderFactory(),
+      scanOf(Seq.empty, images = true).toBatch.createReaderFactory())
 }
 
 /** Routes each tagged partition to the right parquet reader factory

@@ -170,7 +170,7 @@ object GraftDataSource {
   private[sources] val PartitioningColumnsKey = "__partition_columns"
 
   /** A READ-ONLY view of the snapshot table. Deliberately not
-    * SupportsWrite even though the underlying ParquetTable is: a v2
+    * SupportsWrite even though the underlying FileTable is: a v2
     * batch write would drop parquet files straight onto the resolved
     * paths BEHIND the commit log — advertising only BATCH_READ makes
     * `df.write.format("graft")` take Spark's documented v1 fallback
@@ -191,30 +191,35 @@ object GraftDataSource {
     * deleting the wrong rows). TRUNCATE maps to delete-everything —
     * one commit, time-travel intact.
     */
-  private class ReadOnlySnapshot(underlying: Table, spark: SparkSession,
+  private class ReadOnlySnapshot(label: String, spark: SparkSession,
                                  path: String,
+                                 options: CaseInsensitiveStringMap,
                                  fileMeta: Seq[(String, Long, Option[String])],
-                                 readRefusal: Option[String] = None,
-                                 batchWritable: Boolean = false,
-                                 tableOver: Option[
-                                   (Seq[(String, Long)], String) => Table] =
-                                   None,
-                                 partitionNames: Seq[String] = Seq.empty)
+                                 payload: Option[StructType],
+                                 keys: Seq[GraftTable.PartMeta],
+                                 readRefusal: Option[String],
+                                 batchWritable: Boolean)
       extends Table
       with org.apache.spark.sql.connector.catalog.SupportsRead
       with org.apache.spark.sql.connector.catalog.SupportsDelete
       with org.apache.spark.sql.connector.catalog.SupportsWrite
       with GraftSnapshotTable {
+    /** The scan table over `files` — [[LogFileIndex]] serves the
+      * recorded partition keys from the paths.
+      */
+    private def over(files: Seq[(String, Long)], name: String) =
+      LogFileIndex.table(name, spark, options, files, payload, keys)
+    private val underlying = over(fileMeta.map(m => (m._1, m._2)), label)
     override def tablePath: String = path
-    override def name(): String = underlying.name()
-    override def schema(): StructType = underlying.schema()
+    override def name(): String = label
+    override def schema(): StructType = underlying.schema
     // report the recorded keys as identity transforms: DESCRIBE
     // shows the layout and INSERT ... PARTITION resolves
     override def partitioning()
         : Array[org.apache.spark.sql.connector.expressions.Transform] =
-      partitionNames.map(c =>
+      keys.map(k =>
         org.apache.spark.sql.connector.expressions.Expressions
-          .identity(c)).toArray
+          .identity(k.col)).toArray
     // STREAMING_WRITE but deliberately NOT BATCH_WRITE: batch saves
     // keep the documented v1 fallback into createRelation (atomic
     // commits per SaveMode); streaming rides the native epoch-commit
@@ -254,7 +259,7 @@ object GraftDataSource {
       * Spark pushes the data filters, drop every file whose logged
       * min/max stats cannot satisfy them (FileStats.mayMatch —
       * conservative; files without stats are kept) and serve the scan
-      * from a ParquetTable over the SURVIVORS, with the captured
+      * from the same log-seeded table over the SURVIVORS, with the captured
       * pushdown replayed. At millions of files this prunes in the
       * driver during planning, before any footer is opened — Delta's
       * stats-skipping read, and the same evaluator `readWhere` and
@@ -270,19 +275,9 @@ object GraftDataSource {
           case (f, b, st) if FileStats.mayMatch(st, p) => (f, b)
         }
         if (survivors.size >= fileMeta.size) None
-        else {
-          val label =
-            s"${underlying.name()}@skip${fileMeta.size - survivors.size}"
-          // partitioned snapshots rebuild through the log-backed
-          // index factory so the restored columns keep serving
-          val t2 = tableOver.map(f => f(survivors, label)).getOrElse(
-            org.apache.spark.sql.graft.shim.parquetTable(
-              label, spark, CaseInsensitiveStringMap.empty(),
-              survivors.map(_._1), Some(underlying.schema())))
-          Some(t2
-            .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-            .newScanBuilder(CaseInsensitiveStringMap.empty()))
-        }
+        else Some(over(survivors,
+            s"$label@skip${fileMeta.size - survivors.size}")
+          .newScanBuilder(CaseInsensitiveStringMap.empty()))
       }
     }
 
@@ -291,14 +286,9 @@ object GraftDataSource {
       readRefusal.foreach(msg =>
         throw new UnsupportedOperationException(msg))
       new org.apache.spark.sql.graft.DelegatingScanBuilder(
-        underlying
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-          .newScanBuilder(options),
+        underlying.newScanBuilder(options),
         under => new GraftScanWithStream(under, spark, path, options),
-        // option("dataSkipping", false) opts a read out (A/B runs,
-        // stats-distrust debugging) — skipping stays the default
-        if (options.getBoolean("dataSkipping", true)) reprune
-        else _ => None)
+        reprune)
     }
 
     override def canDeleteWhere(
@@ -397,7 +387,8 @@ object GraftDataSource {
       // payload schema, so a live column mapping would serve renamed
       // columns as null — refuse, like the raw snapshot scan. A stream
       // resolved at identity never reaches a mapped commit: the slice
-      // walk refuses rename/add/drop (`colmap:` commits). Deletion
+      // walk refuses rename and drop, and an addColumn on an identity
+      // mapping keeps it identity (the new name is fresh). Deletion
       // vectors do not block: the feed serves each commit's own adds
       // and images, never the live set.
       require(at.colmap.isIdentity,
@@ -408,7 +399,7 @@ object GraftDataSource {
           "GraftTable.changeFeed() instead")
       val payload = at.schema.getOrElse(t.readVersion(at.version).schema)
       // partitioned tables serve their keys too: append slices
-      // restore them from paths through the log-backed index, DML
+      // restore them from paths through [[LogFileIndex]], DML
       // image files store them as columns (the DML read restored them)
       return new GraftCdfStreamTable(spark, path, payload, at.partMeta)
     }
@@ -446,35 +437,13 @@ object GraftDataSource {
         t.rawReadRefusal(at, "graft raw-parquet scan")
       val meta = at.files.toSeq.sortBy(_._1)
         .map { case (p, m) => (t.absOf(p), m.bytes, m.stats) }
-      // HIVE-PARTITIONED snapshots serve the partition columns too
-      // (Delta's contract — the values live in the paths, and a read
-      // that silently dropped the key column would lose data): the
-      // recorded partmeta keys append to the schema and a LOG-BACKED
-      // file index (no listing, no directory inference — Delta's
-      // TahoeFileIndex design) serves each file's partition values
-      // parsed from its value-dir chain, so staged (data/<uuid>/k=v),
-      // converted (k=v at root) and cloned (absolute external paths)
-      // layouts all restore uniformly.
-      val pcs = at.partMeta
-      val payload = at.schema
-      val tableOver: Option[(Seq[(String, Long)], String) => Table] =
-        if (pcs.isEmpty || payload.isEmpty) None
-        else {
-          val partSchema = StructType(pcs.map(p =>
-            org.apache.spark.sql.types.StructField(p.col, p.tpe)).toArray)
-          Some((fs, label) =>
-            org.apache.spark.sql.graft.shim.partitionedParquetTable(
-              label, spark, options, fs, payload.get, partSchema,
-              dir => GraftTable.partDirValues(pcs, dir)))
-        }
-      val underlying = tableOver.map(f =>
-          f(meta.map(m => (m._1, m._2)), s"graft:$path@v$version"))
-        .getOrElse(org.apache.spark.sql.graft.shim.parquetTable(
-          s"graft:$path@v$version", spark, options, meta.map(_._1),
-          payload))
-      new ReadOnlySnapshot(underlying, spark, path, meta, readRefusal,
+      // HIVE-PARTITIONED snapshots serve the recorded partmeta keys
+      // too (Delta's contract — the values live in the paths, and a
+      // read that silently dropped the key column would lose data)
+      new ReadOnlySnapshot(s"graft:$path@v$version", spark, path, options,
+        meta, at.schema, at.partMeta, readRefusal,
         // time-travel snapshots are never insert targets
-        batchWritable && versionOpt.isEmpty, tableOver, pcs.map(_.col))
+        batchWritable && versionOpt.isEmpty)
     }
   }
 }

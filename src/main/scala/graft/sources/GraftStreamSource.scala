@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.SupportsRead
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
@@ -41,8 +40,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The rows are read through Spark's own vectorized parquet reader:
   * the reader FACTORY comes from the same ParquetScan the batch path
   * builds (pushed filters and pruned columns intact), and each
-  * micro-batch plans its partitions from a slice-scoped ParquetTable
-  * over just that batch's files — so a 1000-executor stream reads a
+  * micro-batch plans its partitions from a slice-scoped table over
+  * just that batch's files (the log-seeded [[LogFileIndex]]) — so a 1000-executor stream reads a
   * commit's files with the identical split/locality logic a batch
   * read would use.
   *
@@ -256,26 +255,14 @@ class GraftMicroBatchStream(spark: SparkSession, root: String,
     if (files.isEmpty) return Array.empty
     // partitioned tables stream their partition COLUMNS too (the
     // snapshot table's restoration contract): the slice plans through
-    // the same LOG-BACKED partition-value index the snapshot scan
-    // uses, then prunes to the template's read schema — so the
-    // PartitionedFiles this slice emits carry partition values of
-    // exactly the arity the template's reader factory expects.
+    // the same log-seeded index the snapshot scan uses, then prunes to
+    // the template's read schema — so the PartitionedFiles this slice
+    // emits carry partition values of exactly the arity the
+    // template's reader factory expects.
     val at = table.snapshot(e0.version)
-    val pcs = at.partMeta
-    val payload = at.schema
-    val label = s"graft-stream:$root@(${s0.json()},${e0.json()}]"
-    val slice =
-      if (pcs.isEmpty || payload.isEmpty)
-        org.apache.spark.sql.graft.shim
-          .parquetTable(label, spark, options, files.map(_._1))
-      else {
-        val partSchema = org.apache.spark.sql.types.StructType(pcs.map(p =>
-          org.apache.spark.sql.types.StructField(p.col, p.tpe)).toArray)
-        org.apache.spark.sql.graft.shim.partitionedParquetTable(
-          label, spark, options, files, payload.get, partSchema,
-          dir => GraftTable.partDirValues(pcs, dir))
-      }
-    val sb = slice.asInstanceOf[SupportsRead].newScanBuilder(options)
+    val sb = LogFileIndex.table(
+      s"graft-stream:$root@(${s0.json()},${e0.json()}]", spark, options,
+      files, at.schema, at.partMeta).newScanBuilder(options)
     sb match {
       case p: org.apache.spark.sql.connector.read
           .SupportsPushDownRequiredColumns =>

@@ -732,7 +732,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
 
   /** THE reader of the table's own data files — every read, rewrite
     * and change feed goes through it, so column mapping, deletion
-    * vectors and partition keys are served by one rule:
+    * vectors and partition keys are served by one rule, over one
+    * [[LogFileIndex]] (the log's paths and sizes: planning lists and
+    * stats nothing):
     *   1. SCHEMA: files store PHYSICAL names; they are read through
     *      the recorded (logical) schema `sc` mapped by `cm`, so a
     *      renamed column keeps its data, a re-added name reads its
@@ -750,10 +752,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
     *      rewritten (Delta's merge-on-read scan). The dv side is
     *      sidecar-sized — AQE broadcasts it; tables without dvs never
     *      plan the anti-join;
-    *   4. PARTITION KEYS: each of `keys` is restored from the row's
-    *      file path ([[partRestore]]) and appended after the payload,
-    *      on the scan itself (before any dv join, where
-    *      input_file_name still resolves).
+    *   4. PARTITION KEYS: each of `keys` is served by the index from
+    *      the file's value-dir chain, after the payload — a filter on
+    *      a key prunes files on the driver.
     * `keepPos` retains (__fn, __ri) on every row — the MoR writers'
     * probe reads use it to name the positions they mark dead.
     * dv keying is by [[fileKey]] (asserted unique below — a collision
@@ -767,51 +768,39 @@ class GraftTable private (val s: SparkSession, val root: String) {
       : DataFrame = {
     import org.apache.spark.sql.functions.col
     val (dvd, plain) = metaSeq.sortBy(_._1).partition(_._2.dv.isDefined)
-    def posCols(st: StructType) =
-      st.add("__fn", StringType).add("__ri", LongType)
-    def readP(paths: Seq[String], pos: Boolean): DataFrame = {
-      val payload =
-        if (paths.isEmpty) {
-          val st = sc.getOrElse(sys.error(
-            "empty live set and no recorded schema (legacy log) — " +
-              "nothing to infer a schema from"))
-          s.createDataFrame(s.sparkContext.emptyRDD[Row],
-            if (pos) posCols(st) else st)
-        } else {
-          // derive the pos columns while _metadata is still resolvable,
-          // then project back to the LOGICAL names
-          val raw = sc match {
-            case Some(st) =>
-              s.read.schema(cm.physical(st)).parquet(paths.map(absOf): _*)
-            case None => s.read.parquet(paths.map(absOf): _*)
-          }
-          // _metadata.file_path serves the URI form — the on-disk name
-          // percent-ENCODED once more (a string-partition value dir
-          // `c=a%3Db` arrives as `c=a%253Db`) — while fileKey/byBaseName
-          // key on the raw path, so the probe key decodes that one URI
-          // layer (URI encoding never encodes '/', so splitting first is
-          // component-safe; under integer-valued layouts the decode is a
-          // no-op)
-          val withPos =
-            if (pos) raw.withColumn("__fn",
-              graft.functions.GraftFunctions.path_unescape(
-                org.apache.spark.sql.functions.substring_index(
-                  col("_metadata.file_path"), "/", -2)))
-              .withColumn("__ri", col("_metadata.row_index"))
-            else raw
-          sc match {
-            case Some(st) if !cm.isIdentity =>
-              withPos.select((st.fields.map(f =>
-                col(cm.phys(f.name)).as(f.name)) ++
-                (if (pos) Seq(col("__fn"), col("__ri")) else Nil))
-                .toIndexedSeq: _*)
-            case _ => withPos
-          }
-        }
-      keys.foldLeft(payload)((acc, pm) =>
-        acc.withColumn(pm.col, partRestore(pm.col, pm.tpe)))
+    def readP(files: Seq[(String, FileMeta)], pos: Boolean): DataFrame = {
+      require(files.nonEmpty || sc.isDefined,
+        "empty live set and no recorded schema (legacy log) — " +
+          "nothing to infer a schema from")
+      val raw = LogFileIndex.frame(s,
+        files.map { case (p, m) => absOf(p) -> m.bytes },
+        sc.map(cm.physical), keys)
+      // derive the pos columns while _metadata is still resolvable,
+      // then project back to the LOGICAL names.
+      // _metadata.file_path serves the URI form — the on-disk name
+      // percent-ENCODED once more (a string-partition value dir
+      // `c=a%3Db` arrives as `c=a%253Db`) — while fileKey/byBaseName
+      // key on the raw path, so the probe key decodes that one URI
+      // layer (URI encoding never encodes '/', so splitting first is
+      // component-safe; under integer-valued layouts the decode is a
+      // no-op)
+      val withPos =
+        if (pos) raw.withColumn("__fn",
+          graft.functions.GraftFunctions.path_unescape(
+            org.apache.spark.sql.functions.substring_index(
+              col("_metadata.file_path"), "/", -2)))
+          .withColumn("__ri", col("_metadata.row_index"))
+        else raw
+      sc match {
+        case Some(st) if !cm.isIdentity =>
+          withPos.select((st.fields.map(f =>
+            col(cm.phys(f.name)).as(f.name)) ++ keys.map(k => col(k.col)) ++
+            (if (pos) Seq(col("__fn"), col("__ri")) else Nil))
+            .toIndexedSeq: _*)
+        case _ => withPos
+      }
     }
-    if (dvd.isEmpty) readP(plain.map(_._1), keepPos)
+    if (dvd.isEmpty) readP(plain, keepPos)
     else {
       val names = dvd.map(f => fileKey(f._1))
       require(names.distinct.size == names.size,
@@ -821,19 +810,28 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // restrict each dv's rows to the files it is CURRENTLY attached
       // to: a superseded dv shared across files may carry positions
       // for a file that re-attached elsewhere (restore)
-      val dead = s.read
-        .parquet(dvd.flatMap(_._2.dv.map(d => absOf(d.path)))
-          .distinct: _*)
+      val dead = readDv(dvd.flatMap(_._2.dv.map(_.path)).distinct)
         .join(names.toDF("__file"), "__file")
-      val d0 = readP(dvd.map(_._1), pos = true)
+      val d0 = readP(dvd, pos = true)
       val masked = d0.join(dead,
         d0("__fn") === dead("__file") && d0("__ri") === dead("__pos"),
         "left_anti")
       val cleaned = if (keepPos) masked else masked.drop("__fn", "__ri")
       if (plain.isEmpty) cleaned
-      else readP(plain.map(_._1), keepPos).unionByName(cleaned)
+      else readP(plain, keepPos).unionByName(cleaned)
     }
   }
+
+  /** The dead (__file, __pos) rows of the dv sidecar DIRECTORIES
+    * `dirs` (a dv names its directory, so this read lists it). The
+    * schema is explicit: an empty stage stays readable. absOf: a
+    * clone's INHERITED dvs are absolute source paths — resolving them
+    * under this root would fail (or worse, silently resurrect the
+    * masked rows).
+    */
+  private def readDv(dirs: Seq[String]): DataFrame = s.read
+    .schema(new StructType().add("__file", StringType).add("__pos", LongType))
+    .parquet(dirs.map(absOf): _*)
 
   /** [[readMeta]] over the live files `paths` of `at`, under its
     * recorded schema and column mapping; `keys` restores every
@@ -1510,37 +1508,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
             "or adopt with CONVERT (both record the partition type)"))
       LongType
     }
-
-  /** The partition column RESTORED from each row's file path: raw
-    * token via one regexp_extract, then cast (integral/date) or
-    * unescape (string, codegen'd; the null-sentinel dir maps back to
-    * null — Hive/Delta's convention). `input_file_name` serves the
-    * path in URI form — the hive-escaped dir name URI-ENCODED on top
-    * (measured: dir `c=a%3Db` arrives as `c=a%253Db`, a space as
-    * `%20`, while `+` and non-ASCII pass through raw) — so the exact
-    * inverse is the `%XX` hex decode applied TWICE: each encode layer
-    * escapes '%' itself, so double-decode inverts double-encode for
-    * every value, including values containing literal '%XX' text.
-    * (NOT `url_decode`, which would corrupt a literal '+' to a space
-    * — neither encoding layer touches '+'.)
-    */
-  private def partRestore(pc: String, tpe: DataType)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{input_file_name, lit, regexp_extract, when}
-    val raw = regexp_extract(input_file_name(),
-      java.util.regex.Pattern.quote(s"/$pc=") + "([^/]+)/", 1)
-    tpe match {
-      case StringType =>
-        val unesc = graft.functions.GraftFunctions.path_unescape(
-          graft.functions.GraftFunctions.path_unescape(raw))
-        when(unesc === GraftTable.HiveDefaultPartition,
-          lit(null).cast("string")).otherwise(unesc)
-      case t =>
-        when(raw === GraftTable.HiveDefaultPartition,
-          lit(null).cast(t.catalogString))
-          .otherwise(raw.cast(t.catalogString))
-    }
-  }
 
   /** Guard a partitioned write against the existing layout: on a
     * non-empty (or recorded-partitioned) table the incoming key list
@@ -2527,12 +2494,6 @@ class GraftTable private (val s: SparkSession, val root: String) {
     import org.apache.spark.sql.functions.col
     import s.implicits._
     val live = d.base.files
-    def readDv(dirs: Seq[String]) = s.read
-      .schema(new StructType().add("__file", StringType)
-        .add("__pos", LongType)) // explicit: an empty stage stays readable
-      .parquet(dirs.map(absOf): _*) // absOf: a clone's INHERITED dvs
-      // are absolute source paths — resolving them under this root
-      // would fail (or worse, silently resurrect the masked rows)
     def stageDv(df: DataFrame, ways: Int): String = {
       val sub = s"$DvDir/${java.util.UUID.randomUUID.toString.take(12)}"
       // repartition, not coalesce: coalesce would collapse the
@@ -2813,10 +2774,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     *     foreachBatch streaming-upsert recipe);
     *   - the SOURCE STRATEGY is size-aware: an endpoint-sized batch
     *     broadcasts into every probe/rewrite join; a source whose
-    *     optimizer size estimate exceeds
-    *     `spark.graft.merge.broadcastThreshold` (default: the
-    *     session's autoBroadcastJoinThreshold, or 64 MiB if that is
-    *     disabled) leaves join strategy to the planner — a
+    *     optimizer size estimate exceeds the session's
+    *     autoBroadcastJoinThreshold (the `merge.sourceBroadcast`
+    *     size gate; a disabled threshold never broadcasts) leaves
+    *     join strategy to the planner — a
     *     corpus-sized backfill merge degrades to shuffle joins
     *     instead of OOMing the driver. The choice is recorded in the
     *     commit's info line (`commitInfo`).
@@ -3006,12 +2967,11 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // join-strategy-agnostic and AQE picks shuffle joins. The choice
     // is recorded in the commit's info line.
     val srcBytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-    // disabled session broadcast threshold (<= 0) means NO forced
-    // broadcast here either (ADVICE r17); the graft conf overrides
-    val bcCeiling = BigInt(s.conf.get(
-      "spark.graft.merge.broadcastThreshold",
-      s.sessionState.conf.autoBroadcastJoinThreshold.toString))
-    val srcSmall = bcCeiling > 0 && srcBytes <= bcCeiling
+    // the cap is the session's broadcast threshold; a disabled one
+    // (<= 0) means NO forced broadcast here either
+    val bcCap = s.sessionState.conf.autoBroadcastJoinThreshold
+    val srcSmall = graft.Gate.small(s, "merge.sourceBroadcast",
+      if (bcCap <= 0) -1L else bcCap)(srcBytes.min(Long.MaxValue).toLong)
     val bcast: DataFrame => DataFrame =
       if (srcSmall) df => broadcast(df) else df => df
     // partition-column keys have no file stats (their values live in
@@ -3734,9 +3694,10 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * file-granular stream offset (version, fileIndex) deterministic
     * forever — commits are immutable and the sort is total, so the
     * same offset always names the same file across restarts (the
-    * admission-controlled source's replay contract). Metadata-only
-    * commits contribute an empty file list; non-append commits refuse
-    * (their adds are rewrites, not new data).
+    * admission-controlled source's replay contract). Row-neutral
+    * commits ([[GraftTable.rowNeutral]]) contribute an empty file
+    * list; every other non-append commit refuses (its adds are
+    * rewrites, not new data; a rename or drop changes names).
     *
     * LAZY: commits are read (and the non-append refusal raised) only
     * as the iterator is PULLED — what keeps an
@@ -3755,15 +3716,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
       : Iterator[(Long, Seq[(String, Long)])] =
     rangeVersions(sinceVersion, untilVersion).iterator.map { v =>
       val c = readCommit(v)
-      // constraint add/drop commits are metadata-only: row-neutral for
-      // any feed (a stream must not die because a CHECK was added)
-      if (!(c.action.startsWith("append") ||
-            c.action.startsWith("constraint:") ||
-            c.action.startsWith("protocol:")))
+      if (!(c.action.startsWith("append") || GraftTable.rowNeutral(c.action)))
         throw new IllegalStateException(
           s"change feed undefined across non-append commits: " +
-            s"v${c.version}=${c.action} — use changeFeed() for " +
-            "row-level images")
+            s"v${c.version}=${c.action} — " +
+            (if (cdfSlice(c).isSuccess) "use changeFeed() for row-level images"
+             else "changeFeed() refuses it too; fall back to a snapshot diff"))
       (c.version,
         c.adds.map(a => (s"$root/${a.path}", a.bytes)).sortBy(_._1))
     }
@@ -3819,7 +3777,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
           .withColumn(ChangeTypeCol, lit(insert))
           .withColumn(VersionCol, lit(v))
       case (v, images, None) =>
-        s.read.parquet(images.map(_._1): _*).withColumn(VersionCol, lit(v))
+        // image files store their own schema: inferred from the footers
+        LogFileIndex.frame(s, images, None, Seq.empty)
+          .withColumn(VersionCol, lit(v))
     }
     if (slices.isEmpty) None
     // allowMissingColumns: a feed range may CROSS an additive schema
@@ -3841,7 +3801,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   private[sources] def cdfSliceVersions(since: Long, until: Long)
       : Iterator[(Long, Seq[(String, Long)], Option[String])] =
-    rangeVersions(since, until).iterator.map(readCommit).flatMap { c =>
+    rangeVersions(since, until).iterator.map(readCommit)
+      .flatMap(c => cdfSlice(c).get)
+
+  /** One commit's CDF slice ([[cdfSliceVersions]]' rule): Failure on a
+    * whole-scope rewrite the row-level feed cannot serve.
+    */
+  private def cdfSlice(c: Commit)
+      : scala.util.Try[Option[(Long, Seq[(String, Long)], Option[String])]] =
+    scala.util.Try {
       if (c.action.startsWith("append")) {
         val fs = c.adds.map(a => (s"$root/${a.path}", a.bytes))
           .sortBy(_._1)
@@ -3855,8 +3823,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
           None))
       } else if (c.action == "compact" || c.action == "purge" ||
           c.action.startsWith("zorder:") ||
-          c.action.startsWith("constraint:") ||
-        c.action.startsWith("protocol:")) None
+          GraftTable.rowNeutral(c.action)) None
       else throw new IllegalStateException(
         "row-level change feed undefined across whole-scope rewrites: " +
           s"v${c.version}=${c.action} — fall back to a snapshot diff")
@@ -4544,7 +4511,7 @@ object GraftTable {
   /** Catalyst-encoded partition values of one value-dir chain: the
     * `k=v` segments of `dir` matched to the recorded keys, unescaped,
     * null-sentinel-mapped, and cast to each key's recorded type —
-    * what the log-backed file index serves as PartitionPath values
+    * what [[LogFileIndex]] serves as PartitionPath values
     * (Delta's TahoeFileIndex contract). Strings become UTF8String,
     * dates epoch-day ints (Catalyst's internal encodings).
     */
@@ -4593,6 +4560,17 @@ object GraftTable {
   private[graft] def unescapePartValue(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(v)
+
+  /** Metadata-only commits that change no row — CHECK constraints,
+    * protocol rows and an additive `addColumn` (older files read null
+    * in the new column; each append slice reads under its own
+    * commit's schema): every feed and stream walks past them. A
+    * rename or drop is not row-neutral for a feed — earlier slices
+    * would need projecting to the new names — so both still refuse.
+    */
+  private[sources] def rowNeutral(action: String): Boolean =
+    action.startsWith("constraint:") || action.startsWith("protocol:") ||
+      action.startsWith("colmap:addcol:")
 
   /** The sentinel `partitionBy` writes for a null (or empty-string)
     * partition value; restore maps it back to null — Hive/Delta's

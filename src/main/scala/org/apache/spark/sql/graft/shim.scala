@@ -22,9 +22,10 @@ object shim {
   def catalystExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** DataFrame over an analyzed logical plan (`Dataset.ofRows` is
+  /** DataFrame over a logical plan (`Dataset.ofRows` is
     * `private[sql]`) — the SQL MERGE bridge turns the parsed source
-    * relation back into the DataFrame the merge verb consumes.
+    * relation back into the DataFrame the merge verb consumes, and
+    * GraftTable's reader wraps its log-seeded file relation.
     */
   def dataFrame(spark: SparkSession,
                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
@@ -36,22 +37,6 @@ object shim {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
-
-  /** Construct Spark's own v2 ParquetTable over an explicit file
-    * list — `private[sql]` (this package is inside org.apache.spark
-    * .sql, so the access is compile-legal), used by the `graft`
-    * DataSource to serve a GraftTable snapshot through the REAL
-    * parquet scan: vectorized reader, filter pushdown, column
-    * pruning — none of which a hand-rolled RDD[Row] relation keeps.
-    */
-  def parquetTable(name: String, spark: SparkSession,
-                   options: org.apache.spark.sql.util.CaseInsensitiveStringMap,
-                   paths: Seq[String],
-                   schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : org.apache.spark.sql.connector.catalog.Table =
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-      name, spark, options, paths, schema,
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
 
   /** All-fields-nullable view of a schema (`StructType.asNullable` is
     * `private[sql]`): recorded table schemas must not impose a
@@ -74,131 +59,4 @@ object shim {
   def postEvent(spark: SparkSession,
                 e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
     spark.sparkContext.listenerBus.post(e)
-
-  /** A v2 parquet Table over an explicit file list WITH log-served
-    * hive-partition values — Delta's TahoeFileIndex design: the
-    * commit log already knows every file's path, size, and partition
-    * values, so the index performs NO filesystem listing and NO
-    * directory-structure inference (Spark's own inference requires
-    * partition dirs contiguous under one root, which a staged
-    * `data/<uuid>/country=X/` layout and a converted-then-DML'd table
-    * both violate — and listing value dirs would resurrect
-    * logically-removed files). Partition pruning on the restored
-    * columns happens in [[GraftLogFileIndex.listFiles]] via Spark's
-    * standard partition-filter machinery, driver-side, before any
-    * footer is opened.
-    *
-    * `files` are (absolute path, bytes) from the log; `valuesOf`
-    * maps a file's PARENT DIRECTORY path to the partition values
-    * (Catalyst-encoded, aligned with `partitionSchema`).
-    */
-  def partitionedParquetTable(name: String, spark: SparkSession,
-                              options: org.apache.spark.sql.util.CaseInsensitiveStringMap,
-                              files: Seq[(String, Long)],
-                              payloadSchema: org.apache.spark.sql.types.StructType,
-                              partitionSchema: org.apache.spark.sql.types.StructType,
-                              valuesOf: String => Seq[Any])
-      : org.apache.spark.sql.connector.catalog.Table =
-    new GraftPartitionedParquetTable(name, spark, options, files,
-      payloadSchema, partitionSchema, valuesOf)
-}
-
-/** Log-backed file index: see [[shim.partitionedParquetTable]]. */
-private[graft] class GraftLogFileIndex(
-    spark: SparkSession,
-    files: Seq[(String, Long)],
-    partSchema: org.apache.spark.sql.types.StructType,
-    valuesOf: String => Seq[Any])
-    extends org.apache.spark.sql.execution.datasources
-      .PartitioningAwareFileIndex(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        Map.empty, None) {
-  import org.apache.hadoop.fs.{FileStatus, Path}
-
-  private val statuses: Seq[(Path, FileStatus)] = files.map {
-    case (p, bytes) =>
-      val path = new Path(p)
-      (path, new FileStatus(bytes, false, 1, 128L * 1024 * 1024, 0L, path))
-  }
-
-  private val byDir: Map[Path, Array[FileStatus]] =
-    statuses.groupBy(_._1.getParent).view
-      .mapValues(_.map(_._2).toArray).toMap
-
-  override val rootPaths: Seq[Path] = byDir.keys.toSeq
-
-  override def partitionSpec()
-      : org.apache.spark.sql.execution.datasources.PartitionSpec =
-    org.apache.spark.sql.execution.datasources.PartitionSpec(
-      partSchema,
-      byDir.keys.toSeq.sortBy(_.toString).map { dir =>
-        org.apache.spark.sql.execution.datasources.PartitionPath(
-          org.apache.spark.sql.catalyst.InternalRow
-            .fromSeq(valuesOf(dir.toString)),
-          dir)
-      })
-
-  override def leafFiles
-      : scala.collection.mutable.LinkedHashMap[Path, FileStatus] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[Path, FileStatus]
-    statuses.foreach { case (p, st) => m += p -> st }
-    m
-  }
-
-  override def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] = byDir
-
-  override def refresh(): Unit = () // the log is the source of truth
-}
-
-/** Read-only FileTable over [[GraftLogFileIndex]]: the real
-  * ParquetScanBuilder (vectorized reads, pushdown, pruning,
-  * partition-filter pruning) over log-resolved files with
-  * log-served partition values.
-  */
-private[graft] class GraftPartitionedParquetTable(
-    tableName: String,
-    sparkSession2: SparkSession,
-    options2: org.apache.spark.sql.util.CaseInsensitiveStringMap,
-    files: Seq[(String, Long)],
-    payloadSchema: org.apache.spark.sql.types.StructType,
-    partSchema: org.apache.spark.sql.types.StructType,
-    valuesOf: String => Seq[Any])
-    extends org.apache.spark.sql.execution.datasources.v2.FileTable(
-      sparkSession2.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      options2, Seq.empty,
-      Some(org.apache.spark.sql.types.StructType(
-        payloadSchema.fields ++ partSchema.fields))) {
-
-  override lazy val fileIndex
-      : org.apache.spark.sql.execution.datasources
-        .PartitioningAwareFileIndex =
-    new GraftLogFileIndex(sparkSession2, files, partSchema, valuesOf)
-
-  override def name(): String = tableName
-
-  override def formatName: String = "parquet"
-
-  override def inferSchema(
-      files: Seq[org.apache.hadoop.fs.FileStatus])
-      : Option[org.apache.spark.sql.types.StructType] =
-    Some(payloadSchema) // schema always comes from the log
-
-  override def newScanBuilder(
-      opts: org.apache.spark.sql.util.CaseInsensitiveStringMap)
-      : org.apache.spark.sql.connector.read.ScanBuilder =
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
-      sparkSession2.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      fileIndex, schema, dataSchema, opts)
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    throw new UnsupportedOperationException(
-      "graft partitioned snapshots are read-only at the file level — " +
-        "write through the commit-log verbs")
-
-  override def fallbackFileFormat
-      : Class[_ <: org.apache.spark.sql.execution.datasources.FileFormat] =
-    classOf[org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat]
 }

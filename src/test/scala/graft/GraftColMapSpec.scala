@@ -489,4 +489,60 @@ class GraftColMapSpec extends SparkSpec {
       want.groupBy(identity).view.mapValues(_.size).toMap)
     assert(got.count(_(2) == "delete") == 1 && got.size == 21)
   }
+
+  // ---- an additive addColumn is row-neutral for every feed ---------
+  //
+  // create (k, s) [v1], addColumn x [v2], append (k, s, x) [v3]:
+  // rows 0-3 read x = null, rows 4 and 5 read x = 10k.
+
+  private def addColFixture(): (String, GraftTable) = {
+    import spark.implicits._
+    val root = fresh("cmaddcol")
+    val t = GraftTable.create(spark, root,
+      (0L until 4L).map(k => (k, s"v$k")).toDF("k", "s"))     // v1
+    t.addColumn("x", org.apache.spark.sql.types.LongType)     // v2
+    t.append((4L until 6L).map(k => (k, s"v$k", k * 10)).toDF("k", "s", "x")) // v3
+    (root, t)
+  }
+
+  private val addColRows: Map[Seq[Any], Int] =
+    (0L until 6L).map(k => Seq[Any](k, s"v$k", if (k >= 4) k * 10 else null))
+      .groupBy(identity).view.mapValues(_.length).toMap
+
+  test("changeFeed serves a range that crosses an addColumn") {
+    val (_, t) = addColFixture()
+    val f = t.changeFeed(0).get
+    assert(multiset(f.select("k", "s", "x", "_change_type", "_commit_version")) ==
+      addColRows.map { case (r, n) =>
+        (r ++ Seq("insert", if (r.head.asInstanceOf[Long] >= 4) 3L else 1L), n) })
+  }
+
+  test("changesSince serves a range that crosses an addColumn") {
+    val (_, t) = addColFixture()
+    assert(multiset(t.changesSince(0).get.select("k", "s", "x")) == addColRows)
+  }
+
+  test("the table stream serves a range that crosses an addColumn") {
+    val (root, _) = addColFixture()
+    val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+    val q = spark.readStream.format("graft").load(root)
+      .writeStream.option("checkpointLocation", fresh("cmaddcol_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        got ++= b.select("k", "s", "x").collect().map(_.toSeq)
+        ()
+      }.start()
+    try q.awaitTermination() finally q.stop()
+    assert(got.groupBy(identity).view.mapValues(_.size).toMap == addColRows)
+  }
+
+  test("a rename still refuses both feeds, and changesSince no longer points to changeFeed") {
+    val (_, t) = addColFixture()
+    t.renameColumn("s", "label")                              // v4
+    val cf = intercept[IllegalStateException](t.changeFeed(0))
+    assert(cf.getMessage.contains("colmap:rename:s>label"), cf.getMessage)
+    val cs = intercept[IllegalStateException](t.changesSince(0))
+    assert(cs.getMessage.contains("colmap:rename:s>label") &&
+      !cs.getMessage.contains("use changeFeed()"), cs.getMessage)
+  }
 }

@@ -19,6 +19,28 @@ object LogCountingFileSystem {
   val listings = new java.util.concurrent.atomic.AtomicLong
 }
 
+/** The `file` scheme's LocalFileSystem, recording every listing and
+  * status lookup of a GraftTable data path (`…/data/…`) JVM-wide.
+  */
+class DataTrafficFileSystem extends LocalFileSystem {
+  override def listStatus(f: Path): Array[FileStatus] = {
+    DataTrafficFileSystem.note("listStatus", f)
+    super.listStatus(f)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    DataTrafficFileSystem.note("getFileStatus", f)
+    super.getFileStatus(f)
+  }
+}
+
+object DataTrafficFileSystem {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  def note(op: String, f: Path): Unit =
+    if (f.toString.contains("/data/") || f.getName == "data") {
+      calls.add(s"$op $f"); ()
+    }
+}
+
 class GraftLogTrafficSpec extends SparkSpec {
 
   /** Log-directory listings `f` makes. */
@@ -100,6 +122,82 @@ class GraftLogTrafficSpec extends SparkSpec {
     } finally saved.foreach {
       case (k, Some(v)) => hc.set(k, v)
       case (k, None) => hc.unset(k)
+    }
+  }
+
+  test("planning a read lists and stats no data file and runs no Spark job") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.connector.catalog.SupportsRead
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    val base = Files.createTempDirectory("graft_plan_traffic").toString
+    val root = base + "/flat"
+    val proot = base + "/part"
+    // 40 files each: above Spark's 32-path parallel-listing threshold
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select(col("id").as("k"), (col("id") % 7).as("v"))
+    val t0 = GraftTable.create(spark, root, rows(0, 4000).repartition(40))
+    t0.append(rows(4000, 4010).coalesce(1))
+    GraftTable.forPath(spark, proot).appendPartitioned(
+      rows(0, 4000).withColumn("g", col("k") % 4).repartition(10), "g")
+    assert(t0.readVersion(1).inputFiles.length == 40 &&
+      GraftTable.forPath(spark, proot).liveFiles().size == 40)
+    hc.set("fs.file.impl", classOf[DataTrafficFileSystem].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    try {
+      // planning only: the physical plan's file index size
+      def plan(df: DataFrame): Int =
+        "InMemoryFileIndex\\((\\d+) paths".r
+          .findAllMatchIn(df.queryExecution.executedPlan.toString)
+          .map(_.group(1).toInt).sum
+      def streamBatch(): Int = {
+        val opts = new CaseInsensitiveStringMap(java.util.Map.of("path", root))
+        val stream = new graft.sources.GraftDataSource()
+          .getTable(null, Array.empty, opts)
+          .asInstanceOf[SupportsRead].newScanBuilder(opts).build()
+          .toMicroBatchStream(base + "/ck")
+        stream.planInputPartitions(stream.initialOffset(),
+          stream.latestOffset()).length
+      }
+      def fresh(r: String) = GraftTable.forPath(spark, r)
+      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      DataTrafficFileSystem.calls.clear()
+      val planned = Seq(
+        "read" -> plan(fresh(root).read()),
+        "readWhere" -> plan(fresh(root).readWhere(col("k") < 10)),
+        "readVersion" -> plan(fresh(root).readVersion(1)),
+        "readPartitionedColumn" -> plan(
+          fresh(proot).readPartitionedColumn("g", Seq(0L, 1L)).get),
+        "load" -> plan(spark.read.format("graft").load(root)),
+        "stream batch" -> streamBatch())
+      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+      println("planned files per read: " +
+        planned.map { case (n, c) => s"$n=$c" }.mkString(" "))
+      val want = Map("read" -> 41, "readVersion" -> 40,
+        "readPartitionedColumn" -> 20, "load" -> 41)
+      planned.foreach { case (n, c) =>
+        assert(want.get(n).forall(_ == c) && c > 0, s"$n planned $c")
+      }
+      val calls = DataTrafficFileSystem.calls.toArray.toSeq
+      assert(calls.size == 0, s"${calls.size} data-path calls while planning, " +
+        s"e.g. ${calls.take(3).mkString("; ")}")
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs while planning")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => hc.set(k, v)
+        case (k, None) => hc.unset(k)
+      }
     }
   }
 }

@@ -460,14 +460,14 @@ class GraftMergeIntoSpec extends SparkSpec {
     assert(ta.commitInfo(va).exists(_.contains(
       "mergeSourceStrategy=broadcast")),
       s"endpoint-sized batch should broadcast: ${ta.commitInfo(va)}")
-    // force the over-ceiling regime: 1-byte threshold → shuffle joins
-    spark.conf.set("spark.graft.merge.broadcastThreshold", "1")
+    // force the over-ceiling regime: the at-scale gate side → shuffle joins
+    spark.conf.set(Gate.AtScaleKey, "true")
     try {
       val vb = tb.mergeInto(batch, Seq("id"), matched = m, notMatched = nm)
       assert(tb.commitInfo(vb).exists(_.contains(
         "mergeSourceStrategy=shuffle")),
         s"over-ceiling source should shuffle: ${tb.commitInfo(vb)}")
-    } finally spark.conf.unset("spark.graft.merge.broadcastThreshold")
+    } finally spark.conf.unset(Gate.AtScaleKey)
     assert(multiset(ta.read()) == multiset(tb.read()),
       "the two regimes must commit identical tables")
     ()
@@ -607,7 +607,7 @@ class GraftMergeIntoSpec extends SparkSpec {
     ()
   }
 
-  test("a session that disabled broadcast joins gets no forced merge broadcast; the graft conf re-enables it (ADVICE r17)") {
+  test("a session that disabled broadcast joins gets no forced merge broadcast (ADVICE r17)") {
     val root = fresh("graft_mi_nobc")
     val t = GraftTable.forPath(spark, root)
     t.append(registry)
@@ -621,18 +621,7 @@ class GraftMergeIntoSpec extends SparkSpec {
         s"disabled session threshold must mean no forced broadcast: " +
           s"${t.commitInfo(v)}")
       assert(t.read().filter(col("id") === 1L).head.getString(1) == "APPROVED")
-      spark.conf.set("spark.graft.merge.broadcastThreshold",
-        (64L << 20).toString)
-      val v2 = t.mergeInto(Seq((2L, "SHIPPED")).toDF("id", "status"),
-        Seq("id"), matched =
-          Seq(MatchedUpdate(None, Map("status" -> expr("s.status")))))
-      assert(t.commitInfo(v2).exists(_.contains(
-        "mergeSourceStrategy=broadcast")),
-        "the explicit graft conf overrides the disabled session threshold")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("spark.graft.merge.broadcastThreshold")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     ()
   }
 
