@@ -209,7 +209,7 @@ object GraftDataSource {
       */
     private def over(files: Seq[(String, Long)], name: String) =
       LogFileIndex.table(name, spark, options, files, payload, keys)
-    private val underlying = over(fileMeta.map(m => (m._1, m._2)), label)
+    private lazy val underlying = over(fileMeta.map(m => (m._1, m._2)), label)
     override def tablePath: String = path
     override def name(): String = label
     override def schema(): StructType = underlying.schema

@@ -41,9 +41,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the reader FACTORY comes from the same ParquetScan the batch path
   * builds (pushed filters and pruned columns intact), and each
   * micro-batch plans its partitions from a slice-scoped table over
-  * just that batch's files (the log-seeded [[LogFileIndex]]) — so a 1000-executor stream reads a
-  * commit's files with the identical split/locality logic a batch
-  * read would use.
+  * just that batch's files (the log-seeded [[LogFileIndex]]) — so a
+  * 1000-executor stream reads a commit's files with the identical
+  * split/locality logic a batch read would use.
   *
   * Non-append commits in a streamed range (compact/overwrite/replace)
   * REFUSE rather than re-serving rewritten rows as new — the same
